@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Path}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -215,7 +217,6 @@ object Bench {
         else if (sf != expectSf)
           dark(s"BENCH_r$round.json is sf '$sf', this run is '$expectSf'")
         else {
-          import scala.jdk.CollectionConverters._
           val calibNode = parsed.path("calib")
           ((q.fieldNames().asScala.map(n => n -> q.get(n).asDouble()).toMap): Map[String, Double],
             if (calibNode.isNumber && calibNode.asDouble() > 0)
@@ -281,7 +282,6 @@ object Bench {
     * genuinely computed longer.
     */
   private def gcMillis(): Long = {
-    import scala.jdk.CollectionConverters._
     java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
       .asScala.map(b => math.max(b.getCollectionTime, 0L)).sum
   }
@@ -561,6 +561,10 @@ object Bench {
     // "<origin>:<table>" per leaked catalog table; origin is "preexisting"
     // (pre-loop sweep) or the query whose run left it behind
     val leaks = scala.collection.mutable.LinkedHashSet.empty[String]
+    // name -> "<class>: <message>" of an errors/flaky entry's first failure (detail line only)
+    val causes = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def failed(name: String, e: Throwable): Unit =
+      causes.getOrElseUpdate(name, s"${e.getClass.getName}: ${e.getMessage}")
     var storagePeak = 0L
 
     /** Drop every non-temporary catalog table, charging each to `origin` in
@@ -613,7 +617,7 @@ object Bench {
             val t = (System.nanoTime() - t0) / 1e9
             storagePeak = math.max(storagePeak, storageBytes(spark))
             Some(t)
-          } catch { case _: Throwable => None }
+          } catch { case e: Throwable => failed(name, e); None }
         // leak check per RUN (one cheap metastore listing), not per query:
         // a table leaked by run 1 must not tax runs 2-3 of the same query
         sweepLeaks(name)
@@ -692,7 +696,7 @@ object Bench {
           stage -> (System.nanoTime() - t0) / 1e9
         }
         (built +: timed) :+ ("run_total" -> (System.nanoTime() - tBlock) / 1e9)
-      } catch { case _: Throwable => errors += "x18_stages"; Seq.empty }
+      } catch { case e: Throwable => errors += "x18_stages"; failed("x18_stages", e); Seq.empty }
       finally {
         // unconditionally: a failed stage must not leave its persisted
         // outputs polluting the streaming section's storage pool
@@ -743,14 +747,15 @@ object Bench {
           spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
           state.dropTables(spark)
         }
-      } catch { case _: Throwable => errors += "x33_batches"; Seq.empty }
+      } catch { case e: Throwable => errors += "x33_batches"; failed("x33_batches", e); Seq.empty }
       finally {
         Caching.release(spark)
         spark.catalog.clearCache()
       }
     val streaming =
       try streamingBench(spark)
-      catch { case _: Throwable => errors += "streaming_bench"; Map.empty[String, Double] }
+      catch { case e: Throwable =>
+        errors += "streaming_bench"; failed("streaming_bench", e); Map.empty[String, Double] }
 
     // fixed-point seconds, locale-independent (a comma decimal separator
     // would corrupt the JSON)
@@ -793,6 +798,7 @@ object Bench {
     println(s"""{"detail":true,"runs":$runsJ,"sys":$sysJ,"max_heap_mb":$heapMb,""" +
       s""""x18_stages":$stJ,"x33_batches":$x33J,"streaming":$st,""" +
       s""""errors":${fullArr(errors)},"flaky":${fullArr(flaky)},"leaks":${fullArr(leaks)},""" +
+      s""""causes":${new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(causes.asJava)},""" +
       s""""storage_peak_bytes":$storagePeak,"runs_per_query":$RunsPerQuery,""" +
       s""""stat":"median|floor_cluster","floor_cluster":${fullArr(convergedFloor)},""" +
       s""""calib_s":${fp(preflight.calibS, 3)},""" +

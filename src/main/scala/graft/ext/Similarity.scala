@@ -105,19 +105,25 @@ object Similarity {
     * `nProbe / nClusters`, not with corpus size. Exact cosine re-ranks the
     * candidates, so precision is 1; recall depends on nProbe.
     */
-  /** Squared-distance argmin over the (broadcast) codebook — the one
-    * kernel every IVF stage shares.
+  /** Squared-distance argmin over the (broadcast) codebook on the
+    * `off ..< off + c(0).length` slice of `v` (no sub-vector is
+    * materialized) — the one kernel every IVF and PQ stage shares.
     */
-  private[graft] def nearest(c: Array[Array[Double]], v: Array[Float]): Int = {
+  private[graft] def nearest(c: Array[Array[Double]], v: Array[Float], off: Int = 0): Int = {
     var best = 0; var bestD = Double.MaxValue
     var ci = 0
     while (ci < c.length) {
-      var d = 0.0; var j = 0
-      while (j < v.length) { val t = c(ci)(j) - v(j); d += t * t; j += 1 }
+      val d = sqDist(c(ci), v, off)
       if (d < bestD) { bestD = d; best = ci }
       ci += 1
     }
     best
+  }
+
+  private def sqDist(cc: Array[Double], v: Array[Float], off: Int): Double = {
+    var d = 0.0; var j = 0
+    while (j < cc.length) { val t = cc(j) - v(off + j); d += t * t; j += 1 }
+    d
   }
 
   /** Deterministic k-means codebook (init: the `nClusters` lowest-id
@@ -218,10 +224,13 @@ object Similarity {
     */
   private def nearestChecked(c: Array[Array[Double]], id: Long, v: Array[Float],
                              context: String): Int = {
-    if (v.length != c(0).length) throw new IllegalArgumentException(
-      s"$context: vector id=$id has dimension ${v.length}, expected ${c(0).length}")
+    checkDim(c, id, v, context)
     nearest(c, v)
   }
+
+  private def checkDim(c: Array[Array[Double]], id: Long, v: Array[Float], context: String): Unit =
+    if (v.length != c(0).length) throw new IllegalArgumentException(
+      s"$context: vector id=$id has dimension ${v.length}, expected ${c(0).length}")
 
   /** The `nProbe` nearest centroids by squared distance — ONE definition of
     * the probe-selection rule (ties: (distance, cluster index), exactly the
@@ -230,14 +239,8 @@ object Similarity {
     */
   private def nearestProbes(c: Array[Array[Double]], id: Long, v: Array[Float],
                             nProbe: Int, context: String): Seq[Int] = {
-    if (v.length != c(0).length) throw new IllegalArgumentException(
-      s"$context: vector id=$id has dimension ${v.length}, expected ${c(0).length}")
-    val dists = c.indices.map { ci =>
-      var d = 0.0; var j = 0
-      while (j < v.length) { val t = c(ci)(j) - v(j); d += t * t; j += 1 }
-      (d, ci)
-    }
-    dists.sorted.take(nProbe).map(_._2)
+    checkDim(c, id, v, context)
+    c.indices.map(ci => (sqDist(c(ci), v, 0), ci)).sorted.take(nProbe).map(_._2)
   }
 
   /** Widen a narrow query side before the cluster fan-out flatMap (the
@@ -248,47 +251,38 @@ object Similarity {
     * single-threaded, 3.2 s where 32-wide reads sub-second). But an
     * ALREADY-WIDE query side — x38's declared shape probes with the
     * whole corpus — must not pay a gratuitous corpus-wide round-robin
-    * exchange it never needed. Partition count is read off the physical
-    * plan (no job runs); widen only when below the session parallelism.
+    * exchange it never needed. Widen only when below the session
+    * parallelism; the partition count is read off `ds`'s own planned
+    * [[org.apache.spark.sql.execution.QueryExecution]] and no job runs.
     */
   private[graft] def widenIfNarrow[T](ds: org.apache.spark.sql.Dataset[T])
       : org.apache.spark.sql.Dataset[T] = {
     val p = ds.sparkSession.sparkContext.defaultParallelism
-    // a STREAMING frame admits no partition probe before execution (.rdd
-    // throws on unresolved streaming sources); every current caller wraps
-    // streams in foreachBatch, but if one ever doesn't, keep the r16
+    // a STREAMING frame admits no partition probe before execution (its
+    // sources resolve per batch); every current caller wraps streams in
+    // foreachBatch, but if one ever doesn't, keep the r16
     // unconditional-widening behavior rather than crash the stream
     if (ds.isStreaming) ds.repartition(p)
-    // the .rdd probe is only free on a SHUFFLE-FREE, SUBQUERY-FREE plan
-    // (bare scan, cached frame, narrow projections): with AQE on, .rdd on
-    // a plan containing exchanges materializes every upstream query stage
-    // — and the result is then thrown away when the else branch returns
-    // the original ds (a silent double execution; r17 VERDICT item 3).
-    // A side with an upstream exchange is already session-wide (shuffle
-    // partitions), exactly what widening would have bought — return it
-    // untouched. sparkPlan inspection is pure planning: no job runs.
-    else if (ds.queryExecution.sparkPlan.exists(n =>
+    else {
+      val qe = ds.queryExecution
+      // AQE's initial plan carries the exchanges; nothing below executes it
+      val plan = qe.executedPlan match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+        case pl => pl
+      }
+      val shuffled = plan.exists(n =>
         n.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange] ||
         n.expressions.exists(_.exists(
-          _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.PlanExpression[_]]))))
-      ds
-    else if (ds.rdd.getNumPartitions < p) ds.repartition(p) else ds
-  }
-
-  /** [[nearest]] on the `off ..< off + c(0).length` slice of `v` without
-    * materializing the sub-vector — same arithmetic, same tie rule.
-    */
-  private def nearestOffset(c: Array[Array[Double]], v: Array[Float], off: Int): Int = {
-    var best = 0; var bestD = Double.MaxValue
-    var ci = 0
-    while (ci < c.length) {
-      val cc = c(ci)
-      var d = 0.0; var j = 0
-      while (j < cc.length) { val t = cc(j) - v(off + j); d += t * t; j += 1 }
-      if (d < bestD) { bestD = d; best = ci }
-      ci += 1
+          _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.PlanExpression[_]])))
+      // building the RDD of a plan with exchanges or subqueries runs them
+      // under AQE (r17 VERDICT item 3), so such a side reports its last
+      // exchange's partitioning instead (unknown = 0 counts as wide); a
+      // shuffle-free plan builds its RDD without a job
+      val narrow =
+        if (shuffled) (1 until p).contains(plan.outputPartitioning.numPartitions)
+        else qe.toRdd.getNumPartitions < p
+      if (narrow) ds.repartition(p) else ds
     }
-    best
   }
 
   def ivfTopK(df: DataFrame, idCol: String, vecCol: String, k: Int,
@@ -453,9 +447,10 @@ object Similarity {
   }
 
   /** The probe join against the persisted index: each query fans out to its
-    * `nProbe` nearest clusters (codebook = a bounded nClusters-row collect,
-    * broadcast), joins the cluster-bucketed assignments (no exchange on the
-    * corpus side), and scores candidates with exact cosine.
+    * `nProbe` nearest clusters (the codebook's frozen broadcast, loaded once
+    * per table version — [[FrozenModels]]), joins the cluster-bucketed
+    * assignments (no exchange on the corpus side), and scores candidates
+    * with exact cosine.
     */
   private[graft] def ivfProbeScores(queries: DataFrame, idCol: String, vecCol: String,
                                     index: IvfIndex, nProbe: Int): DataFrame = {
@@ -465,9 +460,7 @@ object Similarity {
     // corpus only under __compact — finish it rather than failing the read
     Dedup.finishCrashedSwap(spark, index.assignmentsTable)
     graft.functions.GraftFunctions.register(spark)
-    val cents: Array[Array[Double]] = spark.table(index.codebookTable)
-      .as[(Int, Array[Double])].collect().sortBy(_._1).map(_._2)
-    val bc = spark.sparkContext.broadcast(cents)
+    val bc = codebookModel(spark, index.codebookTable, ivfMissing("ivfQuery", index))
     requireIntegralId(queries, idCol, "ivfProbeScores")
     // WIDEN the query side before fan-out when it arrives narrow
     // ([[widenIfNarrow]] — conditional since r17: x38's declared shape
@@ -499,14 +492,69 @@ object Similarity {
                index: IvfIndex, k: Int, nProbe: Int = 6): DataFrame =
     topKRank(ivfProbeScores(queries, idCol, vecCol, index, nProbe), k)
 
+  /** The session-wide cache of every built index's FROZEN models (IVF
+    * centroids, PQ codebooks): one broadcast per table VERSION per
+    * SparkContext, shared by every append, query and stream micro-batch.
+    * Only a rebuild rewrites these tables, and its overwrite drops and
+    * recreates them, so the catalog `createTime` names the version; a
+    * newer version replaces the cached broadcast and destroys the old one.
+    */
+  private object FrozenModels {
+    private val byContext = new java.util.WeakHashMap[org.apache.spark.SparkContext,
+      java.util.HashMap[String, (Long, org.apache.spark.broadcast.Broadcast[_])]]()
+
+    /** `table`'s current version as a broadcast, `load`ed on a miss. */
+    def apply[T: scala.reflect.ClassTag](spark: org.apache.spark.sql.SparkSession, table: String,
+                                         missing: => String)(load: => T)
+        : org.apache.spark.broadcast.Broadcast[T] = {
+      val catalog = spark.sessionState.catalog
+      val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
+      require(catalog.tableExists(ident), missing)
+      // version before contents: a racing rebuild costs one extra reload
+      val meta = catalog.getTableMetadata(ident)
+      val key = meta.identifier.unquotedString
+      byContext.synchronized {
+        val tables = byContext.computeIfAbsent(spark.sparkContext, _ => new java.util.HashMap())
+        val cached = tables.get(key)
+        if (cached != null && cached._1 == meta.createTime)
+          cached._2.asInstanceOf[org.apache.spark.broadcast.Broadcast[T]]
+        else {
+          // this session may still hold an older version's file listing (a
+          // running stream's cloned session does after a rebuild elsewhere)
+          catalog.refreshTable(ident)
+          val bc = spark.sparkContext.broadcast(load)
+          if (cached != null) cached._2.destroy()
+          tables.put(key, (meta.createTime, bc))
+          bc
+        }
+      }
+    }
+  }
+
+  /** The IVF centroids of `codebookTable`, cluster-ordered ([[FrozenModels]]). */
+  private def codebookModel(spark: org.apache.spark.sql.SparkSession, codebookTable: String,
+                            missing: => String)
+      : org.apache.spark.broadcast.Broadcast[Array[Array[Double]]] =
+    FrozenModels(spark, codebookTable, missing) {
+      import spark.implicits._
+      spark.table(codebookTable).as[(Int, Array[Double])].collect().sortBy(_._1).map(_._2)
+    }
+
+  private def ivfMissing(context: String, index: IvfIndex): String =
+    s"$context: build the index first (ivfBuild) - missing " +
+      s"${index.codebookTable} and/or ${index.assignmentsTable}"
+
   /** Appends a batch of new vectors to a built [[IvfIndex]] — continuous
     * embedding ingest without retraining: each vector is assigned to its
-    * nearest centroid via the broadcast codebook and appended to the
-    * cluster-bucketed assignments table (the standard IVF append contract:
-    * recall degrades slowly as the vector distribution drifts from the
-    * codebook — rebuild cadence is an ops decision — while re-rank
-    * precision never does). Zero-norm/null vectors drop (the ivfBuild
-    * stance); appended ids must be new (the usual changelog contract).
+    * nearest centroid and appended to the cluster-bucketed assignments
+    * table (the standard IVF append contract: recall degrades slowly as
+    * the vector distribution drifts from the codebook — rebuild cadence is
+    * an ops decision — while re-rank precision never does). Zero-norm/null
+    * vectors drop (the ivfBuild stance); appended ids must be new (the
+    * usual changelog contract). The codebook loads once per table version
+    * per SparkContext ([[FrozenModels]]): after the first call against a
+    * build an append is one write job, and the next call after a rebuild
+    * routes by the new codebook.
     *
     * Replay safety: an at-least-once replay re-appends its assignment
     * rows; the probe join then scores the same (query, neighbor) twice
@@ -514,27 +562,8 @@ object Similarity {
     * (score, id) duplicates, so query results are unaffected until
     * [[ivfCompact]] sheds the duplicated rows durably.
     */
-  /** Per-stream cache of a built index's FROZEN routing model (the
-    * centroid/PQ broadcasts) plus the maintenance-check memo: appends
-    * never modify the codebook/PQ tables (the documented frozen-codebook
-    * contract — a rebuild is a new stream), so re-collecting and
-    * re-broadcasting them per micro-batch only re-answers what the first
-    * batch already knew. One instance per STREAM ([[ivfStream]]/
-    * [[ivfPqStream]]); standalone append calls keep per-call loading via
-    * the default.
-    */
-  private final class IvfRouteCache {
-    @volatile var cents: org.apache.spark.broadcast.Broadcast[Array[Array[Double]]] = null
-    @volatile var pq: org.apache.spark.broadcast.Broadcast[PqModel] = null
-  }
-
   def ivfAppend(batch: DataFrame, idCol: String, vecCol: String, index: IvfIndex,
-                checks: TableChecks = new TableChecks): Unit =
-    ivfAppendWith(batch, idCol, vecCol, index, checks, cache = null)
-
-  private def ivfAppendWith(batch: DataFrame, idCol: String, vecCol: String,
-                            index: IvfIndex, checks: TableChecks,
-                            cache: IvfRouteCache): Unit = {
+                checks: TableChecks = new TableChecks): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
     graft.functions.GraftFunctions.register(spark)
@@ -543,21 +572,10 @@ object Similarity {
     // assignments ([[StateLease]]; memoized per stream via [[TableChecks]],
     // which also finishes a swap that crashed before this stream started)
     checks.ensureWritable(spark, index.assignmentsTable)
+    val missing = ivfMissing("ivfAppend", index)
     require(checks.exists(spark, index.codebookTable) &&
-      checks.exists(spark, index.assignmentsTable),
-      s"ivfAppend: build the index first (ivfBuild) - missing " +
-        s"${index.codebookTable} and/or ${index.assignmentsTable}")
-    val bc = {
-      val cached = if (cache != null) cache.cents else null
-      if (cached != null) cached
-      else {
-        val cents: Array[Array[Double]] = spark.table(index.codebookTable)
-          .as[(Int, Array[Double])].collect().sortBy(_._1).map(_._2)
-        val b = spark.sparkContext.broadcast(cents)
-        if (cache != null) cache.cents = b
-        b
-      }
-    }
+      checks.exists(spark, index.assignmentsTable), missing)
+    val bc = codebookModel(spark, index.codebookTable, missing)
     batch.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
       .filter(definedCosine(norm(col("v"))))
       .as[(Long, Array[Float])]
@@ -580,23 +598,21 @@ object Similarity {
   /** Streaming embedding ingest into a built index: [[ivfAppend]] wired
     * into `foreachBatch`; `compactEvery = N` runs [[ivfCompact]] after
     * every Nth batch (0 = caller manages compaction). Caller sets
-    * trigger/checkpoint and starts.
+    * trigger/checkpoint and starts. The codebook loads once per table
+    * version ([[ivfAppend]]), so later batches run only their write job;
+    * a rebuild is picked up by the NEXT batch of a running stream (it used
+    * to reach only a newly started stream).
     */
   def ivfStream(vecs: DataFrame, idCol: String, vecCol: String, index: IvfIndex,
                 compactEvery: Int = 0): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    // one maintenance-check memo + one frozen-codebook broadcast per
-    // stream: the per-batch collect/broadcast/lease/exists round-trips
-    // re-answer what batch 0 already knew (the TableChecks rationale);
-    // compaction only rewrites the assignments table, never the codebook,
-    // so the cached broadcast stays valid across compactEvery folds.
+    // one maintenance-check memo per stream (the TableChecks rationale).
     // revalidateEvery = 1: these appends ARE the data (not derivable from
     // any upstream table), so the single-writer lease is asserted every
     // batch — an out-of-process compaction grabbing the lease mid-stream
     // must never find even one unleased append to drop in its swap
     val checks = new TableChecks(revalidateEvery = 1)
-    val cache = new IvfRouteCache
     vecs.writeStream.foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-      ivfAppendWith(batch.toDF(), idCol, vecCol, index, checks, cache)
+      ivfAppend(batch.toDF(), idCol, vecCol, index, checks)
       if (compactEvery > 0 && id > 0 && id % compactEvery == 0)
         ivfCompact(batch.sparkSession, index)
     }
@@ -680,13 +696,13 @@ object Similarity {
         var acc: Array[Double] = null
         it.foreach { case (id, v) =>
           // loud on mixed dims: a LONGER vector would silently train on
-          // its prefix (a shorter one crashes opaquely in nearestOffset)
+          // its prefix (a shorter one crashes opaquely in nearest)
           if (v.length != dim) throw new IllegalArgumentException(
             s"pqTrain: vector id=$id has dimension ${v.length}, expected $dim")
           if (acc == null) acc = new Array[Double](m * kEff * w)
           var sub = 0
           while (sub < m) {
-            val ci = nearestOffset(b(sub), v, sub * dsub)
+            val ci = nearest(b(sub), v, sub * dsub)
             val base = (sub * kEff + ci) * w
             var j = 0
             while (j < dsub) { acc(base + j) += v(sub * dsub + j); j += 1 }
@@ -716,8 +732,8 @@ object Similarity {
 
   /** One vector's m nearest-subspace-centroid codes. Loud per-row
     * dimension gate (the pqLuts query-side rule, applied to the CORPUS
-    * side): `copyOfRange` would silently zero-pad a shorter vector and
-    * truncate a longer one into well-formed WRONG codes — and pqTrain's
+    * side): the subspace slices would crash bare-named on a shorter vector
+    * and encode a longer one's prefix into well-formed WRONG codes — and pqTrain's
     * raise only scans the training SAMPLE, so out-of-sample rows need
     * their own check.
     */
@@ -727,8 +743,7 @@ object Similarity {
     val codes = new Array[Byte](model.m)
     var sub = 0
     while (sub < model.m) {
-      val s = java.util.Arrays.copyOfRange(v, sub * model.dsub, (sub + 1) * model.dsub)
-      codes(sub) = nearest(model.codebooks(sub), s).toByte
+      codes(sub) = nearest(model.codebooks(sub), v, sub * model.dsub).toByte
       sub += 1
     }
     codes
@@ -921,21 +936,24 @@ object Similarity {
         .saveAsTable(index.assignmentsTable)))
   }
 
-  /** Rehydrate the PQ model from its table — bounded (m×ksub rows), the
-    * codebook-collect precedent.
-    */
-  private def loadPqModel(spark: org.apache.spark.sql.SparkSession,
-                          pqTable: String): PqModel = {
-    import spark.implicits._
-    val rows = spark.table(pqTable).as[(Int, Int, Array[Double])].collect()
-    require(rows.nonEmpty, s"ivfPq: PQ codebook table $pqTable is empty")
-    val m = rows.map(_._1).max + 1
-    val books = Array.tabulate(m) { sub =>
-      rows.filter(_._1 == sub).sortBy(_._2).map(_._3)
+  /** The PQ model of `pqTable` (m×ksub rows) ([[FrozenModels]]). */
+  private def pqModel(spark: org.apache.spark.sql.SparkSession, pqTable: String,
+                      missing: => String): org.apache.spark.broadcast.Broadcast[PqModel] =
+    FrozenModels(spark, pqTable, missing) {
+      import spark.implicits._
+      val rows = spark.table(pqTable).as[(Int, Int, Array[Double])].collect()
+      require(rows.nonEmpty, s"ivfPq: PQ codebook table $pqTable is empty")
+      val m = rows.map(_._1).max + 1
+      val books = Array.tabulate(m) { sub =>
+        rows.filter(_._1 == sub).sortBy(_._2).map(_._3)
+      }
+      val dsub = books(0)(0).length
+      PqModel(m * dsub, m, books.map(_.length).max, books)
     }
-    val dsub = books(0)(0).length
-    PqModel(m * dsub, m, books.map(_.length).max, books)
-  }
+
+  private def ivfPqMissing(context: String, index: IvfPqIndex): String =
+    s"$context: build the index first (ivfPqBuild) - missing one of " +
+      s"${index.codebookTable}/${index.pqTable}/${index.assignmentsTable}"
 
   /** Top-k against a built [[IvfPqIndex]]: queries route to their `nProbe`
     * nearest clusters via the broadcast IVF codebook, candidates inside
@@ -957,11 +975,9 @@ object Similarity {
     import spark.implicits._
     graft.functions.GraftFunctions.register(spark)
     Dedup.finishCrashedSwap(spark, index.assignmentsTable)
-    val cents: Array[Array[Double]] = spark.table(index.codebookTable)
-      .as[(Int, Array[Double])].collect().sortBy(_._1).map(_._2)
-    val pq = loadPqModel(spark, index.pqTable)
-    val bcC = spark.sparkContext.broadcast(cents)
-    val bcP = spark.sparkContext.broadcast(pq)
+    val missing = ivfPqMissing("ivfPqQuery", index)
+    val bcC = codebookModel(spark, index.codebookTable, missing)
+    val bcP = pqModel(spark, index.pqTable, missing)
     // one pass per query: nProbe (query, cluster) rows each carrying the
     // query's ADC lookup table and norm
     requireIntegralId(queries, idCol, "ivfPqQuery")
@@ -1008,53 +1024,28 @@ object Similarity {
   }
 
   /** Continuous embedding ingest into a built [[IvfPqIndex]] — the
-    * [[ivfAppend]] contract (broadcast-codebook routing, no retraining,
-    * recall drifts slowly / re-rank precision never, replayed rows
-    * absorbed by `graft_topk`'s equal-(score,id) collapse until
-    * [[ivfPqCompact]] sheds them) plus the PQ encode: new vectors pick up
-    * their m codes from the FROZEN subspace codebooks, so ADC scores stay
-    * comparable across the whole table.
+    * [[ivfAppend]] contract (codebook routing, no retraining, recall
+    * drifts slowly / re-rank precision never, replayed rows absorbed by
+    * `graft_topk`'s equal-(score,id) collapse until [[ivfPqCompact]] sheds
+    * them) plus the PQ encode: new vectors pick up their m codes from the
+    * FROZEN subspace codebooks, so ADC scores stay comparable across the
+    * whole table. Both models load once per table version, as in
+    * [[ivfAppend]]: a later append is one write job.
     */
   def ivfPqAppend(batch: DataFrame, idCol: String, vecCol: String,
-                  index: IvfPqIndex, checks: TableChecks = new TableChecks): Unit =
-    ivfPqAppendWith(batch, idCol, vecCol, index, checks, cache = null)
-
-  private def ivfPqAppendWith(batch: DataFrame, idCol: String, vecCol: String,
-                              index: IvfPqIndex, checks: TableChecks,
-                              cache: IvfRouteCache): Unit = {
+                  index: IvfPqIndex, checks: TableChecks = new TableChecks): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
     graft.functions.GraftFunctions.register(spark)
     requireIntegralId(batch, idCol, "ivfPqAppend")
-    // memoized per stream ([[TableChecks]] + [[IvfRouteCache]] — the
-    // ivfAppend rationale; the PQ subspace codebooks are as frozen as the
-    // coarse centroids)
+    // memoized per stream ([[TableChecks]] — the ivfAppend rationale)
     checks.ensureWritable(spark, index.assignmentsTable)
+    val missing = ivfPqMissing("ivfPqAppend", index)
     require(checks.exists(spark, index.codebookTable) &&
       checks.exists(spark, index.pqTable) &&
-      checks.exists(spark, index.assignmentsTable),
-      s"ivfPqAppend: build the index first (ivfPqBuild) - missing one of " +
-        s"${index.codebookTable}/${index.pqTable}/${index.assignmentsTable}")
-    val bcC = {
-      val cached = if (cache != null) cache.cents else null
-      if (cached != null) cached
-      else {
-        val cents: Array[Array[Double]] = spark.table(index.codebookTable)
-          .as[(Int, Array[Double])].collect().sortBy(_._1).map(_._2)
-        val b = spark.sparkContext.broadcast(cents)
-        if (cache != null) cache.cents = b
-        b
-      }
-    }
-    val bcP = {
-      val cached = if (cache != null) cache.pq else null
-      if (cached != null) cached
-      else {
-        val b = spark.sparkContext.broadcast(loadPqModel(spark, index.pqTable))
-        if (cache != null) cache.pq = b
-        b
-      }
-    }
+      checks.exists(spark, index.assignmentsTable), missing)
+    val bcC = codebookModel(spark, index.codebookTable, missing)
+    val bcP = pqModel(spark, index.pqTable, missing)
     batch.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
       .filter(definedCosine(norm(col("v"))))
       .as[(Long, Array[Float])]
@@ -1076,17 +1067,16 @@ object Similarity {
 
   /** [[ivfStream]] for the composed index: per-micro-batch [[ivfPqAppend]]
     * with an optional compaction cadence. Caller sets trigger/checkpoint
-    * and starts.
+    * and starts. Both models load once per table version, as in
+    * [[ivfStream]]: a rebuild is picked up by the NEXT batch of a running
+    * stream (it used to reach only a newly started stream).
     */
   def ivfPqStream(vecs: DataFrame, idCol: String, vecCol: String, index: IvfPqIndex,
                   compactEvery: Int = 0): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    // one check memo + one frozen-model broadcast pair per stream (the
-    // ivfStream rationale, incl. its per-batch lease revalidation — the
-    // appends are the data)
+    // per-batch lease revalidation: the ivfStream rationale
     val checks = new TableChecks(revalidateEvery = 1)
-    val cache = new IvfRouteCache
     vecs.writeStream.foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-      ivfPqAppendWith(batch.toDF(), idCol, vecCol, index, checks, cache)
+      ivfPqAppend(batch.toDF(), idCol, vecCol, index, checks)
       if (compactEvery > 0 && id > 0 && id % compactEvery == 0)
         ivfPqCompact(batch.sparkSession, index)
     }

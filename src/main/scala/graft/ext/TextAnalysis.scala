@@ -626,9 +626,12 @@ object TextAnalysis {
     // Σ tf over postings (zero-token docs contribute 0 to both); maxDl =
     // max posting dl (a zero-token doc's dl = 0 can only be the max when
     // ALL docs are token-less, which the l > 0 gate below rejects anyway).
-    // Values are identical to the former tokenize-and-aggregate pass;
-    // materializing the aggregate here also populates the postings cache
-    // for the df/probe reads below.
+    // NULL text tokenizes as empty (the tokens() rule): such a row counts in
+    // n with dl 0, as in the former tokenize-and-aggregate pass. The count
+    // reads `corpus` apart from the postings, so a NONDETERMINISTIC corpus
+    // (sample(), rand filters) must arrive cached, or n and the postings see
+    // different rows. Materializing the aggregate here also populates the
+    // postings cache for the df/probe reads below.
     val n = corpus.count()
     val stats = postings.agg(
       coalesce(sum(col("__tf")), lit(0L)).as("l"),

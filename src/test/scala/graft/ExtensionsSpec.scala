@@ -1234,6 +1234,160 @@ class ExtensionsSpec extends SparkSpec {
     }
   }
 
+  /** `ids` seeded Gaussian vectors of dimension `dim` as (vec_id, embedding). */
+  private def gaussianVecs(seed: Long, dim: Int, ids: Range): Seq[(Long, Array[Float])] = {
+    val r = new java.util.Random(seed)
+    ids.map(i => (i.toLong, Array.fill(dim)(r.nextGaussian().toFloat)))
+  }
+
+  test("nearest on an offset slice and pqEncode's codes match the explicit first-minimum argmin") {
+    import spark.implicits._
+    val r = new java.util.Random(11)
+    // left-to-right squared distance, ties to the lowest centroid index
+    def ref(c: Array[Array[Double]], s: Array[Float]): Int = c.indices.minBy { ci =>
+      c(ci).indices.foldLeft(0.0) { (d, j) => val t = c(ci)(j) - s(j); d + t * t }
+    }
+    (0 until 200).foreach { _ =>
+      val dsub = 1 + r.nextInt(6)
+      val m = 1 + r.nextInt(4)
+      val c = Array.fill(1 + r.nextInt(9), dsub)(r.nextGaussian())
+      val v = Array.fill(dsub * m)(r.nextGaussian().toFloat)
+      (0 until m).foreach { sub =>
+        assert(Similarity.nearest(c, v, sub * dsub) === ref(c, v.slice(sub * dsub, (sub + 1) * dsub)))
+      }
+    }
+    val (m, dsub) = (4, 3)
+    val books = Array.fill(m, 5, dsub)(r.nextGaussian())
+    val vecs = gaussianVecs(12, m * dsub, 0 until 50)
+    val codes = Similarity.pqEncode(vecs.toDF("vec_id", "embedding"), "vec_id", "embedding",
+        Similarity.PqModel(m * dsub, m, 5, books))
+      .select("id", "codes").as[(Long, Array[Byte])].collect().toMap
+    vecs.foreach { case (id, v) =>
+      assert(codes(id).toSeq === (0 until m).map(sub =>
+        ref(books(sub), v.slice(sub * dsub, (sub + 1) * dsub)).toByte), s"id=$id")
+    }
+  }
+
+  test("frozen IVF-PQ models load once per build: a later append is 1 job, a later query plans with none") {
+    val idx = Similarity.IvfPqIndex("tfrozen_assign", "tfrozen_cb", "tfrozen_pq", numBuckets = 4)
+    val all = Seq(idx.assignmentsTable, idx.codebookTable, idx.pqTable,
+      idx.assignmentsTable + "__compact")
+    all.foreach(dropTableHard)
+    try {
+      val mx = emb.agg(max("vec_id")).head().getLong(0)
+      Similarity.ivfPqBuild(emb.filter(col("vec_id") <= mx * 3 / 5), "vec_id", "embedding",
+        idx, nClusters = 8, m = 8, ksub = 16, iters = 2)
+      val b1 = emb.filter(col("vec_id") > mx * 3 / 5 && col("vec_id") <= mx * 4 / 5)
+      val b2 = emb.filter(col("vec_id") > mx * 4 / 5)
+      val qs = emb.filter(col("vec_id") < 20)
+      val checks = new graft.ext.TableChecks
+      // the first call after a build loads both codebook tables (one
+      // collect each); every later one finds them cached
+      val (_, first) = jobsRunBy(Similarity.ivfPqAppend(b1, "vec_id", "embedding", idx, checks))
+      val (_, later) = jobsRunBy(Similarity.ivfPqAppend(b2, "vec_id", "embedding", idx, checks))
+      assert(later === 1, s"a later append must be its write job alone, ran $later")
+      assert(first - later === 2, s"the first append loads the two models, ran $first")
+      val (q, planJobs) = jobsRunBy(Similarity.ivfPqQuery(qs, "vec_id", "embedding", idx,
+        k = 10, nProbe = 8, overfetch = 4096))
+      assert(planJobs === 0, "building a query against a cached model must run no job")
+      val got = q.select("query_id", "rank", "nbr_id")
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
+      val brute = Similarity.bruteForceTopK(emb, qs, "vec_id", "embedding", 10)
+        .select("query_id", "rank", "nbr_id")
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
+      assert(got === brute, "full probe over the cached model must equal brute force")
+      graft.Caching.release(spark)
+    } finally all.foreach(dropTableHard)
+  }
+
+  test("a rebuild under the same table names reaches the next query, append and running stream") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val idx = Similarity.IvfPqIndex("trebuild_assign", "trebuild_cb", "trebuild_pq",
+      numBuckets = 4)
+    val all = Seq(idx.assignmentsTable, idx.codebookTable, idx.pqTable,
+      idx.assignmentsTable + "__compact")
+    all.foreach(dropTableHard)
+    // the second build differs in dimension AND cluster count, so a stale
+    // model cannot pass silently: it would raise the per-row dimension
+    // gate, or route into clusters the new codebook does not have
+    val first = gaussianVecs(1, 8, 0 until 200)
+    val rebuilt = gaussianVecs(2, 16, 0 until 200)
+    val streamed = gaussianVecs(3, 16, 200 until 260)
+    val appended = gaussianVecs(4, 16, 260 until 300)
+    def build(vs: Seq[(Long, Array[Float])], nClusters: Int): Unit =
+      Similarity.ivfPqBuild(vs.toDF("vec_id", "embedding"), "vec_id", "embedding", idx,
+        nClusters = nClusters, m = 4, ksub = 8, iters = 2)
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_ivfpq_rebuild")
+    try {
+      build(first, nClusters = 4)
+      val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Array[Float])]
+      val stream = Similarity.ivfPqStream(input.toDF().toDF("vec_id", "embedding"),
+          "vec_id", "embedding", idx)
+        .option("checkpointLocation", ckpt.toString).start()
+      try {
+        // the stream and the query path both cache the first build's models
+        input.addData(gaussianVecs(5, 8, 500 until 520): _*); stream.processAllAvailable()
+        Similarity.ivfPqQuery(first.take(5).toDF("vec_id", "embedding"), "vec_id", "embedding",
+          idx, k = 3, nProbe = 4).collect()
+        build(rebuilt, nClusters = 6)
+        input.addData(streamed: _*); stream.processAllAvailable()
+      } finally stream.stop()
+      Similarity.ivfPqAppend(appended.toDF("vec_id", "embedding"), "vec_id", "embedding", idx)
+      val corpus = (rebuilt ++ streamed ++ appended).toDF("vec_id", "embedding")
+      val qs = corpus.filter(col("vec_id") % 10 === 0)
+      def rows(df: org.apache.spark.sql.DataFrame) = df.select("query_id", "rank", "nbr_id")
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
+      val got = rows(Similarity.ivfPqQuery(qs, "vec_id", "embedding", idx, k = 10, nProbe = 6,
+        overfetch = 1000))
+      val brute = rows(Similarity.bruteForceTopK(corpus, qs, "vec_id", "embedding", 10))
+      assert(got === brute, "full probe after the rebuild must equal brute force")
+      // the streamed and appended rows are routed by the NEW codebook
+      val cents = spark.table(idx.codebookTable).as[(Int, Array[Double])].collect()
+        .sortBy(_._1).map(_._2)
+      assert(cents.length === 6 && cents(0).length === 16)
+      val routed = spark.table(idx.assignmentsTable).filter(col("id") >= 200)
+        .select("id", "v", "cluster").as[(Long, Array[Float], Int)].collect()
+      assert(routed.length === streamed.length + appended.length)
+      routed.foreach { case (id, v, cluster) =>
+        assert(cluster === Similarity.nearest(cents, v), s"id=$id routed by a stale codebook")
+      }
+      graft.Caching.release(spark)
+    } finally all.foreach(dropTableHard)
+  }
+
+  test("a dropped index fails appends and queries with the named build-first message") {
+    import spark.implicits._
+    val pq = Similarity.IvfPqIndex("tdropped_assign", "tdropped_cb", "tdropped_pq", numBuckets = 2)
+    val ivf = Similarity.IvfIndex("tdropped_ivf_assign", "tdropped_ivf_cb", numBuckets = 2)
+    val all = Seq(pq.assignmentsTable, pq.codebookTable, pq.pqTable,
+      ivf.assignmentsTable, ivf.codebookTable)
+    all.foreach(dropTableHard)
+    try {
+      val base = gaussianVecs(6, 8, 0 until 100).toDF("vec_id", "embedding")
+      val batch = gaussianVecs(7, 8, 100 until 120).toDF("vec_id", "embedding")
+      Similarity.ivfPqBuild(base, "vec_id", "embedding", pq, nClusters = 4, m = 4, ksub = 8,
+        iters = 2)
+      Similarity.ivfBuild(base, "vec_id", "embedding", ivf, nClusters = 4, iters = 2)
+      // a stream-style memo that already saw the tables exist, and cached models
+      val pqChecks = new graft.ext.TableChecks
+      val ivfChecks = new graft.ext.TableChecks
+      Similarity.ivfPqAppend(batch, "vec_id", "embedding", pq, pqChecks)
+      Similarity.ivfAppend(batch, "vec_id", "embedding", ivf, ivfChecks)
+      all.foreach(dropTableHard)
+      def fails(context: String)(body: => Unit): Unit = {
+        val e = intercept[IllegalArgumentException](body)
+        assert(e.getMessage.contains(s"$context: build the index first"), e.getMessage)
+      }
+      fails("ivfPqAppend")(Similarity.ivfPqAppend(batch, "vec_id", "embedding", pq, pqChecks))
+      fails("ivfPqAppend")(Similarity.ivfPqAppend(batch, "vec_id", "embedding", pq))
+      fails("ivfPqQuery")(Similarity.ivfPqQuery(batch, "vec_id", "embedding", pq, k = 3))
+      fails("ivfAppend")(Similarity.ivfAppend(batch, "vec_id", "embedding", ivf, ivfChecks))
+      fails("ivfAppend")(Similarity.ivfAppend(batch, "vec_id", "embedding", ivf))
+      fails("ivfQuery")(Similarity.ivfQuery(batch, "vec_id", "embedding", ivf, k = 3))
+    } finally all.foreach(dropTableHard)
+  }
+
   test("streaming cosine LSH finds cross-batch pairs and equals the batch operator") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

@@ -660,27 +660,27 @@ class PlanSpec extends SparkSpec {
     // materializes every upstream query stage — and widenIfNarrow then threw
     // the result away when the side was already wide (a silent double
     // execution for any future shuffled query side). The fix probes the
-    // physical plan instead; this pin fails if the .rdd probe ever fires on
+    // physical plan instead; this pin fails if an RDD probe ever fires on
     // an exchange-ful side again.
     val emb = Tables.load(spark, sf(), "embeddings")
-    val shuffled = emb.repartition(spark.sparkContext.defaultParallelism)
-      .select(col("vec_id"), col("embedding"))
-    val group = s"widen_pin_${System.nanoTime()}"
-    spark.sparkContext.setJobGroup(group, "widenIfNarrow planning pin")
-    val out = try Similarity.widenIfNarrow(shuffled)
-      finally spark.sparkContext.clearJobGroup()
-    // identity: an already-shuffled side is session-wide; no extra exchange
+    val par = spark.sparkContext.defaultParallelism
+    val shuffled = emb.repartition(par).select(col("vec_id"), col("embedding"))
+    val (out, jobs) = jobsRunBy(Similarity.widenIfNarrow(shuffled))
+    assert(jobs === 0, "widenIfNarrow ran query-stage jobs while planning")
+    // identity: an already-shuffled, session-wide side needs no extra exchange
     assert(out eq shuffled, "exchange-ful side must return untouched")
-    // no job may run during planning (bounded wait for the async status bus)
-    val deadline = System.nanoTime() + 2L * 1000 * 1000 * 1000
-    while (System.nanoTime() < deadline &&
-      spark.sparkContext.statusTracker.getJobIdsForGroup(group).isEmpty) Thread.sleep(50)
-    assert(spark.sparkContext.statusTracker.getJobIdsForGroup(group).isEmpty,
-      "widenIfNarrow ran query-stage jobs while planning")
-    // and the narrow direction still widens (the r16 single-task fix)
-    val narrow = Similarity.widenIfNarrow(emb.coalesce(1))
-    assert(!(narrow eq emb) && narrow.rdd.getNumPartitions ===
-      spark.sparkContext.defaultParallelism, "narrow side must still widen")
+    // a side whose last exchange is narrow widens too — read off the
+    // exchange's partitioning, still without running a job
+    val shuffledNarrow = emb.repartition(1).select(col("vec_id"), col("embedding"))
+    val (widened, narrowJobs) = jobsRunBy(Similarity.widenIfNarrow(shuffledNarrow))
+    assert(narrowJobs === 0, "widenIfNarrow ran query-stage jobs while planning a narrow shuffled side")
+    assert(!(widened eq shuffledNarrow) && widened.rdd.getNumPartitions === par,
+      "a narrow side behind an exchange must widen")
+    // and the shuffle-free narrow direction still widens (the r16 single-task fix)
+    val narrowIn = emb.coalesce(1)
+    val narrow = Similarity.widenIfNarrow(narrowIn)
+    assert(!(narrow eq narrowIn) && narrow.rdd.getNumPartitions === par,
+      "narrow side must still widen")
   }
 
   test("x25 connected components: iterative equi-joins only, no cartesian/NLJ/UDF") {
