@@ -541,6 +541,7 @@ object Bench {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    GraftSession.tune(spark)
     spark.sparkContext.setLogLevel("WARN")
     // environment guard BEFORE the (untimed) warm-up too: loadavg is a
     // 1-minute average, so probing after our own 32-thread warm-up would
