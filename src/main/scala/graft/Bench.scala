@@ -533,20 +533,25 @@ object Bench {
     }
   }
 
+  /** The session that [[main]], [[Verify]], `tools.ProbeQueries` and
+    * `tools.DumpPlans` time, verify or dump: [[GraftSession.local]] with
+    * Spark's default broadcast threshold, because every official run through
+    * r18 measured that 10 MB default. Step 2 of ROADMAP direction 3 is
+    * deleting the `unset` line, backed by 8- and 32-core measurements.
+    */
+  def session(): SparkSession = {
+    val spark = GraftSession.local("graft-bench")
+    spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    spark
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftSession.tune(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     // environment guard BEFORE the (untimed) warm-up too: loadavg is a
     // 1-minute average, so probing after our own 32-thread warm-up would
     // read our own work as co-tenant load
-    val preflight = waitForQuietMachine(scala.util.Try(cpus.trim.toInt).getOrElse(4))
+    val preflight = waitForQuietMachine(spark.sparkContext.defaultParallelism)
     // Warm-up: JVM/codegen/parquet-footer costs land here, not on whichever
     // query the Map happens to order first. Touches every table once.
     graft.sources.Tables.all.foreach { t =>

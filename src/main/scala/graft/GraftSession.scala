@@ -11,12 +11,15 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  /** Number of local cores to use when running outside spark-submit. */
-  def defaultCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  /** Number of local cores to use when running outside spark-submit:
+    * `SPARK_GRAFT_CPUS`, else every core the JVM sees.
+    */
+  def defaultCpus: String =
+    sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
 
+  /** The one session builder of every main and spec. Logs at WARN. */
   def local(appName: String = "graft", cpus: String = defaultCpus): SparkSession = {
-    val spark = SparkSession
-      .builder()
+    val spark = SparkSession.builder()
       .appName(appName)
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -27,6 +30,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
     tune(spark)
     spark
   }

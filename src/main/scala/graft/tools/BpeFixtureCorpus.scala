@@ -52,13 +52,7 @@ object BpeFixtureCorpus {
   def main(args: Array[String]): Unit = {
     require(args.length == 2, "usage: BpeFixtureCorpus <baseSfDir> <outDir>")
     val (baseSf, outDir) = (args(0), args(1))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("graft-bpe-corpus")
     import spark.implicits._
     try {
       val base = spark.read.parquet(s"$baseSf/documents.parquet")

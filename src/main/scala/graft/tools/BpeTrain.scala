@@ -35,13 +35,7 @@ object BpeTrain {
     val numMerges = args(1).toInt
     val srcDirs = args.drop(2).toSeq
     val maxVocab = sys.env.getOrElse("GRAFT_BPE_MAX_VOCAB", "2000000").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("graft-bpe-train")
     try {
       // distributed word-frequency aggregate over every input corpus — the
       // Bpe pre-tokenizer's classes, verbatim

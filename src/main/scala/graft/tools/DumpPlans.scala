@@ -2,9 +2,9 @@ package graft.tools
 
 /** Dump `.explain("formatted")` for named [[graft.SparkEntry.queries]]
   * entries to text files — the optimization rounds' plan-evidence artifact
-  * (`plans/r{N}/<query>_{before,after}.txt`). The session is the BENCH's
-  * exact builder (same master/shuffle-partitions/no overrides), so the
-  * captured plan is the plan the bench times, not a tuned variant.
+  * (`plans/r{N}/<query>_{before,after}.txt`). The session is
+  * [[graft.Bench.session]], so the captured plan is the plan the bench
+  * times.
   *
   * Usage: `runMain graft.tools.DumpPlans <sfDir> <outDir> <suffix> q1 [q2 …]`
   * writes `<outDir>/<q>_<suffix>.txt` per query.
@@ -27,13 +27,7 @@ object DumpPlans {
     val names = args.drop(3).toSeq
     val unknown = names.filterNot(graft.SparkEntry.queries.contains)
     require(unknown.isEmpty, s"DumpPlans: unknown queries ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Bench.session()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     try names.foreach { n =>
       graft.Caching.release(spark)

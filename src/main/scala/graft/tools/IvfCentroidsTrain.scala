@@ -29,9 +29,7 @@ object IvfCentroidsTrain {
       "usage: IvfCentroidsTrain <sfDir> <outFile> <k> <iters>")
     val Array(sfDir, outFile, kS, itersS) = args
     val (k, iters) = (kS.toInt, itersS.toInt)
-    val spark = graft.GraftSession.local("graft-ivf-train",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("graft-ivf-train")
     import spark.implicits._
     // the ivfBuild input contract: integral id, defined-cosine vectors only
     val vecs = graft.sources.Tables.load(spark, sfDir, "embeddings")

@@ -75,7 +75,7 @@ object Pipelines {
   /** tools/kafka2rocksdb: a Kafka changelog materialized into a queryable
     * last-writer-wins table with RocksDB-backed state — the Spark analog is
     * the streaming LWW operator on the RocksDB state-store provider
-    * (GraftSession.local(..., rocksdb = true)).
+    * ([[graft.GraftSession.useRocksDbState]]).
     */
   def kafka2table(spark: SparkSession, brokers: String, topic: String)
   : org.apache.spark.sql.Dataset[graft.model.KRecord[String, String]] = {

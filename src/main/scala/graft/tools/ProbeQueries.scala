@@ -9,18 +9,13 @@ package graft.tools
   * from [[graft.ProbeTiming]] hooks, fed with a per-JVM Spark job counter
   * registered here.
   *
-  * COMPARABILITY CONTRACT (what makes probe floors admissible §8.4
-  * evidence against bench medians): the session is built with the BENCH's
-  * exact builder — same master, same shuffle partitions, no AQE/broadcast
-  * overrides — because GraftSession.local's tuned defaults (64 MB
-  * broadcast threshold, AQE) can pick DIFFERENT PLANS than the bench's
-  * bare builder and misattribute a plan delta as environment. One honest
-  * remaining difference, which biases probes SLOWER, never faster: the
-  * probe materializes to parquet (so `tools/check_oracle.py <sfDir>
-  * <outDir>` can verify the dump — the tool's second job) where the bench
-  * uses a noop sink; for output-heavy queries subtract nothing — a probe
-  * floor at or below the prior official median is conclusive, a probe
-  * floor ABOVE it may still be the write path.
+  * The session is [[graft.Bench.session]], so probe floors are admissible
+  * §8.4 evidence against bench medians. One difference remains, and it
+  * biases probes SLOWER, never faster: the probe materializes to parquet
+  * (so `tools/check_oracle.py <sfDir> <outDir>` can verify the dump — the
+  * tool's second job) where the bench uses a noop sink. A probe floor at or
+  * below the prior official median is conclusive; a floor ABOVE it may
+  * still be the write path.
   *
   * Usage: `sbt "runMain graft.tools.ProbeQueries <sfDir> <outDir> q1 [q2 …]"`
   * — output dirs are named WITHOUT a .parquet suffix so
@@ -38,14 +33,7 @@ object ProbeQueries {
       s"ProbeQueries: unknown queries ${unknown.mkString(", ")} — valid names " +
         s"are in SparkEntry.queries (e.g. ${graft.SparkEntry.queries.keys.take(3).mkString(", ")})")
     val runs = sys.env.getOrElse("GRAFT_PROBE_RUNS", "3").toInt
-    // the BENCH's session, verbatim (see the comparability contract above)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Bench.session()
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
         graft.ProbeTiming.jobs.incrementAndGet(); ()

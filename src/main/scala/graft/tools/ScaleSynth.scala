@@ -31,13 +31,7 @@ object ScaleSynth {
     val src = args(0)
     val out = args(1)
     val clones = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("graft-scale-synth")
     try {
       val docs = spark.read.parquet(s"$src/documents.parquet")
       val vocab = docs

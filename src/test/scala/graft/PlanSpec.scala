@@ -351,6 +351,32 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("floatvectordot"), p.take(2000))
   }
 
+  test("Bench.session is GraftSession.local with Spark's default broadcast threshold") {
+    import org.apache.spark.sql.internal.SQLConf
+    import graft.streaming.LocalCheckpointFileManager
+    val threshold = SQLConf.AUTO_BROADCASTJOIN_THRESHOLD.key
+    val partitions = SQLConf.SHUFFLE_PARTITIONS.key
+    val (prevThreshold, prevPartitions, prevManager) = (spark.conf.get(threshold),
+      spark.conf.get(partitions), spark.conf.get(LocalCheckpointFileManager.ConfKey))
+    // builder confs land on the shared session, so these must come from the call
+    spark.conf.set(threshold, "1")
+    spark.conf.unset(LocalCheckpointFileManager.ConfKey)
+    try {
+      val bench = Bench.session()
+      assert(bench.sessionState.conf.autoBroadcastJoinThreshold ==
+        SQLConf.AUTO_BROADCASTJOIN_THRESHOLD.defaultValue.get)
+      assert(bench.conf.get(LocalCheckpointFileManager.ConfKey) ==
+        classOf[LocalCheckpointFileManager].getName)
+      assert(bench.catalog.functionExists("graft_dot"))
+      assert(GraftSession.local().sessionState.conf.autoBroadcastJoinThreshold == 64L * 1024 * 1024)
+    } finally {
+      spark.conf.set(threshold, prevThreshold)
+      spark.conf.set(partitions, prevPartitions)
+      spark.conf.set(LocalCheckpointFileManager.ConfKey, prevManager)
+      spark.sparkContext.setLogLevel("ERROR")
+    }
+  }
+
   test("bucketed tables join and aggregate with NO exchange (co-located join path)") {
     import graft.sources.Tables
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
