@@ -566,11 +566,6 @@ object Queries {
     "x04_dedup_simhash" -> ((s, dir) =>
       Dedup.simHashPairs(Dedup.simHash(t(s, dir, "documents"), "doc_id", "text"), maxHamming = 3)),
 
-    // Declared query is the banded-LSH equi-join path (no nested-loop join);
-    // the brute-force O(n²) compare lives only in the DuckDB oracle. 64-bit
-    // signatures / bands of 2 ⇒ P(miss) ≈ 7e-5 per pair at cosine 0.35, and
-    // recall is exactly 1 on the deterministic test data (asserted in
-    // ExtensionsSpec against cosinePairs).
     // dedup decision: survivors after dropping the larger id of every
     // near-dup pair found by the LSH path
     "x13_dedup_keep" -> ((s, dir) => {
@@ -693,6 +688,11 @@ object Queries {
       s.read.parquet(tmp.resolve("out").toString)
     }),
 
+    // Declared query is the banded-LSH equi-join path (no nested-loop join);
+    // the brute-force O(n²) compare lives only in the DuckDB oracle and the
+    // test tree. 64-bit signatures / bands of 2 ⇒ P(miss) ≈ 7e-5 per pair at
+    // cosine 0.35, and recall is exactly 1 on the deterministic test data
+    // (asserted in ExtensionsSpec against a brute-force reference model).
     "x05_ann_cosine_pairs" -> ((s, dir) =>
       Similarity.cosineLshPairs(t(s, dir, "embeddings"), "vec_id", "embedding", 0.35)),
 

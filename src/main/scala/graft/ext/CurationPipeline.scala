@@ -234,11 +234,10 @@ object CurationPipeline {
     }
 
     // 4: near-dup dedup — LSH pairs, then either the per-pair drop or the
-    // full cluster collapse (one survivor per connected component). The
-    // set-based entry ([[Dedup.minHashLshDocs]]) builds shingle sets +
-    // bands in one narrow pass — two fewer exchanges than the exploded
-    // minHashLsh(wordShingles(…)) with bit-identical pairs (exactKept ids
-    // are unique by construction: stage 3 keeps one doc per text hash)
+    // full cluster collapse (one survivor per connected component).
+    // [[Dedup.minHashLshDocs]] builds shingle sets + bands in one narrow
+    // pass; it needs unique ids, which exactKept has by construction
+    // (stage 3 keeps one doc per text hash)
     val pairs = graft.ProbeTiming("build_pairs")(Dedup.minHashLshDocs(exactKept, idCol, textCol,
       cfg.nearDupThreshold, cfg.shingleN))
     val lexKept = graft.ProbeTiming("build_keep")(
@@ -907,24 +906,15 @@ object CurationPipeline {
     * between-batches maintenance window), keeping the three index tables
     * at ≤ numBuckets files each on an unattended stream (0 = caller
     * manages compaction).
-    *
-    * `leaseRevalidateEvery` is the lease-check cadence ([[TableChecks]]):
-    * default 1, because this stream's hash/LSH/cluster index APPENDS ARE
-    * THE DATA — an out-of-process compaction acquiring the lease
-    * mid-stream must stop the very next increment, not up to 7 batches of
-    * index appends later (the r15 Similarity-stream rule, applied
-    * uniformly in r16).
     */
   def runStream(docs: DataFrame, idCol: String, textCol: String,
                 holdout: Option[DataFrame], cfg: Config, state: StreamState,
-                compactEvery: Int = 0, maintainClusters: Boolean = false,
-                leaseRevalidateEvery: Int = 1)
+                compactEvery: Int = 0, maintainClusters: Boolean = false)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     val hg = holdout.map(h => holdoutGramSet(h, idCol, textCol, cfg))
     // one maintenance-check memo per stream ([[TableChecks]]); sequential
     // batch ids on one instance make the registry mapping cache valid
-    val checks = new TableChecks(revalidateEvery = leaseRevalidateEvery,
-      cacheRegistryMapping = maintainClusters)
+    val checks = new TableChecks(cacheRegistryMapping = maintainClusters)
     docs.writeStream.foreachBatch {
       (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
         streamIncrement(batch.toDF(), idCol, textCol, hg, cfg, state, id,

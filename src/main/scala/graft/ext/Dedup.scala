@@ -71,7 +71,7 @@ object Dedup {
   /** Exact pairwise Jaccard over shingle sets, emitting pairs with
     * `jaccard >= threshold`. Output: (d1, d2, inter_cnt, union_cnt, jaccard)
     * with d1 < d2. O(pairs-sharing-a-shingle) — the verifier/oracle path;
-    * use [[minHashLsh]] at scale.
+    * use [[minHashLshDocs]] at scale.
     *
     * `maxShingleDf` caps the self-join's skew: a shingle appearing in k docs
     * contributes k² candidate rows on one join key, so one boilerplate
@@ -117,90 +117,47 @@ object Dedup {
       threshold)
   }
 
-  /** MinHash + banded LSH near-dup detection — the 100 TB path.
-    *
-    * Signatures: `numHashes` independent min-hashes per doc via seeded
-    * xxhash64 (partial-aggregated min, map-side combined). Banding: rows of
-    * `bandSize` hashes, band key = hash of the band's signature slice;
-    * candidate pairs share any band key (equi-join, no O(n²)). Candidates are
-    * then verified with exact Jaccard, so output has no false positives and
-    * matches [[jaccardPairs]] whenever LSH recall is 1.
+  /** ONE narrow pass building the per-document row shape of every MinHash
+    * path: token array → distinct shingle SET (in-row, no explode+distinct
+    * exchange) → band keys via the scalar graft_minhash_bands (`numHashes`
+    * Kirsch–Mitzenmacher min-hashes over murmur3, banded into rows of
+    * `bandSize`; [[graft.functions.Lsh.minHashBands]]). Embarrassingly
+    * parallel; only band keys ever shuffle downstream. Output: (id, ss,
+    * bk). Shared by the batch entries, the streaming increment,
+    * [[buildLshIndex]] and [[minHashLshCrossIndex]], so every producer and
+    * prober bands identically.
+    */
+  private[graft] def shingleSetsWithBands(df: DataFrame, idCol: String,
+                                          textCol: String, shingleN: Int,
+                                          numHashes: Int, bandSize: Int): DataFrame = {
+    graft.functions.GraftFunctions.register(df.sparkSession)
+    df.select(col(idCol).as("id"), TextAnalysis.tokens(col(textCol)).as("__t"))
+      .filter(size(col("__t")) >= shingleN)
+      .select(col("id"),
+        array_distinct(TextAnalysis.wordNGrams(col("__t"), shingleN)).as("ss"))
+      .withColumn("bk", call_function("graft_minhash_bands",
+        col("ss"), lit(numHashes), lit(bandSize)))
+  }
+
+  /** MinHash + banded LSH near-dup detection over a documents frame — the
+    * 100 TB path. [[shingleSetsWithBands]] builds each document's distinct
+    * shingle set and band keys in one narrow in-row pass; candidate pairs
+    * share any (band, band_key) (equi-join, no O(n²)); candidates are then
+    * verified with exact Jaccard, so output has no false positives and
+    * matches [[jaccardPairs]] whenever LSH recall is 1. Set sizes are
+    * in-row (`size(ss)`), not an aggregate exchange.
     *
     * P(miss) for a pair at similarity s = (1 - s^bandSize)^numBands;
     * defaults (64 hashes, bands of 2) give P(miss at 0.5) ≈ 7e-5.
-    */
-  /** Per-doc banded MinHash signature keys: (id, band, band_key). The
-    * signature is an INCREMENTAL aggregate (graft.functions
-    * .MinHashBandsAgg): shingle base hashes h1,h2 via murmur3, seed-i
-    * hash = h1 + i*h2 (Kirsch–Mitzenmacher double hashing), banded into
-    * numHashes/bandSize keys. The aggregation buffer is the fixed-width
-    * signature (elementwise-min, map-side combined) — no per-(doc,seed)
-    * explode AND no collect_list of the document's shingles, so a
-    * million-shingle document costs the same numHashes×8-byte buffer as a
-    * tweet. Shared by the batch [[minHashLsh]] and the streaming
-    * [[minHashLshIncrement]] so both paths band identically.
-    */
-  def signatureBands(shingles: DataFrame, numHashes: Int = 64, bandSize: Int = 2): DataFrame = {
-    require(numHashes % bandSize == 0)
-    graft.functions.GraftFunctions.register(shingles.sparkSession)
-    shingles.groupBy("id")
-      .agg(call_function("graft_minhash_bands_agg",
-        col("shingle"), lit(numHashes), lit(bandSize)).as("bk"))
-      .select(col("id"), posexplode(col("bk")).as(Seq("band", "band_key")))
-  }
-
-  def minHashLsh(shingles: DataFrame, threshold: Double,
-                 numHashes: Int = 64, bandSize: Int = 2): DataFrame = {
-    require(numHashes % bandSize == 0)
-    // the shingle set feeds the signature aggregate, the size aggregate and
-    // BOTH sides of the verification join (4 references): persist so the
-    // upstream tokenize+explode+distinct runs once. ReusedExchange sometimes
-    // dedups the shared shuffle, but that is plan luck, not contract — at
-    // 100 TB a missed reuse rescans the whole corpus up to 4×. Scoped:
-    // callers release via graft.Caching.release after materializing.
-    val cached = graft.Caching.scoped(shingles)
-    // the signature aggregate (the CPU-heavy step) feeds both sides of the
-    // candidate self-join: persist its output, not just its input
-    val bands = graft.Caching.scoped(signatureBands(cached, numHashes, bandSize))
-    val cand = bands.toDF("d1", "band", "band_key")
-      .join(bands.toDF("d2", "band", "band_key"), Seq("band", "band_key"))
-      .filter(col("d1") < col("d2"))
-      .select("d1", "d2").distinct()
-    // verify candidates with exact Jaccard (no false positives)
-    val sizes = cached.groupBy(col("id")).agg(count(lit(1)).as("n"))
-    val a = cached.toDF("d1", "s")
-    val b = cached.toDF("d2", "s")
-    emitVerifiedPairs(
-      cand
-        .join(a, "d1").join(b.withColumnRenamed("s", "s2"), "d2")
-        .filter(col("s") === col("s2"))
-        .groupBy("d1", "d2").agg(count(lit(1)).as("inter_cnt"))
-        .join(sizes.toDF("d1", "n1"), "d1")
-        .join(sizes.toDF("d2", "n2"), "d2"),
-      threshold)
-  }
-
-  /** [[minHashLsh]] from the raw documents frame — the batch entry the
-    * declared queries use (round 17, optimization): ONE narrow pass builds
-    * each document's distinct shingle set AND its band keys in-row
-    * ([[shingleSetsWithBands]] — the exact kernel the streaming increment
-    * and every index producer/prober use, so all paths band identically),
-    * which removes two full exchanges versus minHashLsh(wordShingles(…)):
-    * the explode+distinct shuffle of the (id, shingle) table and the
-    * signature groupBy aggregate (the scalar graft_minhash_bands replaces
-    * MinHashBandsAgg — bit-identical by construction, [[graft.functions
-    * .Lsh.updateSig]] is the shared per-shingle kernel). Set sizes are
-    * in-row (`size(ss)`) instead of a third aggregate exchange.
     *
-    * The VERIFY stays the exploded equi-join of [[minHashLsh]] — per-doc
-    * set ROWS never ship through the candidate join, so the biggest
-    * document costs exploded rows, not a million-element array per
-    * candidate pair (the 100 TB argument in [[minHashLshIncrement]]'s
-    * verify note, which faces micro-batch-bounded candidates; a batch
-    * corpus' candidate set is corpus-scale). Results are bit-identical to
-    * `minHashLsh(wordShingles(docs, id, text, shingleN), threshold)` on
-    * unique-id input (spec-pinned equality + the unchanged DuckDB
-    * oracles); ids must be unique per row — the corpus-table contract.
+    * The VERIFY is an exploded equi-join — per-doc set ROWS never ship
+    * through the candidate join, so the biggest document costs exploded
+    * rows, not a million-element array per candidate pair (the 100 TB
+    * argument in [[minHashLshIncrement]]'s verify note, which faces
+    * micro-batch-bounded candidates; a batch corpus' candidate set is
+    * corpus-scale). Output: (d1, d2, inter_cnt, union_cnt, jaccard) with
+    * d1 < d2 (spec-pinned against exact [[jaccardPairs]] + the DuckDB
+    * oracle); ids must be unique per row — the corpus-table contract.
     */
   def minHashLshDocs(docs: DataFrame, idCol: String, textCol: String,
                      threshold: Double, shingleN: Int = 3,
@@ -235,75 +192,28 @@ object Dedup {
 
   /** Cross-corpus near-dup pairs — "dedup this dump against the previous
     * one" at the fuzzy level: MinHash-banded candidates BETWEEN the corpus
-    * and reference shingle sets only, verified with exact Jaccard (no false
+    * and reference documents only, verified with exact Jaccard (no false
     * positives; equals the exact cross-corpus Jaccard whenever LSH recall
     * is 1). Output: (corpus_id, ref_id, inter_cnt, union_cnt, jaccard) —
     * the two ids are SEPARATE namespaces (a new dump vs its predecessor),
-    * so unlike [[minHashLsh]] there is no d1 < d2 canonicalization: the
+    * so unlike [[minHashLshDocs]] there is no d1 < d2 canonicalization: the
     * column names carry which side each doc came from, and the same id
     * value on both sides means two different documents, never a self-pair.
     *
     * This is the lexical sibling of [[Decontaminate.semanticDecontaminate]]
-    * (embedding-space cross-frame near-dup) — the family was asymmetric
-    * without it: batch lexical near-dup existed only as a self-join
-    * ([[minHashLsh]]) or against a persisted streaming index
-    * ([[minHashLshIncrement]]).
+    * (embedding-space cross-frame near-dup); [[minHashLshCrossIndex]] is
+    * the same answer against a persisted reference index.
     *
-    * Scale: both sides band independently (incremental MinHashBandsAgg,
-    * map-side combined — the [[signatureBands]] kernel, so the two corpora
-    * band identically); candidates are ONE equi-join between the two band
-    * sets, so n_corpus × n_ref never materializes — and vs running
-    * [[minHashLsh]] over a tagged union and filtering, neither side pays
-    * its own within-side candidate half (for a dump re-crawled at 90%
-    * overlap that half is most of the join). Verification explodes only
-    * candidate documents' shingles (the corpus-scale verify shape
-    * [[minHashLsh]]'s scaladoc argues for). Each shingle frame feeds its
-    * signature aggregate, its size aggregate and one verify side — scoped
-    * persists stop the tokenize+explode+distinct subtrees running 3×;
-    * callers release via [[graft.Caching.release]].
-    */
-  def minHashLshCross(corpusShingles: DataFrame, refShingles: DataFrame,
-                      threshold: Double, numHashes: Int = 64,
-                      bandSize: Int = 2): DataFrame = {
-    require(numHashes % bandSize == 0)
-    val c = graft.Caching.scoped(corpusShingles)
-    val r = graft.Caching.scoped(refShingles)
-    // bands feed exactly one join side each — no reuse, so (unlike the
-    // self-join path) persisting them would only cost memory
-    val cand = signatureBands(c, numHashes, bandSize)
-      .toDF("corpus_id", "band", "band_key")
-      .join(signatureBands(r, numHashes, bandSize)
-        .toDF("ref_id", "band", "band_key"), Seq("band", "band_key"))
-      .select("corpus_id", "ref_id").distinct()
-    val cSizes = c.groupBy(col("id")).agg(count(lit(1)).as("n")).toDF("corpus_id", "n1")
-    val rSizes = r.groupBy(col("id")).agg(count(lit(1)).as("n")).toDF("ref_id", "n2")
-    // rename through emitVerifiedPairs' (d1, d2) contract and back: the
-    // verify-and-emit tail stays ONE definition across every pair path
-    emitVerifiedPairs(
-      cand
-        .join(c.toDF("corpus_id", "s"), "corpus_id")
-        .join(r.toDF("ref_id", "s2"), "ref_id")
-        .filter(col("s") === col("s2"))
-        .groupBy("corpus_id", "ref_id").agg(count(lit(1)).as("inter_cnt"))
-        .join(cSizes, "corpus_id")
-        .join(rSizes, "ref_id")
-        .select(col("corpus_id").as("d1"), col("ref_id").as("d2"),
-          col("inter_cnt"), col("n1"), col("n2")),
-      threshold)
-      .withColumnRenamed("d1", "corpus_id")
-      .withColumnRenamed("d2", "ref_id")
-  }
-
-  /** [[minHashLshCross]] from the raw document frames — the batch entry
-    * the declared queries use (round 17, optimization; the
-    * [[minHashLshDocs]] restructure applied to the cross shape): each side
-    * builds its distinct shingle set + band keys in ONE narrow in-row pass
-    * ([[shingleSetsWithBands]]), dropping the explode+distinct exchange
-    * and the signature aggregate per side, and set sizes come in-row.
-    * Verify stays the exploded between-side equi-join; output, threshold
-    * semantics and the no-canonicalization id contract are exactly
-    * [[minHashLshCross]]'s — bit-identical results on unique-id input
-    * (spec-pinned + the unchanged cross-Jaccard oracle).
+    * Scale: each side builds its distinct shingle set + band keys in ONE
+    * narrow in-row pass ([[shingleSetsWithBands]], so the two corpora band
+    * identically) and set sizes come in-row; candidates are ONE equi-join
+    * between the two band sets, so n_corpus × n_ref never materializes —
+    * and vs running [[minHashLshDocs]] over a tagged union and filtering,
+    * neither side pays its own within-side candidate half (for a dump
+    * re-crawled at 90% overlap that half is most of the join). Verify is
+    * the exploded between-side equi-join ([[minHashLshDocs]]' corpus-scale
+    * verify shape). Ids must be unique per row within each side; callers
+    * release the scoped persists via [[graft.Caching.release]].
     */
   def minHashLshCrossDocs(corpus: DataFrame, reference: DataFrame,
                           idCol: String, textCol: String, threshold: Double,
@@ -341,7 +251,7 @@ object Dedup {
       .withColumnRenamed("d2", "ref_id")
   }
 
-  /** The drop DECISION over [[minHashLshCross]]: corpus documents that
+  /** The drop DECISION over [[minHashLshCrossDocs]]: corpus documents that
     * near-dup ANY reference document are removed; everything else survives,
     * including sub-`shingleN`-token documents that produce no shingles (the
     * [[keepList]] contract — a doc with no features never pairs). The
@@ -394,7 +304,7 @@ object Dedup {
     } finally { docs.unpersist(blocking = false); () }
   }
 
-  /** [[minHashLshCross]] against a PERSISTED reference index instead of a
+  /** [[minHashLshCrossDocs]] against a PERSISTED reference index instead of a
     * reference frame — the production re-crawl shape: the previous dump's
     * index is built once ([[buildLshIndex]], or accumulated by the
     * streaming increment) and every new dump probes it with ONE bucketed
@@ -403,16 +313,16 @@ object Dedup {
     * the indexed corpus. Candidate orientation is preserved (corpus_id →
     * ref_id; the namespaces are separate, so no least/greatest
     * canonicalization and a same-valued id on both sides is a legitimate
-    * cross pair — the [[minHashLshCross]] contract, NOT
+    * cross pair — the [[minHashLshCrossDocs]] contract, NOT
     * [[crossCandidates]]' same-stream dedup). Verification is in-row
     * (array_intersect over the two docs' stored shingle sets, the
     * streaming verify shape — per-pair cost ~ the two documents' set
     * sizes, same work as the exploded join minus ~4 exchanges); both
     * sides' same-id rows set-merge first, so duplicate ids in the corpus
-    * frame and replay-duplicated index rows both fold into the batch
-    * path's groupBy-union semantics. Output and threshold semantics are
-    * exactly [[minHashLshCross]]'s — bit-equal results when the index
-    * holds the same reference corpus (spec-pinned).
+    * frame and replay-duplicated index rows both fold into one set union
+    * per id. Output and threshold semantics are exactly
+    * [[minHashLshCrossDocs]]' — equal results when the index holds the
+    * same unique-id reference corpus (spec-pinned).
     */
   def minHashLshCrossIndex(corpus: DataFrame, idCol: String, textCol: String,
                            index: LshIndex, threshold: Double,
@@ -491,7 +401,7 @@ object Dedup {
 
   /** The micro-batch probe join of [[minHashLshIncrement]]: this batch's
     * signature bands against the stored corpus index — candidates are ids
-    * sharing any (band, band_key), exactly [[minHashLsh]]'s criterion, but
+    * sharing any (band, band_key), exactly [[minHashLshDocs]]' criterion, but
     * only the batch side shuffles (the index side is bucketed on the join
     * keys; PlanSpec pins the exchange-free scan). Emitted as (d1 < d2).
     */
@@ -503,30 +413,10 @@ object Dedup {
       .select(least(col("stored_id"), col("new_id")).as("d1"),
         greatest(col("stored_id"), col("new_id")).as("d2"))
 
-  /** Exact-Jaccard verification for streaming candidates. Counts are
-    * DISTINCT-counted so an at-least-once replay that duplicated index rows
-    * (a retried micro-batch re-appending its shingles) cannot inflate
-    * intersections or set sizes — `array_distinct` sheds the duplicates in
-    * the per-doc set build, so on clean input the result still matches
-    * [[minHashLsh]] bit-for-bit.
-    *
-    * `arr` is the per-CANDIDATE-doc shingle-set table (id, ss) — the caller
-    * persists it (micro-batch-bounded: only docs that appear in a pair).
-    * Intersection and sizes are computed IN-ROW (`array_intersect`/`size`)
-    * after joining each pair to its two set rows. vs the exploded
-    * (pair × shingle) join + groupBy + two sizes joins this drops ~4
-    * exchanges per micro-batch, and both small sides broadcast under AQE —
-    * the per-batch fixed-latency budget is the whole game at a 100 TB
-    * stream's batch cadence. Batch [[minHashLsh]] deliberately keeps the
-    * exploded verify: its candidate set is corpus-scale, and a row per doc
-    * shingle SET there would hold million-element arrays on the biggest
-    * docs, where the stream's arrays are bounded by what one micro-batch's
-    * bands collide with.
-    */
   /** The shared Jaccard verify-and-emit tail: given per-pair exact counts
     * (d1, d2, inter_cnt, n1, n2), keep pairs meeting `threshold` and emit
     * the (d1, d2, inter_cnt, union_cnt, jaccard) contract. ONE definition
-    * — [[jaccardPairs]], [[minHashLsh]], and the streaming verify all
+    * — [[jaccardPairs]], [[minHashLshDocs]], and the streaming verify all
     * feed it, so the batch ≡ stream bit-for-bit equality (spec-pinned)
     * cannot drift through a threshold-semantics fix applied to only one
     * copy.
@@ -541,7 +431,7 @@ object Dedup {
   /** The per-candidate-id merged shingle-set build shared by the streaming
     * verify and the cross-index probe: same-id rows (replay-duplicated index
     * rows, duplicate ids within a batch, an id re-arriving with new text)
-    * union into ONE deterministic set — the batch path's groupBy semantics.
+    * union into ONE deterministic set (one set union per id).
     *
     * SKEW/GROWTH BOUND: the union array grows with every distinct same-id
     * row, and a pathological id re-arriving with new text each batch grows
@@ -582,6 +472,26 @@ object Dedup {
     }
   }
 
+  /** Exact-Jaccard verification for streaming candidates. Counts are
+    * DISTINCT-counted so an at-least-once replay that duplicated index rows
+    * (a retried micro-batch re-appending its shingles) cannot inflate
+    * intersections or set sizes — `array_distinct` sheds the duplicates in
+    * the per-doc set build, so on clean input the result still matches
+    * [[minHashLshDocs]] bit-for-bit.
+    *
+    * `arr` is the per-CANDIDATE-doc shingle-set table (id, ss) — the caller
+    * persists it (micro-batch-bounded: only docs that appear in a pair).
+    * Intersection and sizes are computed IN-ROW (`array_intersect`/`size`)
+    * after joining each pair to its two set rows. vs the exploded
+    * (pair × shingle) join + groupBy + two sizes joins this drops ~4
+    * exchanges per micro-batch, and both small sides broadcast under AQE —
+    * the per-batch fixed-latency budget is the whole game at a 100 TB
+    * stream's batch cadence. Batch [[minHashLshDocs]] deliberately keeps the
+    * exploded verify: its candidate set is corpus-scale, and a row per doc
+    * shingle SET there would hold million-element arrays on the biggest
+    * docs, where the stream's arrays are bounded by what one micro-batch's
+    * bands collide with.
+    */
   private def verifyStreamCandidates(cand: DataFrame, arr: DataFrame,
                                      threshold: Double): DataFrame = {
     emitVerifiedPairs(
@@ -601,12 +511,12 @@ object Dedup {
     *
     * Steps, in an order that keeps the emission exactly-once per pair:
     *
-    *  1. shingle + band the batch ([[wordShingles]]/[[signatureBands]] —
-    *     identical kernels to the batch path);
+    *  1. shingle + band the batch ([[shingleSetsWithBands]] — the kernel
+    *     every batch and index path uses);
     *  2. candidates = batch×index bucketed band join ([[crossCandidates]])
     *     ∪ batch-internal band self-join (pairs arriving together);
     *  3. exact-Jaccard verify (no false positives — same contract as
-    *     [[minHashLsh]]), emit verified pairs into `pairsDir` under a
+    *     [[minHashLshDocs]]), emit verified pairs into `pairsDir` under a
     *     `batch_id=<id>` partition with DYNAMIC partition overwrite: a
     *     replayed micro-batch rewrites its own partition instead of
     *     appending duplicates;
@@ -619,31 +529,10 @@ object Dedup {
     * absorb via distinct and verification via distinct-counts (and a
     * compaction rewrite removes). Doc ids must be unique across the
     * stream (the usual changelog contract). The streamed pair set over
-    * any prefix of the stream equals [[minHashLsh]] on the union of those
+    * any prefix of the stream equals [[minHashLshDocs]] on the union of those
     * documents — golden-tested, and declared as x30 against the batch
     * oracle.
     */
-  /** ONE narrow pass building the index row shape per document: token
-    * array → distinct shingle SET (in-row, no explode+distinct exchange)
-    * → MinHash band keys via the scalar graft_minhash_bands (bit-identical
-    * to the batch path's aggregate — [[graft.functions.Lsh.updateSig]] is
-    * the shared kernel). Embarrassingly parallel; only band keys ever
-    * shuffle downstream. Output: (id, ss, bk). Shared by the streaming
-    * increment, [[buildLshIndex]] and [[minHashLshCrossIndex]] so every
-    * index producer/prober bands identically.
-    */
-  private def shingleSetsWithBands(df: DataFrame, idCol: String,
-                                   textCol: String, shingleN: Int,
-                                   numHashes: Int, bandSize: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
-    df.select(col(idCol).as("id"), TextAnalysis.tokens(col(textCol)).as("__t"))
-      .filter(size(col("__t")) >= shingleN)
-      .select(col("id"),
-        array_distinct(TextAnalysis.wordNGrams(col("__t"), shingleN)).as("ss"))
-      .withColumn("bk", call_function("graft_minhash_bands",
-        col("ss"), lit(numHashes), lit(bandSize)))
-  }
-
   def minHashLshIncrement(batch: DataFrame, idCol: String, textCol: String,
                           threshold: Double, index: LshIndex, pairsDir: String,
                           batchId: Long, shingleN: Int = 3,
@@ -702,7 +591,7 @@ object Dedup {
     // public API — nothing upstream enforces uniqueness) keep one row EACH
     // here: every row's bands probe for candidates, and the verify stage
     // below set-merges same-id shingle sets, so verified pairs stay
-    // deterministic and match the batch path's groupBy-union semantics
+    // deterministic: one set union per id
     // (candidate recall follows the per-row signatures, not the
     // merged-set signature — LSH recall is probabilistic either way).
     // Local persist (batch-lifetime, released in finally — not Caching
@@ -746,8 +635,8 @@ object Dedup {
       // AQE). The set-merge aggregate (same one exchange a dropDuplicates
       // would cost) folds replay-duplicated index rows AND genuinely
       // different same-id rows — duplicate ids within a batch, or an id
-      // re-arriving with new text — into one deterministic UNION set, the
-      // batch path's groupBy semantics; an arbitrary-row pick here made
+      // re-arriving with new text — into one deterministic UNION set per
+      // id; an arbitrary-row pick here made
       // verified pairs run-to-run nondeterministic. Verification is
       // order-insensitive (array_intersect + size), so collect_list's
       // nondeterministic row order cannot leak into results. The per-id
@@ -846,24 +735,15 @@ object Dedup {
     * between-batches maintenance window, so an unattended stream keeps its
     * index at ≤ numBuckets files per table instead of batches × numBuckets
     * (0 = caller manages compaction).
-    *
-    * `leaseRevalidateEvery` is the lease-check cadence ([[TableChecks]]):
-    * default 1 — this stream's APPENDS ARE THE DATA (an out-of-process
-    * compaction acquiring the lease mid-stream must stop the very next
-    * increment, not up to 7 batches of appends later; the r15 Similarity-
-    * stream rule, applied uniformly in r16). Raise it only when the
-    * per-batch existence probe measurably matters and no out-of-process
-    * maintenance can run.
     */
   def minHashLshStream(docs: DataFrame, idCol: String, textCol: String,
                        threshold: Double, pairsDir: String, index: LshIndex,
                        shingleN: Int = 3, numHashes: Int = 64,
-                       bandSize: Int = 2, compactEvery: Int = 0,
-                       leaseRevalidateEvery: Int = 1): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+                       bandSize: Int = 2, compactEvery: Int = 0): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     // one maintenance-check memo per STREAM: crashed-swap/existence run on
-    // the first batch, not every batch; the lease re-validates on the
-    // configured cadence ([[TableChecks]])
-    val checks = new TableChecks(revalidateEvery = leaseRevalidateEvery)
+    // the first batch, not every batch; the lease re-validates on every
+    // batch ([[TableChecks]])
+    val checks = new TableChecks
     docs.writeStream.foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
       minHashLshIncrement(batch.toDF(), idCol, textCol, threshold, index,
         pairsDir, batchId, shingleN, numHashes, bandSize, checks)
@@ -1480,14 +1360,10 @@ object Dedup {
     * the largest prefix a replay of the in-flight batch never reads.
     */
   def clusterStream(pairs: DataFrame, state: ClusterState,
-                    compactEvery: Int = 0, maxIters: Int = 20,
-                    leaseRevalidateEvery: Int = 1): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+                    compactEvery: Int = 0, maxIters: Int = 20): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     // one instance per stream = sequential batch ids, so the registry
-    // mapping cache is maintainable (see TableChecks); lease cadence
-    // defaults to every batch — the registry appends ARE the data (the
-    // minHashLshStream rationale)
-    val checks = new TableChecks(revalidateEvery = leaseRevalidateEvery,
-      cacheRegistryMapping = true)
+    // mapping cache is maintainable (see TableChecks)
+    val checks = new TableChecks(cacheRegistryMapping = true)
     pairs.writeStream.foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
       clusterIncrement(batch.toDF(), state, id, maxIters, checks)
       if (compactEvery > 0 && id > 0 && id % compactEvery == 0) {
@@ -1557,7 +1433,7 @@ object Dedup {
                  minLineLen: Int = 1): DataFrame = {
     // the exploded line set feeds the winners aggregate, the occurrence
     // join probe, and the short-line bypass union — persist so the corpus
-    // scan + split run once (the minHashLsh stance: exchange reuse is plan
+    // scan + split run once (the jaccardPairs stance: exchange reuse is plan
     // luck, not contract). Scoped: callers release via Caching.release.
     // Rows are keyed by (id, content hash __r), NOT id alone — the
     // duplicateSpanStats rule (__r is the md5-60 content hash, NOT
@@ -1622,7 +1498,7 @@ object Dedup {
     require(k > 0, s"k must be positive: $k")
     // per-OCCURRENCE window hashes (no distinct: within-doc repeats count);
     // feeds the global count aggregate and the lookup probe — scoped, the
-    // minHashLsh stance; callers release via Caching.release. The token
+    // jaccardPairs stance; callers release via Caching.release. The token
     // array is PROJECTED before wordNGrams (the docGrams/dedupSpans shape):
     // passing tokens(text) inline re-evaluates the regex split inside every
     // element_at — O(n·k) tokenizations per doc, measured 10× slower.

@@ -39,25 +39,6 @@ object Similarity {
   private def definedCosine(nrm: Column): Column =
     nrm > 0 && nrm < lit(Double.PositiveInfinity)
 
-  /** All pairs with cosine >= threshold (ids only — float-free output so the
-    * DuckDB oracle hash-matches bit-for-bit). Norms are precomputed once per
-    * row before the join. O(n²/2) compare — baseline path.
-    */
-  def cosinePairs(df: DataFrame, idCol: String, vecCol: String, threshold: Double): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
-    // zero-norm vectors have no defined cosine: `dot >= t*na*nb` would pass
-    // them (0 >= 0) while a cosine division yields NaN and excludes them —
-    // drop them (and Inf/NaN norms, [[definedCosine]]) so both
-    // formulations (and the DuckDB oracle) agree
-    val withNorm = df.select(col(idCol).as("id"), col(vecCol).as("v"), norm(col(vecCol)).as("nrm"))
-      .filter(definedCosine(col("nrm")))
-    val a = withNorm.toDF("id_a", "va", "na")
-    val b = withNorm.toDF("id_b", "vb", "nb")
-    a.join(b, col("id_a") < col("id_b"))
-      .filter(dot(col("va"), col("vb")) >= lit(threshold) * col("na") * col("nb"))
-      .select(col("id_a").as("vec_id_a"), col("id_b").as("vec_id_b"))
-  }
-
   /** Ranks each query's scored candidates down to k via the bounded
     * [[graft.functions.TopKByScore]] aggregate — partial k-element buffers
     * combine map-side, the shuffle carries queries × k rows, and the full
@@ -78,7 +59,7 @@ object Similarity {
     * null, Inf/NaN-norm) vectors are excluded on both sides — their cosine
     * is undefined or NaN-poisoning ([[definedCosine]]) — so no NaN/null
     * score ever reaches the top-k aggregate. Norms are computed ONCE PER
-    * ROW below the join (the [[cosinePairs]] pattern): the previous
+    * ROW below the join: the previous
     * per-pair `norm(qv)·norm(cv)` ran three O(dim) kernels per candidate
     * on this O(n²) path instead of one.
     */
@@ -292,7 +273,7 @@ object Similarity {
     graft.functions.GraftFunctions.register(spark)
     requireIntegralId(df, idCol, "ivfTopK")
     // zero/Inf/NaN-norm and null vectors out up front ([[definedCosine]] —
-    // the bruteForceTopK/cosinePairs stance), so the exact re-rank's top-k
+    // the bruteForceTopK stance), so the exact re-rank's top-k
     // aggregate never sees a NaN or null score
     val base = df.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
       .filter(definedCosine(norm(col("v"))))
@@ -605,12 +586,11 @@ object Similarity {
     */
   def ivfStream(vecs: DataFrame, idCol: String, vecCol: String, index: IvfIndex,
                 compactEvery: Int = 0): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    // one maintenance-check memo per stream (the TableChecks rationale).
-    // revalidateEvery = 1: these appends ARE the data (not derivable from
-    // any upstream table), so the single-writer lease is asserted every
-    // batch — an out-of-process compaction grabbing the lease mid-stream
-    // must never find even one unleased append to drop in its swap
-    val checks = new TableChecks(revalidateEvery = 1)
+    // one maintenance-check memo per stream ([[TableChecks]]: the lease is
+    // asserted every batch — these appends ARE the data, so an
+    // out-of-process compaction grabbing the lease mid-stream must never
+    // find even one unleased append to drop in its swap)
+    val checks = new TableChecks
     vecs.writeStream.foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
       ivfAppend(batch.toDF(), idCol, vecCol, index, checks)
       if (compactEvery > 0 && id > 0 && id % compactEvery == 0)
@@ -1073,8 +1053,8 @@ object Similarity {
     */
   def ivfPqStream(vecs: DataFrame, idCol: String, vecCol: String, index: IvfPqIndex,
                   compactEvery: Int = 0): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    // per-batch lease revalidation: the ivfStream rationale
-    val checks = new TableChecks(revalidateEvery = 1)
+    // one maintenance-check memo per stream: the ivfStream rationale
+    val checks = new TableChecks
     vecs.writeStream.foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
       ivfPqAppend(batch.toDF(), idCol, vecCol, index, checks)
       if (compactEvery > 0 && id > 0 && id % compactEvery == 0)
@@ -1319,9 +1299,8 @@ object Similarity {
                       threshold: Double, pairsDir: String, index: CosineLshIndex,
                       numBits: Int = 48, bandSize: Int = 2,
                       compactEvery: Int = 0): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    // per-batch lease revalidation (the ivfStream rationale — appends are
-    // the data); the crashed-swap scan alone stays memoized
-    val checks = new graft.ext.TableChecks(revalidateEvery = 1)
+    // one maintenance-check memo per stream (the ivfStream rationale)
+    val checks = new graft.ext.TableChecks
     vecs.writeStream.foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
       cosineLshIncrement(batch.toDF(), idCol, vecCol, threshold, index,
         pairsDir, id, numBits, bandSize, checks)

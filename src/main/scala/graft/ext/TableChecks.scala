@@ -14,17 +14,17 @@ import org.apache.spark.sql.SparkSession
   *
   *  - `ensureWritable` runs the FULL check (lease free + no crashed
   *    compaction swap) once per table per stream, then RE-validates the
-  *    lease — one filesystem existence probe, the cheap half — every
-  *    `revalidateEvery` batches. The crashed-swap scan is genuinely a
-  *    stream-open concern (a swap crashed before this stream started; a
-  *    compaction crashing MID-stream strands its lease, which the
-  *    revalidation catches), but the lease is not: an out-of-process
-  *    compaction acquiring it mid-stream must stop the increments within a
-  *    bounded number of batches, not never. The in-process `compactEvery`
-  *    hooks acquire and release the lease themselves between batches, so a
-  *    revalidation after one passes — no invalidation handshake needed.
-  *    A new JVM makes a new instance, so crash recovery
-  *    (`finishCrashedSwap`) still runs on restart.
+  *    lease — one filesystem existence probe, the cheap half — on every
+  *    call. The crashed-swap scan is genuinely a stream-open concern (a
+  *    swap crashed before this stream started; a compaction crashing
+  *    MID-stream strands its lease, which the revalidation catches), but
+  *    the lease is not: the increments' appends ARE the data, so an
+  *    out-of-process compaction acquiring the lease mid-stream must stop
+  *    the very next increment. The in-process `compactEvery` hooks acquire
+  *    and release the lease themselves between batches, so a revalidation
+  *    after one passes — no invalidation handshake needed. A new JVM makes
+  *    a new instance, so crash recovery (`finishCrashedSwap`) still runs
+  *    on restart.
   *  - `exists` memoizes TRUE only (state tables are created once and never
   *    dropped mid-stream; FALSE re-checks until the first append creates
   *    the table, which the increment records via `markExists`).
@@ -32,12 +32,9 @@ import org.apache.spark.sql.SparkSession
   * The default argument on every increment entry point is a FRESH instance,
   * so a standalone (non-stream) increment call behaves exactly as before.
   */
-final class TableChecks(revalidateEvery: Int = TableChecks.DefaultRevalidateEvery,
-                        val cacheRegistryMapping: Boolean = false) {
-  require(revalidateEvery > 0, s"revalidateEvery must be positive: $revalidateEvery")
-  // batches since the last lease check, per table; absent = never checked
-  private val sinceLeaseCheck =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+final class TableChecks(val cacheRegistryMapping: Boolean = false) {
+  // tables whose full check has run; the lease re-checks on every call
+  private val checked = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private val known = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   // ---- cross-increment registry-mapping cache (opt-in, streams only) ----
@@ -95,18 +92,14 @@ final class TableChecks(revalidateEvery: Int = TableChecks.DefaultRevalidateEver
   def rearmReleaseHook(): Unit = releaseHooked.set(false)
 
   /** Full check (lease free + crashed swap finished) on first call per
-    * table; lease-only revalidation every `revalidateEvery` calls after.
+    * table; lease-only revalidation on every call after.
     */
   def ensureWritable(spark: SparkSession, table: String): Unit = {
-    val prev = sinceLeaseCheck.get(table)
-    if (prev == null) {
-      StateLease.assertFree(spark, table)
+    StateLease.assertFree(spark, table)
+    if (!checked.contains(table)) {
       Dedup.finishCrashedSwap(spark, table)
-      sinceLeaseCheck.put(table, 0)
-    } else if (prev + 1 >= revalidateEvery) {
-      StateLease.assertFree(spark, table)
-      sinceLeaseCheck.put(table, 0)
-    } else sinceLeaseCheck.put(table, prev + 1)
+      checked.add(table)
+    }
     ()
   }
 
@@ -120,15 +113,6 @@ final class TableChecks(revalidateEvery: Int = TableChecks.DefaultRevalidateEver
 
   /** Record that an append/overwrite just created `table`. */
   def markExists(table: String): Unit = { known.add(table); () }
-}
-
-object TableChecks {
-  /** Lease revalidation cadence: an external compaction acquiring the lease
-    * mid-stream stalls the increments within this many batches. 8 existence
-    * probes per 8 batches saved vs per-batch checking, while the detection
-    * window stays seconds-scale at any realistic trigger interval.
-    */
-  val DefaultRevalidateEvery = 8
 }
 
 /** Shared input guards for the operator layer — ONE copy of each check so

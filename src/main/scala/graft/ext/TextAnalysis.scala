@@ -610,7 +610,7 @@ object TextAnalysis {
         tokens(lower(col(textCol))).as("__t"))
       .withColumn("__dl", size(col("__t")).cast("long"))
     // postings feed the corpus-stats derivation (below), the df aggregate
-    // AND the probe join — scoped, the minHashLsh stance; callers release
+    // AND the probe join — scoped, the jaccardPairs stance; callers release
     // via Caching.release. ONE tokenize scan total: round 17 cached the
     // tokenized frame itself to serve a separate stats pass, but the fat
     // __t token arrays were the worst possible cache payload (x59's

@@ -275,89 +275,6 @@ case class BottomKIdsByLong(
     copy(scoreExpr = newChildren(0), idExpr = newChildren(1), kExpr = newChildren(2))
 }
 
-/** `graft_minhash_bands_agg(shingle, numHashes, bandSize)` — the MinHash
-  * band keys as an INCREMENTAL aggregate over a document's shingle rows:
-  * the buffer is the numHashes-long signature (elementwise-min merge, so
-  * partials combine map-side), and no shingle list is ever materialized —
-  * the collect_list formulation this replaces builds each document's
-  * entire shingle array in one row, an OOM hazard for million-shingle
-  * documents and a fat shuffle for everyone else (the signature buffer is
-  * a fixed numHashes × 8 bytes regardless of document size). Per-shingle
-  * math is [[Lsh.updateSig]] — bit-identical to `graft_minhash_bands` by
-  * construction. MinHash is duplicate-insensitive (min is idempotent), so
-  * multiset input gives the set signature.
-  */
-case class MinHashBandsAgg(
-    shingleExpr: Expression, numHashesExpr: Expression, bandSizeExpr: Expression,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] {
-
-  private lazy val numHashes: Int = Lsh.literalInt(numHashesExpr, "numHashes")
-  private lazy val bandSize: Int = {
-    val bs = Lsh.literalInt(bandSizeExpr, "bandSize")
-    require(bs > 0 && numHashes > 0 && numHashes % bs == 0,
-      s"graft_minhash_bands_agg: bandSize $bs must divide numHashes $numHashes")
-    bs
-  }
-
-  override def children: Seq[Expression] = Seq(shingleExpr, numHashesExpr, bandSizeExpr)
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  // without this, ANY shingle type was accepted and stringified via
-  // toString — an array<string> column (the scalar sibling's input shape)
-  // hashed as "UnsafeArrayData@…" object identities: well-formed,
-  // meaningless band keys with no error
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (shingleExpr.dataType,
-      for { nh <- Lsh.literalIntOpt(numHashesExpr); bs <- Lsh.literalIntOpt(bandSizeExpr) }
-        yield nh > 0 && bs > 0 && nh % bs == 0) match {
-      case (org.apache.spark.sql.types.StringType, Some(true)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case _ => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        "graft_minhash_bands_agg requires (string shingle, literal numHashes, " +
-          "literal bandSize dividing it)")
-    }
-
-  override def createAggregationBuffer(): Array[Long] = Array.fill(numHashes)(Long.MaxValue)
-
-  override def update(sig: Array[Long], input: InternalRow): Array[Long] = {
-    val s = shingleExpr.eval(input)
-    if (s != null) Lsh.updateSig(sig, s.toString)
-    sig
-  }
-
-  override def merge(sig: Array[Long], other: Array[Long]): Array[Long] = {
-    var j = 0
-    while (j < sig.length) { if (other(j) < sig(j)) sig(j) = other(j); j += 1 }
-    sig
-  }
-
-  override def eval(sig: Array[Long]): Any =
-    new GenericArrayData(Lsh.bandKeys(sig, bandSize))
-
-  override def serialize(sig: Array[Long]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    val d = new DataOutputStream(out)
-    sig.foreach(d.writeLong)
-    d.flush()
-    out.toByteArray
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val d = new DataInputStream(new java.io.ByteArrayInputStream(bytes))
-    Array.fill(numHashes)(d.readLong())
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): MinHashBandsAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): MinHashBandsAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): MinHashBandsAgg =
-    copy(shingleExpr = newChildren(0), numHashesExpr = newChildren(1), bandSizeExpr = newChildren(2))
-}
-
 /** `graft_qsample(hash, value, k)` — a deterministic bounded uniform row
   * sample for quantile estimation: per group, the values of the `k` rows
   * with the smallest `hash` (a uniform 60-bit hash of a UNIQUE row id),

@@ -105,15 +105,6 @@ object Bloom {
     while (i < words.length) { words(i) = d.readLong(); i += 1 }
     (words, numHashes)
   }
-
-  /** Probe a serialized filter; used by the interpreted and codegen paths
-    * of [[BloomMightContain]]. Deserialization cost is amortized by the
-    * expression's per-partition cache, not here.
-    */
-  def mightContainBytes(bytes: Array[Byte], hash: Long): Boolean = {
-    val (words, k) = fromBytes(bytes)
-    mightContain(words, k, hash)
-  }
 }
 
 /** `graft_bloom(hash, numBits, numHashes)` — aggregate a column of 64-bit
@@ -144,7 +135,7 @@ case class BloomFilterAgg(
 
   override def checkInputDataTypes(): TypeCheckResult = hashExpr.dataType match {
     case LongType | IntegerType =>
-      // validate the SHAPE here too (the TopKByScore/MinHashBandsAgg
+      // validate the SHAPE here too (the TopKByScore/MinHashBands
       // stance): a bad numBits used to pass analysis and throw per-task
       // from the first update() — hours into a 100 TB scan instead of at
       // plan time

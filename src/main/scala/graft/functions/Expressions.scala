@@ -440,8 +440,6 @@ object GraftFunctions {
     ("graft_topk", classOf[TopKByScore], es => TopKByScore(es(0), es(1), es(2))),
     ("graft_bottomk_long", classOf[BottomKIdsByLong],
       es => BottomKIdsByLong(es(0), es(1), es(2))),
-    ("graft_minhash_bands_agg", classOf[MinHashBandsAgg],
-      es => MinHashBandsAgg(es(0), es(1), es(2))),
     ("graft_repetition", classOf[RepetitionStats], es => RepetitionStats(es.head)),
     ("graft_kmv", classOf[KMinValues], es => KMinValues(es(0), es(1))),
     ("graft_qsample", classOf[SampleByMinHash], es => SampleByMinHash(es(0), es(1), es(2))),

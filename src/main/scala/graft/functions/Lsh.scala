@@ -101,12 +101,10 @@ object Lsh {
   }
 
   /** Folds one shingle into a MinHash signature in place (Kirsch–
-    * Mitzenmacher double hashing over murmur3 string hashes) — THE single
-    * per-shingle kernel, shared by the scalar expression and the
-    * incremental aggregate so their signatures are bit-identical by
-    * construction.
+    * Mitzenmacher double hashing over murmur3 string hashes) — the
+    * per-shingle kernel of [[minHashBands]].
     */
-  def updateSig(sig: Array[Long], s: String): Unit = {
+  private def updateSig(sig: Array[Long], s: String): Unit = {
     val h1 = scala.util.hashing.MurmurHash3.stringHash(s, 0).toLong << 32 |
       (scala.util.hashing.MurmurHash3.stringHash(s, 1).toLong & 0xffffffffL)
     val h2 = scala.util.hashing.MurmurHash3.stringHash(s, 2).toLong << 32 |
@@ -120,7 +118,7 @@ object Lsh {
   }
 
   /** Band keys from a finished signature: rolling 31-hash per band slice. */
-  def bandKeys(sig: Array[Long], bandSize: Int): Array[Any] = {
+  private def bandKeys(sig: Array[Long], bandSize: Int): Array[Any] = {
     val nBands = sig.length / bandSize
     val keys = new Array[Any](nBands)
     var b = 0
@@ -135,10 +133,9 @@ object Lsh {
   }
 
   /** Per-doc MinHash band keys — one pass over the shingle array. NULL
-    * shingle elements are SKIPPED, matching MinHashBandsAgg's per-row null
-    * skip exactly — the two forms advertise bit-identical signatures, and
-    * an unguarded getUTF8String(i).toString NPE'd the task with no
-    * context on the exact input the aggregate silently accepted.
+    * shingle elements are SKIPPED: a NULL contributes no shingle, so the
+    * keys equal those of the same array without it (an unguarded
+    * getUTF8String(i).toString NPE'd the task with no context).
     */
   def minHashBands(sh: ArrayData, numHashes: Int, bandSize: Int): ArrayData = {
     val sig = Array.fill(numHashes)(Long.MaxValue)

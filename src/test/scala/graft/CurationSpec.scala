@@ -399,8 +399,7 @@ class CurationSpec extends SparkSpec {
         org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType)))),
       Seq("doc_id"), "left_semi")
-    val residual = graft.ext.Dedup.minHashLsh(
-      graft.ext.Dedup.wordShingles(survivors, "doc_id", "text", 3), 0.5).count()
+    val residual = graft.ext.Dedup.minHashLshDocs(survivors, "doc_id", "text", 0.5).count()
     graft.Caching.release(spark)
     assert(residual == 0L, s"$residual near-dup pairs survived the collapse")
   }
@@ -1313,15 +1312,16 @@ class CurationSpec extends SparkSpec {
     val blob = inserted.toSeq.toDF("h")
       .agg(call_function("graft_bloom", col("h"), lit(1 << 15), lit(5)).as("b"))
       .head.getAs[Array[Byte]](0)
-    inserted.foreach(h =>
-      assert(graft.functions.Bloom.mightContainBytes(blob, h), s"false negative on $h"))
-    val fp = others.count(graft.functions.Bloom.mightContainBytes(blob, _))
+    val (words, k) = graft.functions.Bloom.fromBytes(blob)
+    def probe(h: Long): Boolean = graft.functions.Bloom.mightContain(words, k, h)
+    inserted.foreach(h => assert(probe(h), s"false negative on $h"))
+    val fp = others.count(probe)
     assert(fp <= 40, s"FP count $fp of ${others.length} far above the ~0.17% analytic rate")
     // the probe expression agrees with the direct probe on every hash
     val viaExpr = (inserted ++ others).toSeq.toDF("h")
       .filter(call_function("graft_bloom_contains", lit(blob), col("h")))
       .collect().map(_.getLong(0)).toSet
-    assert(viaExpr == (inserted ++ others.filter(graft.functions.Bloom.mightContainBytes(blob, _))).toSet)
+    assert(viaExpr == (inserted ++ others.filter(probe)).toSet)
   }
 
   test("bloom pre-filter sits on the train scan side, and the plan stays equi-join-only") {
@@ -1436,7 +1436,7 @@ class CurationSpec extends SparkSpec {
     }
     // the real corpus: no x03 near-dup pair may straddle splits
     val d = docs
-    val pairs = Dedup.minHashLsh(Dedup.wordShingles(d, "doc_id", "text", 3), 0.5)
+    val pairs = Dedup.minHashLshDocs(d, "doc_id", "text", 0.5)
       .select("d1", "d2")
     val real = Sampling.splitByComponent(d, "doc_id", pairs, Queries.SplitSeed, splits)
       .select("doc_id", "split").collect().map(r => r.getLong(0) -> r.getString(1)).toMap

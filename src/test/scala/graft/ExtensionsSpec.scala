@@ -11,45 +11,43 @@ class ExtensionsSpec extends SparkSpec {
   private def docs = Tables.load(spark, sf(), "documents")
   private def emb = Tables.load(spark, sf(), "embeddings")
 
+  private def pairRows(df: org.apache.spark.sql.DataFrame): Set[SimilarityReference.Pair] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+      r.getDouble(4))).toSet
+
   test("minhash LSH finds exactly the exact-jaccard pairs at threshold 0.5") {
-    val shingles = Dedup.wordShingles(docs, "doc_id", "text", 3)
-    val exact = Dedup.jaccardPairs(shingles, 0.5).select("d1", "d2")
+    val exact = Dedup.jaccardPairs(Dedup.wordShingles(docs, "doc_id", "text", 3), 0.5)
+      .select("d1", "d2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val lsh = Dedup.minHashLshDocs(docs, "doc_id", "text", 0.5).select("d1", "d2")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val lsh = Dedup.minHashLsh(shingles, 0.5).select("d1", "d2")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    graft.Caching.release(spark)
     assert(exact.nonEmpty)
     assert(lsh == exact)
   }
 
-  test("minHashLshDocs (set-based, r17) is row-identical to minHashLsh(wordShingles)") {
-    // the optimization-round restructure: one narrow in-row pass for
-    // sets+bands+sizes must not move a single pair, count or jaccard value
-    val viaShingles = Dedup.minHashLsh(
+  test("minHashLshDocs is row-identical to the grouped-set reference model") {
+    // one narrow in-row pass for sets+bands+sizes must not move a single
+    // pair, count or jaccard value against the straight-line definition
+    val model = SimilarityReference.minHashPairs(
       Dedup.wordShingles(docs, "doc_id", "text", 3), 0.5)
-      .collect().map(_.toSeq).toSet
+    val viaDocs = pairRows(Dedup.minHashLshDocs(docs, "doc_id", "text", 0.5))
     graft.Caching.release(spark)
-    val viaDocs = Dedup.minHashLshDocs(docs, "doc_id", "text", 0.5)
-      .collect().map(_.toSeq).toSet
-    graft.Caching.release(spark)
-    assert(viaShingles.nonEmpty)
-    assert(viaDocs == viaShingles,
-      s"set-based path diverged: docs=${viaDocs.size} shingles=${viaShingles.size}")
+    assert(model.nonEmpty)
+    assert(viaDocs == model,
+      s"set-based path diverged: docs=${viaDocs.size} model=${model.size}")
   }
 
-  test("minHashLshCrossDocs (set-based, r17) is row-identical to minHashLshCross") {
+  test("minHashLshCrossDocs is row-identical to the grouped-set reference model") {
     val corpus = docs.filter(col("doc_id") % 2 === 0)
     val ref = docs.filter(col("doc_id") % 2 =!= 0)
-    val viaShingles = Dedup.minHashLshCross(
+    val model = SimilarityReference.minHashCrossPairs(
       Dedup.wordShingles(corpus, "doc_id", "text", 3),
       Dedup.wordShingles(ref, "doc_id", "text", 3), 0.5)
-      .collect().map(_.toSeq).toSet
+    val viaDocs = pairRows(Dedup.minHashLshCrossDocs(corpus, ref, "doc_id", "text", 0.5))
     graft.Caching.release(spark)
-    val viaDocs = Dedup.minHashLshCrossDocs(corpus, ref, "doc_id", "text", 0.5)
-      .collect().map(_.toSeq).toSet
-    graft.Caching.release(spark)
-    assert(viaShingles.nonEmpty)
-    assert(viaDocs == viaShingles,
-      s"set-based cross path diverged: docs=${viaDocs.size} shingles=${viaShingles.size}")
+    assert(model.nonEmpty)
+    assert(viaDocs == model,
+      s"set-based cross path diverged: docs=${viaDocs.size} model=${model.size}")
   }
 
   test("cross-corpus LSH pairs equal the exact cross-Jaccard; only between-side pairs emit") {
@@ -61,9 +59,7 @@ class ExtensionsSpec extends SparkSpec {
       .select("d1", "d2").collect().map(r => (r.getLong(0), r.getLong(1)))
       .filter { case (a, b) => (a % 2 == 0) != (b % 2 == 0) }
       .map { case (a, b) => if (a % 2 == 0) (a, b) else (b, a) }.toSet
-    val cross = Dedup.minHashLshCross(
-        Dedup.wordShingles(corpus, "doc_id", "text", 3),
-        Dedup.wordShingles(ref, "doc_id", "text", 3), 0.5)
+    val cross = Dedup.minHashLshCrossDocs(corpus, ref, "doc_id", "text", 0.5)
       .select("corpus_id", "ref_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     graft.Caching.release(spark)
@@ -86,9 +82,7 @@ class ExtensionsSpec extends SparkSpec {
       3L -> "unrelated reference text goes here",
       8L -> "same id lives in both frames")
       .toDF("doc_id", "text")
-    val pairs = Dedup.minHashLshCross(
-        Dedup.wordShingles(corpus, "doc_id", "text", 3),
-        Dedup.wordShingles(ref, "doc_id", "text", 3), 0.5)
+    val pairs = Dedup.minHashLshCrossDocs(corpus, ref, "doc_id", "text", 0.5)
       .select("corpus_id", "ref_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     graft.Caching.release(spark)
@@ -118,9 +112,7 @@ class ExtensionsSpec extends SparkSpec {
         .select("corpus_id", "ref_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       graft.Caching.release(spark)
-      val viaFrames = Dedup.minHashLshCross(
-          Dedup.wordShingles(corpus, "doc_id", "text", 3),
-          Dedup.wordShingles(ref, "doc_id", "text", 3), 0.5)
+      val viaFrames = Dedup.minHashLshCrossDocs(corpus, ref, "doc_id", "text", 0.5)
         .select("corpus_id", "ref_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       graft.Caching.release(spark)
@@ -600,8 +592,7 @@ class ExtensionsSpec extends SparkSpec {
     val streamed = spark.read.parquet(pairsDir)
       .select("d1", "d2", "inter_cnt", "union_cnt")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    val batch = Dedup.minHashLsh(
-        Dedup.wordShingles(all.toDF("doc_id", "text"), "doc_id", "text", 3), 0.5)
+    val batch = Dedup.minHashLshDocs(all.toDF("doc_id", "text"), "doc_id", "text", 0.5)
       .select("d1", "d2", "inter_cnt", "union_cnt")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     graft.Caching.release(spark)
@@ -704,8 +695,7 @@ class ExtensionsSpec extends SparkSpec {
     // clean-run expectation (computed on a fresh index elsewhere in this
     // suite's shapes): cross-batch (21,22),(21,23) and in-batch (22,23);
     // duplicated index rows must inflate nothing
-    val clean = Dedup.minHashLsh(
-        Dedup.wordShingles(b1.union(b2), "doc_id", "text", 3), 0.5)
+    val clean = Dedup.minHashLshDocs(b1.union(b2), "doc_id", "text", 0.5)
       .select("d1", "d2", "inter_cnt", "union_cnt")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     graft.Caching.release(spark)
@@ -728,8 +718,7 @@ class ExtensionsSpec extends SparkSpec {
     val b1 = Seq(41L -> s"$p30 one").toDF("doc_id", "text")
     val b2 = Seq(42L -> s"$p30 two", 43L -> s"$p30 two three").toDF("doc_id", "text")
     val b3 = Seq(44L -> s"$p30 four").toDF("doc_id", "text")
-    val cleanAll = Dedup.minHashLsh(
-        Dedup.wordShingles(b1.union(b2).union(b3), "doc_id", "text", 3), 0.5)
+    val cleanAll = Dedup.minHashLshDocs(b1.union(b2).union(b3), "doc_id", "text", 0.5)
       .select("d1", "d2", "inter_cnt", "union_cnt")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     // crash-after-batch-2 windows: subsets of (0=dump, 1=bands, 2=shingles)
@@ -831,9 +820,8 @@ class ExtensionsSpec extends SparkSpec {
     val streamed = spark.read.parquet(pairsDir)
       .select("d1", "d2", "inter_cnt", "union_cnt")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    val batch = Dedup.minHashLsh(
-        Dedup.wordShingles(Seq(11L -> s"$p30 one", 12L -> s"$p30 two",
-          13L -> s"$p30 three").toDF("doc_id", "text"), "doc_id", "text", 3), 0.5)
+    val batch = Dedup.minHashLshDocs(Seq(11L -> s"$p30 one", 12L -> s"$p30 two",
+          13L -> s"$p30 three").toDF("doc_id", "text"), "doc_id", "text", 0.5)
       .select("d1", "d2", "inter_cnt", "union_cnt")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     dropTableHard(idx.bandsTable)
@@ -923,7 +911,7 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("connectedComponents on the real LSH pairs refines keepList consistently") {
-    val pairs = Dedup.minHashLsh(Dedup.wordShingles(docs, "doc_id", "text", 3), 0.5)
+    val pairs = Dedup.minHashLshDocs(docs, "doc_id", "text", 0.5)
     val comp = Dedup.connectedComponents(pairs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val rawPairs = pairs.select("d1", "d2").collect()
@@ -1898,7 +1886,7 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("cosine LSH pairs equal brute-force pairs at threshold 0.35 (x05 recall = 1)") {
-    val brute = Similarity.cosinePairs(emb, "vec_id", "embedding", 0.35)
+    val brute = SimilarityReference.cosinePairs(emb, "vec_id", "embedding", 0.35)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val lsh = Similarity.cosineLshPairs(emb, "vec_id", "embedding", 0.35)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -2352,7 +2340,7 @@ class ExtensionsSpec extends SparkSpec {
     graft.Caching.release(spark)
     // expected from the engine-verified brute-force pair set: a train doc
     // leaks iff it pairs with a holdout doc at cosine >= 0.35
-    val pairs = Similarity.cosinePairs(emb, "vec_id", "embedding", 0.35)
+    val pairs = SimilarityReference.cosinePairs(emb, "vec_id", "embedding", 0.35)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val leaked = pairs.flatMap { case (a, b) =>
       Seq(a, b).filter(x => x % 10 != 7 && (if (x == a) b else a) % 10 == 7)
@@ -2382,7 +2370,7 @@ class ExtensionsSpec extends SparkSpec {
     assert(!topk.map(_.getLong(0)).exists(_ >= 9L), "corrupt queries must drop too")
     assert(topk.forall(r => !r.getDouble(3).isNaN), "no NaN score may survive")
     // the pair path shares the gate: only the two genuine near-pairs emit
-    val pairs = Similarity.cosinePairs(df, "vec_id", "embedding", 0.5).collect()
+    val pairs = SimilarityReference.cosinePairs(df, "vec_id", "embedding", 0.5).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs == Set((1L, 2L), (3L, 4L)), s"got $pairs")
     // and the SRP path (its srpBase feeds cosineLshPairs): corrupt rows drop
@@ -2808,12 +2796,6 @@ class ExtensionsSpec extends SparkSpec {
     val a2 = intercept[org.apache.spark.sql.AnalysisException](
       Seq(1L).toDF("h").agg(call_function("graft_kmv", col("h"), lit(0))).collect())
     assert(a2.getMessage.contains("literal int k > 0"), a2.getMessage)
-    // the banded-minhash AGGREGATE only accepts string shingles: an array
-    // column (the scalar sibling's shape) would hash object identities
-    val arr = Seq(Tuple1(Seq("a", "b"))).toDF("ss")
-    val a3 = intercept[org.apache.spark.sql.AnalysisException](arr.agg(
-      call_function("graft_minhash_bands_agg", col("ss"), lit(8), lit(2))).collect())
-    assert(a3.getMessage.contains("string shingle"), a3.getMessage)
   }
 
   test("winnowing deque equals the naive sliding-window minima (order and distinct)") {

@@ -274,8 +274,14 @@ class FileFormatsSpec extends SparkSpec {
         val observed = progress.flatMap(p => Option(p.observedMetrics.get("stage1")))
           .map(_.getLong(0)).sum
         assert(observed == 5, s"observed=$observed")
-        assert(listener.stats.containsKey("obs_out"))
-        assert(listener.stats.get("obs_out").rows == 5)
+        // the listener bus delivers progress events asynchronously, after
+        // processAllAvailable returns: wait for the second batch's event
+        import org.scalatest.concurrent.Eventually._
+        import org.scalatest.time.{Seconds, Span}
+        eventually(timeout(Span(10, Seconds))) {
+          assert(listener.stats.containsKey("obs_out"))
+          assert(listener.stats.get("obs_out").rows == 5)
+        }
       } finally q.stop()
     } finally spark.streams.removeListener(listener)
   }

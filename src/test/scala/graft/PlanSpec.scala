@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, count, lit, sum}
+import org.apache.spark.sql.functions.{col, count, lit, posexplode, sum}
 
 import graft.sinks.Sinks
 
@@ -463,8 +463,10 @@ class PlanSpec extends SparkSpec {
       Dedup.minHashLshIncrement(Seq(1L -> s"$p30 a").toDF("doc_id", "text"),
         "doc_id", "text", 0.5, idx, java.nio.file.Files
           .createTempDirectory("graft_pin").resolve("pairs").toString, 0L)
-      val batchBands = Dedup.signatureBands(
-        Dedup.wordShingles(Seq(2L -> s"$p30 b").toDF("doc_id", "text"), "doc_id", "text", 3))
+      // the production band shape: posexplode of the in-row band keys
+      val batchBands = Dedup.shingleSetsWithBands(Seq(2L -> s"$p30 b").toDF("doc_id", "text"),
+          "doc_id", "text", 3, 64, 2)
+        .select(col("id"), posexplode(col("bk")).as(Seq("band", "band_key")))
       val p = Dedup.crossCandidates(batchBands, idx)
         .queryExecution.executedPlan.toString
       // the stored corpus side is bucketed on the join keys and must be
@@ -518,8 +520,9 @@ class PlanSpec extends SparkSpec {
       Caching.release(spark)
       // the candidate probe join itself: stored bands side pre-partitioned,
       // only the corpus side shuffles (the crossCandidates pin, oriented)
-      val corpusBands = Dedup.signatureBands(Dedup.wordShingles(
-        Seq(2L -> s"$p30 b").toDF("doc_id", "text"), "doc_id", "text", 3))
+      val corpusBands = Dedup.shingleSetsWithBands(Seq(2L -> s"$p30 b").toDF("doc_id", "text"),
+          "doc_id", "text", 3, 64, 2)
+        .select(col("id"), posexplode(col("bk")).as(Seq("band", "band_key")))
       val probe = spark.table(idx.bandsTable).toDF("ref_id", "band", "band_key")
         .join(corpusBands.toDF("corpus_id", "band", "band_key"),
           Seq("band", "band_key"))

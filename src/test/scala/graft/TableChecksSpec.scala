@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 import graft.ext.{ConcurrentActions, StateLease, TableChecks}
 
 /** The round-11 streaming-overhead machinery has load-bearing semantics of
-  * its own: TableChecks trades per-batch lease checks for per-stream ones
+  * its own: TableChecks trades per-batch crashed-swap scans for per-stream ones
   * (so its memoization rules ARE the safety argument) and ConcurrentActions
   * must never swallow a failure or lose the caller's active session.
   */
@@ -44,29 +44,25 @@ class TableChecksSpec extends SparkSpec {
     assert(c.exists(spark, t))
   }
 
-  test("ensureWritable runs lease + crashed-swap recovery once per table, revalidates the lease on a cadence") {
+  test("ensureWritable: crashed-swap recovery once per table, lease check every call") {
     val t = "tchk_writable"
     dropTableHard(t); dropTableHard(t + "__compact")
     import spark.implicits._
     try {
       // crashed-swap state: data lives only under __compact
       Seq(1L).toDF("id").write.format("parquet").saveAsTable(t + "__compact")
-      val c = new TableChecks(revalidateEvery = 3)
+      val c = new TableChecks
       c.ensureWritable(spark, t)
       assert(spark.catalog.tableExists(t) && !spark.catalog.tableExists(t + "__compact"),
         "first ensureWritable must finish the crashed swap")
-      // a lease taken AFTER the first check is tolerated only until the
-      // next revalidation: batches 2 and 3 pass on the memo, batch 4
-      // (revalidateEvery = 3 past the last check) re-probes and fails
+      // a lease taken AFTER the first check stops the very next call: the
+      // increments' appends are the data, so no batch may pass on the memo
       StateLease.acquire(spark, t, "external compaction")
-      try {
-        c.ensureWritable(spark, t)
-        c.ensureWritable(spark, t)
-        intercept[IllegalStateException](c.ensureWritable(spark, t))
-      } finally StateLease.release(spark, t)
-      // a passing revalidation resets the cadence (and must not re-run the
-      // crashed-swap scan: plant a fresh __compact table and confirm it is
-      // NOT swapped — proving only the cheap lease probe re-ran)
+      try intercept[IllegalStateException](c.ensureWritable(spark, t))
+      finally StateLease.release(spark, t)
+      // later calls must not re-run the crashed-swap scan: plant a fresh
+      // __compact table and confirm it is NOT swapped — proving only the
+      // cheap lease probe re-ran
       Seq(2L).toDF("id").write.format("parquet").saveAsTable(t + "__compact")
       (1 to 7).foreach(_ => c.ensureWritable(spark, t))
       assert(spark.catalog.tableExists(t + "__compact"),
