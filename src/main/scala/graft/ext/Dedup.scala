@@ -752,28 +752,6 @@ object Dedup {
     }
   }
 
-  /** Compacts one bucketed index table back to `numBuckets` files: the
-    * append-per-micro-batch growth pattern ([[minHashLshIncrement]] adds
-    * `numBuckets` files per batch) is rewritten as ONE file per bucket,
-    * dropping the duplicate rows an at-least-once replay may have appended.
-    * The rewrite goes to a sibling `<table>__compact` with the SAME bucket
-    * spec, then swaps names — so the no-exchange probe-join contract
-    * (PlanSpec's `Bucketed: true` pin) holds before, during, and after.
-    *
-    * The `repartition(numBuckets, bucketCols)` aligns write tasks with
-    * bucket ids (both sides hash with murmur3 pmod numBuckets), so each
-    * task holds exactly one bucket and writes at most one file (empty
-    * buckets write none); the
-    * duplicate-drop then runs partition-local (hash-partitioning on a
-    * subset of the distinct columns satisfies its clustering — no second
-    * exchange).
-    *
-    * Crash safety: a crash after the DROP but before the RENAME leaves the
-    * data in `<table>__compact` only; the next call (or [[compactIndex]])
-    * finishes the swap before doing anything else. Run compaction while no
-    * increment is writing (the usual table-maintenance window — between
-    * micro-batches or on a paused stream).
-    */
   /** Finishes a [[compactBucketedTable]] swap that crashed between its
     * DROP and RENAME — the data then lives only in `<table>__compact`.
     * EVERY state-reading path (the increments as well as compaction
@@ -789,6 +767,27 @@ object Dedup {
     if (!spark.catalog.tableExists(table) && spark.catalog.tableExists(table + "__compact"))
       spark.sql(s"ALTER TABLE ${table}__compact RENAME TO $table")
 
+  /** Compacts one bucketed index table back to `numBuckets` files: the
+    * append-per-micro-batch growth pattern ([[minHashLshIncrement]] adds
+    * `numBuckets` files per batch) is rewritten as ONE file per bucket,
+    * dropping the duplicate rows an at-least-once replay may have appended.
+    * The rewrite goes to a sibling `<table>__compact` with the SAME bucket
+    * spec, then swaps names — so the no-exchange probe-join contract
+    * (PlanSpec's `Bucketed: true` pin) holds before, during, and after.
+    *
+    * The `repartition(numBuckets, bucketCols)` aligns write tasks with
+    * bucket ids (both sides hash with murmur3 pmod numBuckets), so each
+    * task holds exactly one bucket and writes at most one file (empty
+    * buckets write none); the duplicate-drop then runs partition-local
+    * (hash-partitioning on a subset of the distinct columns satisfies its
+    * clustering — no second exchange).
+    *
+    * Crash safety: a crash after the DROP but before the RENAME leaves the
+    * data in `<table>__compact` only; the next call (or [[compactIndex]])
+    * finishes the swap before doing anything else. Run compaction while no
+    * increment is writing (the usual table-maintenance window — between
+    * micro-batches or on a paused stream).
+    */
   private[graft] def compactBucketedTable(spark: org.apache.spark.sql.SparkSession,
                                           table: String, numBuckets: Int,
                                           bucketCols: Seq[String],

@@ -48,12 +48,35 @@ object Similarity {
     */
   private def topKRank(scored: DataFrame, k: Int): DataFrame = {
     graft.functions.GraftFunctions.register(scored.sparkSession)
-    scored.groupBy("query_id")
-      .agg(call_function("graft_topk", col("cos"), col("nbr_id"), lit(k)).as("tk"))
-      .select(col("query_id"), posexplode(col("tk")).as(Seq("pos", "s")))
+    ranked(scored.groupBy("query_id")
+      .agg(call_function("graft_topk", col("cos"), col("nbr_id"), lit(k)).as("tk")))
+  }
+
+  /** (query_id, tk) → one (query_id, rank, nbr_id, cos) row per entry. */
+  private def ranked(tk: DataFrame): DataFrame =
+    tk.select(col("query_id"), posexplode(col("tk")).as(Seq("pos", "s")))
       .select(col("query_id"), (col("pos") + 1).cast("int").as("rank"),
         col("s.nbr_id").as("nbr_id"), col("s.cos").as("cos"))
-  }
+
+  /** The shortlist-then-re-rank rule of [[pqTopK]] and [[ivfPqQuery]], in
+    * ONE bounded aggregate over (query, candidate) rows carrying
+    * (query_id, id, lut, codes, qnrm, nrm, qv, v): per query the
+    * `overfetch` best candidates by ADC cosine (`graft_pq_adc`, codegen)
+    * form the shortlist, each admitted candidate carries its exact cosine
+    * dot(qv, v) / (qnrm·nrm) — computed only on admission — and the top k
+    * by exact cosine come out in [[topKRank]]'s shape. Both norms are
+    * [[normOf]], the same fold as `norm(col)`, so every cosine is
+    * bit-equal to the one [[bruteForceTopK]] computes for the pair. No
+    * exchange keys on the candidate id.
+    */
+  private def adcTopK(cands: DataFrame, k: Int, overfetch: Int): DataFrame =
+    ranked(cands
+      .select(col("query_id"), col("id").as("nbr_id"), col("qv"), col("v"), col("qnrm"), col("nrm"),
+        (call_function("graft_pq_adc", col("lut"), col("codes")) /
+          (col("qnrm") * col("nrm"))).as("adc_cos"))
+      .groupBy("query_id")
+      .agg(call_function("graft_topk", col("adc_cos"), col("nbr_id"), lit(overfetch),
+        dot(col("qv"), col("v")) / (col("qnrm") * col("nrm")), lit(k)).as("tk")))
 
   /** Brute-force cosine top-k neighbors for each query row. Zero-norm (and
     * null, Inf/NaN-norm) vectors are excluded on both sides — their cosine
@@ -767,9 +790,10 @@ object Similarity {
   }
 
   /** Encode each corpus vector as m one-byte nearest-centroid codes plus
-    * its exact norm (the cosine denominator PQ cannot reconstruct):
-    * (id, codes binary, nrm). Zero-norm vectors are excluded — the
-    * [[bruteForceTopK]] undefined-cosine stance.
+    * its exact norm (the cosine denominator PQ cannot reconstruct), next
+    * to the vector itself for the exact re-rank: (id, v, codes binary,
+    * nrm). Zero-norm vectors are excluded — the [[bruteForceTopK]]
+    * undefined-cosine stance.
     */
   def pqEncode(df: DataFrame, idCol: String, vecCol: String, model: PqModel): DataFrame = {
     val spark = df.sparkSession
@@ -780,14 +804,15 @@ object Similarity {
     df.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
       .filter(definedCosine(norm(col("v"))))
       .as[(Long, Array[Float])]
-      .map { case (id, v) => (id, encodeOne(bc.value, id, v), normOf(v)) }
-      .toDF("id", "codes", "nrm")
+      .map { case (id, v) => (id, v, encodeOne(bc.value, id, v), normOf(v)) }
+      .toDF("id", "v", "codes", "nrm")
   }
 
   /** One flattened m×ksub inner-product lookup table per query:
     * lut[sub·ksub + c] = <q_sub, codebook(sub)(c)> — the per-query setup
     * cost that makes each candidate score m array reads
-    * ([[graft.functions.PqAdcScore]]).
+    * ([[graft.functions.PqAdcScore]]) — with the query's norm and vector
+    * for the exact re-rank: (query_id, lut, qnrm, qv).
     */
   private def pqLuts(queries: DataFrame, idCol: String, vecCol: String,
                      model: PqModel): DataFrame = {
@@ -797,8 +822,8 @@ object Similarity {
     queries.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
       .filter(definedCosine(norm(col("v"))))
       .as[(Long, Array[Float])]
-      .map { case (id, v) => (id, buildLut(bc.value, id, v), normOf(v)) }
-      .toDF("query_id", "lut", "qnrm")
+      .map { case (id, v) => (id, buildLut(bc.value, id, v), normOf(v), v) }
+      .toDF("query_id", "lut", "qnrm", "qv")
   }
 
   /** PQ-ADC approximate top-k with exact re-rank: corpus vectors compress
@@ -812,12 +837,16 @@ object Similarity {
     * bit-for-bit (the oracle configuration); at production overfetch
     * (4–10×k) recall follows the PQ reconstruction quality (spec-pinned).
     *
-    * Scale shape: the corpus side streams its (id, codes, nrm) rows —
-    * m+8 bytes a vector instead of 4·dim — through one broadcast
-    * nested-loop join against the tiny query LUT table; no exchange ever
-    * touches the corpus side before the bounded aggregate. Compose with
-    * [[ivfBuild]]-style cluster routing to cut the scanned fraction too:
-    * PQ shrinks bytes-per-candidate, IVF shrinks candidates.
+    * Scale shape: the corpus side streams its encoded (id, v, codes, nrm)
+    * rows through one broadcast nested-loop join against the tiny query
+    * LUT table, and the shortlist and its exact re-rank both happen in the
+    * one bounded aggregate of [[adcTopK]]: every pair pays an m-entry ADC
+    * lookup, only shortlist admissions compute the O(dim) exact cosine
+    * (every candidate row still carries its vector to the aggregate), and
+    * no exchange ever touches the corpus side — there is no second corpus
+    * pass to re-score the shortlist. Compose with [[ivfBuild]]-style
+    * cluster routing to cut the scanned fraction too: PQ shrinks the work
+    * per candidate, IVF shrinks candidates.
     */
   def pqTopK(corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
              k: Int, m: Int = 8, ksub: Int = 16, overfetch: Int = 100,
@@ -830,24 +859,7 @@ object Similarity {
     val model = pqTrain(corpus, idCol, vecCol, m, ksub, iters)
     val codes = pqEncode(corpus, idCol, vecCol, model)
     val luts = pqLuts(queries, idCol, vecCol, model)
-    val adc = codes.join(broadcast(luts), col("query_id") =!= col("id"))
-      .select(col("query_id"), col("id").as("nbr_id"),
-        (call_function("graft_pq_adc", col("lut"), col("codes")) /
-          (col("qnrm") * col("nrm"))).as("adc_cos"))
-    val cands = adc.groupBy("query_id")
-      .agg(call_function("graft_topk", col("adc_cos"), col("nbr_id"), lit(overfetch)).as("tk"))
-      .select(col("query_id"), explode(col("tk")).as("s"))
-      .select(col("query_id"), col("s.nbr_id").as("nbr_id"))
-    // norms once per row below the re-rank joins (the bruteForceTopK rule)
-    val cv = corpus.select(col(idCol).cast("long").as("nbr_id"), col(vecCol).as("cv"),
-      norm(col(vecCol)).as("cn"))
-    val qv = queries.select(col(idCol).cast("long").as("query_id"), col(vecCol).as("qv"),
-        norm(col(vecCol)).as("qn"))
-      .filter(definedCosine(col("qn")))
-    val scored = cands.join(cv, Seq("nbr_id")).join(broadcast(qv), Seq("query_id"))
-      .select(col("query_id"), col("nbr_id"),
-        (dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cos"))
-    topKRank(scored, k)
+    adcTopK(codes.join(broadcast(luts), col("query_id") =!= col("id")), k, overfetch)
   }
 
   /** The composed persisted index — IVF cluster routing (shrinks the
@@ -856,10 +868,13 @@ object Similarity {
     * (Jégou et al. 2011) and the shape a 100 TB embedding corpus actually
     * serves queries from. Three tables: the IVF codebook, the PQ
     * codebooks (m×ksub rows), and cluster-bucketed assignments carrying
-    * (id, v, cluster, codes, nrm) — the ADC scan reads only
-    * (cluster, id, codes, nrm) thanks to parquet column pruning
-    * (PlanSpec-pinned), while the exact vectors stay colocated for the
-    * re-rank join.
+    * (id, v, cluster, codes, nrm). A query reads the assignments ONCE:
+    * the one bucketed scan that feeds the ADC join reads
+    * (cluster, id, codes, nrm, v), so the exact vectors for the re-rank
+    * come off the same rows as the codes (PlanSpec-pinned). The bytes
+    * read are every row's codes and vector, once; a separate re-rank pass
+    * would read the vectors a second time and, under the session's
+    * broadcast threshold, ship all of them to every query.
     */
   final case class IvfPqIndex(assignmentsTable: String, codebookTable: String,
                               pqTable: String, numBuckets: Int = 16)
@@ -935,22 +950,34 @@ object Similarity {
     s"$context: build the index first (ivfPqBuild) - missing one of " +
       s"${index.codebookTable}/${index.pqTable}/${index.assignmentsTable}"
 
-  /** Top-k against a built [[IvfPqIndex]]: queries route to their `nProbe`
-    * nearest clusters via the broadcast IVF codebook, candidates inside
-    * those clusters are ADC-scored off the pruned (codes, nrm) columns
-    * with NO exchange on the corpus side (bucketed join — only the tiny
-    * probe side shuffles), the per-query `overfetch` shortlist comes from
-    * the bounded `graft_topk` partial aggregate, and exact cosine re-ranks
-    * the shortlist (one broadcast-probed scan of (id, v)). With
+  /** Top-k against a built [[IvfPqIndex]] in ONE bucketed scan of the
+    * assignments: queries route to their `nProbe` nearest clusters via
+    * the frozen IVF codebook, candidates inside those clusters are
+    * ADC-scored with NO exchange on the corpus side (only the small probe
+    * side shuffles or broadcasts; the corpus side broadcasts only when the
+    * planner finds it smaller), and the bounded aggregate of [[adcTopK]]
+    * keeps the per-query `overfetch` ADC shortlist, computes each admitted
+    * candidate's exact cosine from the `v` read beside its codes, and
+    * emits the top k by exact cosine. A warm query is three jobs: the
+    * probe broadcast, the ADC map stage and the result stage. With
     * `nProbe = nClusters` AND `overfetch` ≥ corpus it equals
     * [[bruteForceTopK]] bit-for-bit (the declared-oracle configuration);
-    * production settings trade recall for a candidate scan of
-    * nProbe/nClusters × (m+8)/(4·dim) of the corpus bytes.
+    * production settings trade recall for ADC scoring nProbe/nClusters of
+    * the corpus and exact-scoring only shortlist admissions.
     */
   def ivfPqQuery(queries: DataFrame, idCol: String, vecCol: String,
                  index: IvfPqIndex, k: Int, nProbe: Int = 6,
                  overfetch: Int = 100): DataFrame = {
     require(overfetch >= k, s"ivfPqQuery: overfetch $overfetch must be >= k $k")
+    adcTopK(ivfPqCandidates(queries, idCol, vecCol, index, nProbe), k, overfetch)
+  }
+
+  /** [[ivfPqQuery]]'s candidate rows: every (query, corpus row) pair inside
+    * the query's `nProbe` clusters, self-pairs excluded, as the
+    * [[adcTopK]] input columns.
+    */
+  private[graft] def ivfPqCandidates(queries: DataFrame, idCol: String, vecCol: String,
+                                     index: IvfPqIndex, nProbe: Int): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
     graft.functions.GraftFunctions.register(spark)
@@ -959,11 +986,11 @@ object Similarity {
     val bcC = codebookModel(spark, index.codebookTable, missing)
     val bcP = pqModel(spark, index.pqTable, missing)
     // one pass per query: nProbe (query, cluster) rows each carrying the
-    // query's ADC lookup table and norm
+    // query's ADC lookup table, norm and vector
     requireIntegralId(queries, idCol, "ivfPqQuery")
     // widen before fan-out if narrow ([[widenIfNarrow]]): a one-file
     // query batch would otherwise hand the ADC scan a single task
-    // whenever the codes side broadcasts
+    // whenever the corpus side broadcasts
     val probes = widenIfNarrow(queries
       .select(col(idCol).cast("long").as("qid"), col(vecCol).as("qv"))
       .filter(definedCosine(norm(col("qv"))))
@@ -974,33 +1001,13 @@ object Similarity {
         // helpers so this path cannot drift from pqLuts/ivfProbeScores
         val lut = buildLut(bcP.value, id, v)
         val qn = normOf(v)
-        nearestProbes(bcC.value, id, v, nProbe, "ivfPqQuery").map(ci => (id, ci, lut, qn))
-      }.toDF("query_id", "cluster", "lut", "qnrm")
-    // ADC scan: column pruning keeps v out of this read entirely
-    val codes = spark.table(index.assignmentsTable)
-      .select(col("cluster"), col("id"), col("codes"), col("nrm"))
-    val cands = probes.join(codes, Seq("cluster"))
-      .filter(col("query_id") =!= col("id"))
-      .select(col("query_id"), col("id").as("nbr_id"),
-        (call_function("graft_pq_adc", col("lut"), col("codes")) /
-          (col("qnrm") * col("nrm"))).as("adc_cos"))
-    val shortlist = cands.groupBy("query_id")
-      .agg(call_function("graft_topk", col("adc_cos"), col("nbr_id"), lit(overfetch)).as("tk"))
-      .select(col("query_id"), explode(col("tk")).as("s"))
-      .select(col("query_id"), col("s.nbr_id").as("nbr_id"))
+        nearestProbes(bcC.value, id, v, nProbe, "ivfPqQuery").map(ci => (id, ci, lut, qn, v))
+      }.toDF("query_id", "cluster", "lut", "qnrm", "qv")
     // the stored nrm IS normOf(v) (same left-to-right double fold as
     // norm(col) — pinned in normOf's doc), so the re-rank reuses it
-    // instead of recomputing norm(cv) per shortlist row; the query norm
-    // computes once per query row below the joins
-    val cv = spark.table(index.assignmentsTable)
-      .select(col("id").as("nbr_id"), col("v").as("cv"), col("nrm").as("cn"))
-    val qv = queries.select(col(idCol).cast("long").as("query_id"), col(vecCol).as("qv"),
-        norm(col(vecCol)).as("qn"))
-      .filter(definedCosine(col("qn")))
-    val scored = shortlist.join(cv, Seq("nbr_id")).join(broadcast(qv), Seq("query_id"))
-      .select(col("query_id"), col("nbr_id"),
-        (dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cos"))
-    topKRank(scored, k)
+    val corpus = spark.table(index.assignmentsTable)
+      .select(col("cluster"), col("id"), col("codes"), col("nrm"), col("v"))
+    probes.join(corpus, Seq("cluster")).filter(col("query_id") =!= col("id"))
   }
 
   /** Continuous embedding ingest into a built [[IvfPqIndex]] — the

@@ -40,8 +40,14 @@ final class BoundedKBuffer[T](val k: Int, ord: Ordering[T],
   private var saturated = false
   private var bound: T = _
 
+  /** Whether [[add]] would buffer `item` — false only for an item strictly
+    * worse than the kth-best of a saturated buffer. Lets a caller skip
+    * building a costly payload for an item that would be rejected.
+    */
+  def admits(item: T): Boolean = !saturated || ord.compare(item, bound) <= 0
+
   def add(item: T): Unit = {
-    if (saturated && ord.compare(item, bound) > 0) return
+    if (!admits(item)) return
     items += item
     if (items.length >= 2 * k + 16) compact()
   }
@@ -87,11 +93,17 @@ object BoundedKBuffer {
       if (an && bn) 0 else if (an) 1 else if (bn) -1 else 0
     }
 
+  /** One top-k candidate: its ranking score and id, plus the exact score
+    * that re-ranks it ([[TopKByScore]]'s second cut; null without one or
+    * when the exact expression is null). [[scoreDescIdAsc]] ignores it.
+    */
+  final case class Scored(score: Double, id: Long, exact: java.lang.Double = null)
+
   /** best-first for top-k: score desc (Spark order), id asc. */
-  val scoreDescIdAsc: Ordering[(Double, Long)] = new Ordering[(Double, Long)] {
-    override def compare(x: (Double, Long), y: (Double, Long)): Int = {
-      val s = sparkCompareDouble(y._1, x._1)
-      if (s != 0) s else java.lang.Long.compare(x._2, y._2)
+  val scoreDescIdAsc: Ordering[Scored] = new Ordering[Scored] {
+    override def compare(x: Scored, y: Scored): Int = {
+      val s = sparkCompareDouble(y.score, x.score)
+      if (s != 0) s else java.lang.Long.compare(x.id, y.id)
     }
   }
 }
@@ -109,12 +121,25 @@ object BoundedKBuffer {
   * would rank them after all candidates instead) — the similarity call
   * sites filter zero-norm/null vectors upstream, so no null cosine ever
   * reaches the aggregate there.
+  *
+  * `graft_topk(score, id, k, exact, kExact)` adds a second cut: the buffer
+  * still keeps the k best by `score` (the approximate shortlist), each
+  * admitted candidate carries `exact` — evaluated only when the buffer
+  * admits it, so a rejected row never pays for it — and the result is the
+  * `kExact` best of the final shortlist by (exact desc, id asc), with
+  * `cos` = exact and the same equal-pair collapse. This equals ranking
+  * the shortlist's exact scores in a second `graft_topk` pass: every
+  * global shortlist member survives its own partition's cut, so the
+  * merged buffers hold it together with the exact score of its row. A
+  * null `exact` keeps its shortlist slot but is not ranked.
   */
 case class TopKByScore(
     scoreExpr: Expression, idExpr: Expression, kExpr: Expression,
+    rerank: Seq[Expression] = Nil,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[BoundedKBuffer[(Double, Long)]] {
+  extends TypedImperativeAggregate[BoundedKBuffer[BoundedKBuffer.Scored]] {
+  import BoundedKBuffer.Scored
 
   private lazy val k: Int = {
     val v = Lsh.literalInt(kExpr, "k")
@@ -122,19 +147,27 @@ case class TopKByScore(
     v
   }
 
-  override def children: Seq[Expression] = Seq(scoreExpr, idExpr, kExpr)
+  private lazy val kExact: Int = {
+    val v = Lsh.literalInt(rerank(1), "kExact")
+    require(v > 0, s"graft_topk: kExact must be positive, got $v")
+    v
+  }
+
+  override def children: Seq[Expression] = Seq(scoreExpr, idExpr, kExpr) ++ rerank
   override def nullable: Boolean = false
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("nbr_id", LongType, nullable = false),
     StructField("cos", DoubleType, nullable = false))), containsNull = false)
 
   override def checkInputDataTypes(): TypeCheckResult =
-    (scoreExpr.dataType, idExpr.dataType) match {
-      case (DoubleType, LongType | IntegerType)
-          if Lsh.literalIntOpt(kExpr).exists(_ > 0) =>
+    (scoreExpr.dataType, idExpr.dataType, rerank.map(_.dataType)) match {
+      case (DoubleType, LongType | IntegerType, Seq() | Seq(DoubleType, _))
+          if Lsh.literalIntOpt(kExpr).exists(_ > 0) &&
+            rerank.drop(1).forall(e => Lsh.literalIntOpt(e).exists(_ > 0)) =>
         TypeCheckResult.TypeCheckSuccess
       case _ => TypeCheckResult.TypeCheckFailure(
-        "graft_topk requires (double score, integral id, literal int k > 0)")
+        "graft_topk requires (double score, integral id, literal int k > 0" +
+          "[, double exact, literal int kExact > 0])")
     }
 
   // dedup: an exactly-equal (score, id) pair is the same neighbor scored
@@ -142,42 +175,60 @@ case class TopKByScore(
   // one IVF cluster / LSH candidates are distinct'd), so collapsing it is
   // bit-identical there and absorbs assignment rows duplicated by an
   // at-least-once streaming-append replay (see Similarity.ivfAppend)
-  override def createAggregationBuffer(): BoundedKBuffer[(Double, Long)] =
+  override def createAggregationBuffer(): BoundedKBuffer[Scored] =
     new BoundedKBuffer(k, BoundedKBuffer.scoreDescIdAsc, dedup = true)
 
-  override def update(buffer: BoundedKBuffer[(Double, Long)], input: InternalRow): BoundedKBuffer[(Double, Long)] = {
+  override def update(buffer: BoundedKBuffer[Scored], input: InternalRow): BoundedKBuffer[Scored] = {
     val s = scoreExpr.eval(input)
     val id = idExpr.eval(input)
-    if (s != null && id != null)
-      buffer.add((s.asInstanceOf[Double], id.asInstanceOf[Number].longValue()))
+    if (s != null && id != null) {
+      val item = Scored(s.asInstanceOf[Double], id.asInstanceOf[Number].longValue())
+      if (rerank.isEmpty) buffer.add(item)
+      else if (buffer.admits(item))
+        buffer.add(item.copy(exact = rerank.head.eval(input).asInstanceOf[java.lang.Double]))
+    }
     buffer
   }
 
-  override def merge(buffer: BoundedKBuffer[(Double, Long)], other: BoundedKBuffer[(Double, Long)]): BoundedKBuffer[(Double, Long)] = {
+  override def merge(buffer: BoundedKBuffer[Scored], other: BoundedKBuffer[Scored]): BoundedKBuffer[Scored] = {
     buffer.merge(other); buffer
   }
 
-  override def eval(buffer: BoundedKBuffer[(Double, Long)]): Any =
-    new GenericArrayData(buffer.result().map { case (s, id) =>
-      new GenericInternalRow(Array[Any](id, s))
-    }.toArray[Any])
+  override def eval(buffer: BoundedKBuffer[Scored]): Any = {
+    val best =
+      if (rerank.isEmpty) buffer.result()
+      else {
+        val second = new BoundedKBuffer(kExact, BoundedKBuffer.scoreDescIdAsc, dedup = true)
+        buffer.result().foreach(c => if (c.exact != null) second.add(Scored(c.exact, c.id)))
+        second.result()
+      }
+    new GenericArrayData(best.map(c => new GenericInternalRow(Array[Any](c.id, c.score))).toArray[Any])
+  }
 
-  override def serialize(buffer: BoundedKBuffer[(Double, Long)]): Array[Byte] = {
+  override def serialize(buffer: BoundedKBuffer[Scored]): Array[Byte] = {
     val out = new ByteArrayOutputStream()
     val d = new DataOutputStream(out)
-    val items = buffer.result() // compacted: at most k pairs cross the wire
+    val items = buffer.result() // compacted: at most k candidates cross the wire
     d.writeInt(items.length)
-    items.foreach { case (s, id) => d.writeDouble(s); d.writeLong(id) }
+    items.foreach { c =>
+      d.writeDouble(c.score); d.writeLong(c.id); d.writeBoolean(c.exact != null)
+      if (c.exact != null) d.writeDouble(c.exact)
+    }
     d.flush()
     out.toByteArray
   }
 
-  override def deserialize(bytes: Array[Byte]): BoundedKBuffer[(Double, Long)] = {
+  override def deserialize(bytes: Array[Byte]): BoundedKBuffer[Scored] = {
     val d = new DataInputStream(new java.io.ByteArrayInputStream(bytes))
     val b = createAggregationBuffer()
     val n = d.readInt()
     var i = 0
-    while (i < n) { b.add((d.readDouble(), d.readLong())); i += 1 }
+    while (i < n) {
+      // arguments evaluate left to right: score, id, exact flag, exact
+      b.add(Scored(d.readDouble(), d.readLong(),
+        if (d.readBoolean()) java.lang.Double.valueOf(d.readDouble()) else null))
+      i += 1
+    }
     b
   }
 
@@ -186,7 +237,8 @@ case class TopKByScore(
   override def withNewInputAggBufferOffset(newOffset: Int): TopKByScore =
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): TopKByScore =
-    copy(scoreExpr = newChildren(0), idExpr = newChildren(1), kExpr = newChildren(2))
+    copy(scoreExpr = newChildren(0), idExpr = newChildren(1), kExpr = newChildren(2),
+      rerank = newChildren.drop(3))
 }
 
 /** `graft_bottomk_long(score, id, k)` — per-group ids of the `k` smallest

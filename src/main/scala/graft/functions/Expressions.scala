@@ -437,7 +437,8 @@ object GraftFunctions {
     ("graft_simhash", classOf[SimHash60], es => SimHash60(es(0), es(1))),
     ("graft_fingerprints", classOf[WinnowFingerprints],
       es => WinnowFingerprints(es(0), es(1), es(2))),
-    ("graft_topk", classOf[TopKByScore], es => TopKByScore(es(0), es(1), es(2))),
+    ("graft_topk", classOf[TopKByScore],
+      es => TopKByScore(es(0), es(1), es(2), if (es.length > 3) Seq(es(3), es(4)) else Nil)),
     ("graft_bottomk_long", classOf[BottomKIdsByLong],
       es => BottomKIdsByLong(es(0), es(1), es(2))),
     ("graft_repetition", classOf[RepetitionStats], es => RepetitionStats(es.head)),

@@ -1090,6 +1090,53 @@ class ExtensionsSpec extends SparkSpec {
     } finally all.foreach(dropTableHard)
   }
 
+  test("IVF+PQ query re-ranks inside its one scan: row for row the two-pass reference (x49/x50)") {
+    val idx = Similarity.IvfPqIndex("tivfpqr_assign", "tivfpqr_cb", "tivfpqr_pq", numBuckets = 4)
+    val all = Seq(idx.assignmentsTable, idx.codebookTable, idx.pqTable,
+      idx.assignmentsTable + "__compact")
+    all.foreach(dropTableHard)
+    // outside queries: reversed vectors under fresh ids; corpus queries
+    // are indexed rows, whose self-pair must stay excluded
+    val outside = emb.filter(col("vec_id") % 5 === 0)
+      .select((col("vec_id") + 1000000L).as("vec_id"), reverse(col("embedding")).as("embedding"))
+    val inCorpus = emb.filter(col("vec_id") % 7 === 0 && col("vec_id") < 250)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("query_id", "rank", "nbr_id", "cos").collect().toSeq
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
+          java.lang.Double.doubleToRawLongBits(r.getDouble(3))))
+        .sorted
+    // production settings: nProbe 3 of 8 clusters, a 15-candidate shortlist
+    // out of roughly 100-230 probed rows per query, k 5
+    def same(state: String, qs: org.apache.spark.sql.DataFrame): Unit = {
+      val got = rows(Similarity.ivfPqQuery(qs, "vec_id", "embedding", idx,
+        k = 5, nProbe = 3, overfetch = 15))
+      val want = rows(SimilarityReference.ivfPqTwoPass(qs, "vec_id", "embedding", idx,
+        k = 5, nProbe = 3, overfetch = 15))
+      assert(want.nonEmpty && got == want, s"$state: the one-scan re-rank differs from the two-pass reference")
+      assert(got.forall(r => r._1 != r._3), s"$state: a self-pair ranked")
+    }
+    try {
+      val mx = emb.agg(max("vec_id")).head().getLong(0)
+      Similarity.ivfPqBuild(emb.filter(col("vec_id") <= mx * 3 / 5), "vec_id", "embedding",
+        idx, nClusters = 8, m = 8, ksub = 16, iters = 2)
+      same("after a build", outside)
+      same("after a build, corpus queries", inCorpus)
+      val b1 = emb.filter(col("vec_id") > mx * 3 / 5 && col("vec_id") <= mx * 4 / 5)
+      val b2 = emb.filter(col("vec_id") > mx * 4 / 5)
+      Similarity.ivfPqAppend(b1, "vec_id", "embedding", idx)
+      Similarity.ivfPqCompact(spark, idx)
+      Similarity.ivfPqAppend(b2, "vec_id", "embedding", idx)
+      same("after appends", outside)
+      val before = spark.table(idx.assignmentsTable).count()
+      Similarity.ivfPqAppend(b2, "vec_id", "embedding", idx) // replay, not compacted
+      assert(spark.table(idx.assignmentsTable).count() === before + b2.count(),
+        "the replay must leave duplicate assignment rows")
+      same("after a replayed append", outside)
+      same("after a replayed append, corpus queries", inCorpus)
+      graft.Caching.release(spark)
+    } finally all.foreach(dropTableHard)
+  }
+
   test("streaming IVF ingest: appends route via the codebook, replays collapse, compaction serves") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -1278,8 +1325,15 @@ class ExtensionsSpec extends SparkSpec {
       val (q, planJobs) = jobsRunBy(Similarity.ivfPqQuery(qs, "vec_id", "embedding", idx,
         k = 10, nProbe = 8, overfetch = 4096))
       assert(planJobs === 0, "building a query against a cached model must run no job")
-      val got = q.select("query_id", "rank", "nbr_id")
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
+      // one scan of the assignments: the probe broadcast, the ADC map stage
+      // and the result stage. The batch is already spread over the
+      // session's cores; a narrow one adds widenIfNarrow's repartition job.
+      val wide = spark.createDataFrame(java.util.Arrays.asList(qs.collect(): _*), qs.schema)
+      val (collected, runJobs) = jobsRunBy(Similarity.ivfPqQuery(wide, "vec_id", "embedding",
+        idx, k = 10, nProbe = 8, overfetch = 4096).collect())
+      assert(runJobs === 3, s"a warm query must run 3 jobs, ran $runJobs")
+      assert(collected.toSet === q.collect().toSet)
+      val got = collected.map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
       val brute = Similarity.bruteForceTopK(emb, qs, "vec_id", "embedding", 10)
         .select("query_id", "rank", "nbr_id")
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet

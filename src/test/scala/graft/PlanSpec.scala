@@ -594,28 +594,57 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  test("x49 ivf+pq ADC scan: bucketed assignments, exact vectors pruned out of the read") {
+  test("x49 ivf+pq query: one bucketed scan of the assignments re-ranks in place") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
     import graft.ext.Similarity
     import graft.sources.Tables
+    object Plans extends AdaptiveSparkPlanHelper
     val idx = Similarity.IvfPqIndex("pin_ivfpq_assign", "pin_ivfpq_cb", "pin_ivfpq_pq",
       numBuckets = 4)
     Seq(idx.assignmentsTable, idx.codebookTable, idx.pqTable).foreach(dropTableHard)
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    def assignmentScans(p: SparkPlan): Seq[FileSourceScanExec] = Plans.collect(p) {
+      case s: FileSourceScanExec if s.tableIdentifier.exists(_.table == idx.assignmentsTable) => s
+    }
     try {
       val emb = Tables.load(spark, sf(), "embeddings")
       Similarity.ivfPqBuild(emb, "vec_id", "embedding", idx, nClusters = 8, m = 8,
         ksub = 16, iters = 2)
-      val p = Similarity.ivfPqQuery(emb.filter(col("vec_id") < 5), "vec_id", "embedding",
-        idx, k = 5, nProbe = 2, overfetch = 20).queryExecution.executedPlan.toString
-      assert(p.contains("Bucketed: true"), "assignments scan must be bucketed: " + p.take(2000))
-      assert(p.contains("graft_pq_adc"), "candidates must score via codegen ADC: " + p.take(2000))
-      // the ADC-side read must NOT materialize the exact vectors: one scan
-      // reads (cluster, id, codes, nrm), and only the re-rank scan reads v
-      assert(p.contains("ReadSchema: struct<id:bigint,cluster:int,codes:binary,nrm:double>") ||
-        p.contains("ReadSchema: struct<cluster:int,id:bigint,codes:binary,nrm:double>"),
-        "ADC scan must prune the exact vectors: " + p.take(3000))
-      assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p.take(2000))
+      // a small local query batch against the larger corpus, the serving
+      // shape: at -1 nothing broadcasts, at the session default the probes
+      // do. (A filtered file scan of the queries is sized by the planner
+      // above this 500-vector corpus, which then broadcasts instead.)
+      val qs = spark.createDataFrame(
+        java.util.Arrays.asList(emb.filter(col("vec_id") < 5).collect(): _*), emb.schema)
+      Seq("-1", prevThreshold).foreach { threshold =>
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+        val q = Similarity.ivfPqQuery(qs, "vec_id", "embedding",
+          idx, k = 5, nProbe = 2, overfetch = 20)
+        q.collect()
+        val plan = q.queryExecution.executedPlan // AQE's final plan
+        val p = plan.toString
+        val scans = assignmentScans(plan)
+        assert(scans.size == 1, s"threshold $threshold: one scan of the assignments: " + p.take(4000))
+        assert(scans.head.bucketedScan && scans.head.toString.contains("Bucketed: true"),
+          s"threshold $threshold: the assignments scan must be bucketed: " + p.take(4000))
+        assert(scans.head.requiredSchema.fieldNames.contains("v"),
+          s"threshold $threshold: the ADC scan reads the exact vectors: " + p.take(4000))
+        assert(p.contains("graft_pq_adc"), "candidates must score via codegen ADC: " + p.take(4000))
+        val idKeyed = Plans.collect(plan) {
+          case ShuffleExchangeExec(h: HashPartitioning, _, _, _)
+              if h.references.exists(a => a.name == "id" || a.name == "nbr_id") => h
+        }
+        assert(idKeyed.isEmpty, s"threshold $threshold: an exchange keys on the candidate id: " + p.take(4000))
+        val corpusBroadcast = Plans.collect(plan) {
+          case b: BroadcastExchangeExec if assignmentScans(b).nonEmpty => b
+        }
+        assert(corpusBroadcast.isEmpty,
+          s"threshold $threshold: the assignments must not broadcast: " + p.take(4000))
+        assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p.take(4000))
+      }
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
       Seq(idx.assignmentsTable, idx.codebookTable, idx.pqTable).foreach(dropTableHard)

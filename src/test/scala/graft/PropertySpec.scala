@@ -185,6 +185,42 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("graft_topk's exact second cut equals windowing the approximate shortlist by exact score") {
+    import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
+    graft.functions.GraftFunctions.register(spark)
+    // ties, signed zeros, NaN and null exact scores; enough rows per query
+    // that the partial buffers saturate and reject before the merge
+    val rowsGen: Gen[List[(Long, Long, Double, Option[Double])]] = Gen.listOfN(800, for {
+      q <- Gen.choose(0L, 9L)
+      n <- Gen.choose(0L, 200L)
+      s <- Gen.oneOf(Gen.choose(-1.0, 1.0), Gen.oneOf(0.5, 0.0, -0.0, Double.NaN))
+      e <- Gen.option(Gen.oneOf(Gen.choose(-1.0, 1.0), Gen.oneOf(0.25, 0.0, -0.0, Double.NaN)))
+    } yield (q, n, s, e))
+    def canon(rows: Array[(Long, Int, Long, Double)]) =
+      rows.map { case (q, r, n, s) => (q, r, n, s.toString) }.toSet
+    for (seed <- 70L to 72L; (k, kExact) <- Seq((5, 2), (12, 7))) {
+      val rows = sample(rowsGen, seed + k).distinctBy(r => (r._1, r._2))
+      def aggOf(in: org.apache.spark.sql.DataFrame) = canon(in.repartition(4).groupBy("query_id")
+        .agg(call_function("graft_topk", col("approx"), col("nbr_id"), lit(k),
+          col("exact"), lit(kExact)).as("tk"))
+        .select(col("query_id"), posexplode(col("tk")).as(Seq("pos", "s")))
+        .select(col("query_id"), (col("pos") + 1).as("rank"), col("s.nbr_id"), col("s.cos"))
+        .as[(Long, Int, Long, Double)].collect())
+      val df = rows.toDF("query_id", "nbr_id", "approx", "exact")
+      val byApprox = Window.partitionBy("query_id").orderBy(col("approx").desc, col("nbr_id").asc)
+      val byExact = Window.partitionBy("query_id").orderBy(col("exact").desc, col("nbr_id").asc)
+      val want = canon(df.withColumn("r", row_number().over(byApprox)).filter(col("r") <= k)
+        .filter(col("exact").isNotNull)
+        .withColumn("rank", row_number().over(byExact)).filter(col("rank") <= kExact)
+        .select("query_id", "rank", "nbr_id", "exact").as[(Long, Int, Long, Double)].collect())
+      assert(want.nonEmpty && aggOf(df) == want, s"seed $seed k=$k kExact=$kExact")
+      val extra = sample(Gen.someOf(rows), seed * 3 + k).toList
+      assert(aggOf((rows ++ extra).toDF("query_id", "nbr_id", "approx", "exact")) == want,
+        s"duplicated rows must not change ranks: seed $seed k=$k kExact=$kExact")
+    }
+  }
+
   test("repetition kernel matches the sequential model on random token soups") {
     import spark.implicits._
     val docs: Gen[List[String]] = Gen.listOfN(80,

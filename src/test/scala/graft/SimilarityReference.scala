@@ -88,4 +88,37 @@ object SimilarityReference {
       .filter(dot(col("va"), col("vb")) >= lit(threshold) * col("na") * col("nb"))
       .select(col("id_a").as("vec_id_a"), col("id_b").as("vec_id_b"))
   }
+
+  /** `Similarity.ivfPqQuery` as the two passes it used to run: the
+    * `graft_topk` ADC shortlist of `overfetch` ids per query over the same
+    * candidate rows, exploded and joined back to a second scan of the
+    * assignments' (id, v, nrm), exact cosine against the query vector
+    * (norm computed in Spark), and `graft_topk` down to k with ranks.
+    */
+  def ivfPqTwoPass(queries: DataFrame, idCol: String, vecCol: String,
+                   index: Similarity.IvfPqIndex, k: Int, nProbe: Int,
+                   overfetch: Int): DataFrame = {
+    import Similarity.{dot, norm}
+    val spark = queries.sparkSession
+    val shortlist = Similarity.ivfPqCandidates(queries, idCol, vecCol, index, nProbe)
+      .select(col("query_id"), col("id").as("nbr_id"),
+        (call_function("graft_pq_adc", col("lut"), col("codes")) /
+          (col("qnrm") * col("nrm"))).as("adc_cos"))
+      .groupBy("query_id")
+      .agg(call_function("graft_topk", col("adc_cos"), col("nbr_id"), lit(overfetch)).as("tk"))
+      .select(col("query_id"), explode(col("tk")).as("s"))
+      .select(col("query_id"), col("s.nbr_id").as("nbr_id"))
+    val cv = spark.table(index.assignmentsTable)
+      .select(col("id").as("nbr_id"), col("v").as("cv"), col("nrm").as("cn"))
+    val qv = queries.select(col(idCol).cast("long").as("query_id"), col(vecCol).as("qv"),
+        norm(col(vecCol)).as("qn"))
+      .filter(col("qn") > 0 && col("qn") < lit(Double.PositiveInfinity))
+    shortlist.join(cv, Seq("nbr_id")).join(broadcast(qv), Seq("query_id"))
+      .groupBy("query_id")
+      .agg(call_function("graft_topk", dot(col("qv"), col("cv")) / (col("qn") * col("cn")),
+        col("nbr_id"), lit(k)).as("tk"))
+      .select(col("query_id"), posexplode(col("tk")).as(Seq("pos", "s")))
+      .select(col("query_id"), (col("pos") + 1).cast("int").as("rank"),
+        col("s.nbr_id").as("nbr_id"), col("s.cos").as("cos"))
+  }
 }
