@@ -632,15 +632,7 @@ object CurationPipeline {
     // operator, so the armed guard costs zero extra exchanges.
     val hashed = filtered.withColumn("__h", md5(coalesce(col(textCol), lit("")))) // NULL≡empty, the Dedup.exact rule
     val winH = expressions.Window.partitionBy(col("__h"))
-    val sliceCap: Option[Long] =
-      spark.conf.getOption(graft.streaming.StatefulOps.MaxSliceRowsConf).map { v =>
-        val n = v.trim.toLongOption.getOrElse(throw new IllegalArgumentException(
-          s"${graft.streaming.StatefulOps.MaxSliceRowsConf} must be a positive int, got '$v'"))
-        require(n > 0,
-          s"${graft.streaming.StatefulOps.MaxSliceRowsConf} must be positive, got $n")
-        n
-      }
-    val minId = sliceCap match {
+    val minId = graft.streaming.StatefulOps.maxSliceRows(spark) match {
       case Some(cap) =>
         when(count(lit(1)).over(winH) > cap, raise_error(concat(
           lit("streamIncrement: exact-dedup text-hash group "), col("__h"),

@@ -445,17 +445,8 @@ object Dedup {
     */
   private def mergedCandidateSets(sets: DataFrame, ids: DataFrame,
                                   context: String): DataFrame = {
-    val spark = sets.sparkSession
-    val capOpt: Option[Long] =
-      spark.conf.getOption(graft.streaming.StatefulOps.MaxSliceRowsConf).map { v =>
-        val n = v.trim.toLongOption.getOrElse(throw new IllegalArgumentException(
-          s"${graft.streaming.StatefulOps.MaxSliceRowsConf} must be a positive int, got '$v'"))
-        require(n > 0,
-          s"${graft.streaming.StatefulOps.MaxSliceRowsConf} must be positive, got $n")
-        n
-      }
     val base = sets.join(ids, Seq("id"), "left_semi").groupBy("id")
-    capOpt match {
+    graft.streaming.StatefulOps.maxSliceRows(sets.sparkSession) match {
       case Some(cap) =>
         base.agg(array_distinct(flatten(collect_list(col("ss")))).as("__ss"),
             count(lit(1)).as("__nrows"))
@@ -922,13 +913,7 @@ object Dedup {
     // fractional ids (spuriously merging distinct docs) — so require an
     // integral id type up front; map arbitrary ids to longs (dictionary
     // join / dense rank) before collapsing.
-    import org.apache.spark.sql.types.{ByteType, ShortType, IntegerType, LongType}
-    Seq("d1", "d2").foreach { c =>
-      val dt = pairs.schema(c).dataType
-      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(dt),
-        s"connectedComponents needs integral doc ids; pair column '$c' is " +
-          s"$dt — map ids to longs (dictionary join / dense rank) first")
-    }
+    Seq("d1", "d2").foreach(Guards.requireIntegralId(pairs, _, "connectedComponents"))
     val sc = pairs.sparkSession.sparkContext
     val reliable = sc.getCheckpointDir.isDefined
     // materialize AND truncate lineage (see scaladoc — without this the
@@ -1226,15 +1211,7 @@ object Dedup {
     checks.ensureWritable(spark, state.byClusterTable)
     // the connectedComponents integral-id guard, applied BEFORE the widening
     // cast (casting a string id would silently null it past the guard)
-    locally {
-      import org.apache.spark.sql.types.{ByteType, ShortType, IntegerType, LongType}
-      Seq("d1", "d2").foreach { c =>
-        val dt = newPairs.schema(c).dataType
-        require(Seq(ByteType, ShortType, IntegerType, LongType).contains(dt),
-          s"clusterIncrement needs integral doc ids; pair column '$c' is " +
-            s"$dt — map ids to longs (dictionary join / dense rank) first")
-      }
-    }
+    Seq("d1", "d2").foreach(Guards.requireIntegralId(newPairs, _, "clusterIncrement"))
     val pairs = newPairs.select(col("d1").cast("long"), col("d2").cast("long"))
     // BOTH tables (the minHashLshIncrement first-batch-crash argument): a
     // crash between the two first writes must read as a fresh registry

@@ -1,6 +1,7 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Similarity search over an embedding column (`array<float>`).
@@ -101,14 +102,6 @@ object Similarity {
     topKRank(scored, k)
   }
 
-  /** IVF-flat approximate top-k — the 100 TB ANN path. A small k-means
-    * codebook is trained (deterministic init: the `nClusters` lowest-id
-    * vectors; a fixed number of Lloyd iterations with map-side partial sums),
-    * every vector is assigned to its nearest centroid, and each query probes
-    * only the `nProbe` nearest clusters — candidate count scales with
-    * `nProbe / nClusters`, not with corpus size. Exact cosine re-ranks the
-    * candidates, so precision is 1; recall depends on nProbe.
-    */
   /** Squared-distance argmin over the (broadcast) codebook on the
     * `off ..< off + c(0).length` slice of `v` (no sub-vector is
     * materialized) — the one kernel every IVF and PQ stage shares.
@@ -130,101 +123,136 @@ object Similarity {
     d
   }
 
-  /** Deterministic k-means codebook (init: the `nClusters` lowest-id
-    * vectors; fixed Lloyd iterations with map-side partial sums). At
-    * 100 TB, training reads a bounded `trainSample`-vector id-hash sample —
-    * centroid quality converges long before the corpus is exhausted, and
-    * the codebook is nClusters×dim. Shared by the one-shot [[ivfTopK]] and
-    * the persisted [[ivfBuild]], so both train bit-identical codebooks.
+  /** The one vector intake of the IVF and PQ entries: (id, v) rows with
+    * the id cast to long and zero/Inf/NaN-norm and null vectors dropped
+    * ([[definedCosine]], the [[bruteForceTopK]] stance), so no trainer
+    * sees an undefined direction and no top-k aggregate a NaN or null
+    * score. The long cast would silently NULL a non-integral id under
+    * non-ANSI SQL (every query-vs-corpus filter then drops every
+    * candidate and the operator "finds nothing" with no error), so the
+    * id type is checked first ([[Guards.requireIntegralId]]).
     */
-  /** The trainers' shared bounded sample: an id-hash filter keeping ~`cap`
-    * vectors. ONE definition so [[trainCodebook]] and [[pqTrain]] cannot
-    * silently diverge (the trainer-equivalence sweeps rely on both seeing
-    * the exact same sample).
-    */
-  /** The long cast below each entry point would silently NULL a
-    * non-integral id under non-ANSI SQL — the query-vs-corpus filters then
-    * drop every candidate and the operator "finds nothing" with no error.
-    */
-  private def requireIntegralId(df: DataFrame, idCol: String, context: String): Unit =
+  private[graft] def vectors(df: DataFrame, idCol: String, vecCol: String,
+                             context: String): Dataset[(Long, Array[Float])] = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    graft.functions.GraftFunctions.register(spark)
     Guards.requireIntegralId(df, idCol, context)
-
-  private def trainingSample(vecs: org.apache.spark.sql.Dataset[(Long, Array[Float])],
-                             cap: Long): org.apache.spark.sql.Dataset[(Long, Array[Float])] = {
-    val n = vecs.count()
-    if (n <= cap) vecs
-    else vecs.filter(r => (r._1 * 0x9E3779B97F4A7C15L >>> 40) % math.max(1L, n / cap) == 0)
+    df.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
+      .filter(definedCosine(norm(col("v"))))
+      .as[(Long, Array[Float])]
   }
 
-  private[graft] def trainCodebook(vecs: org.apache.spark.sql.Dataset[(Long, Array[Float])],
-                            nClusters: Int, iters: Int,
-                            trainSample: Long = 100000L): Array[Array[Double]] = {
+  /** The one deterministic Lloyd k-means trainer of the IVF and PQ
+    * indexes. Each `(m, k)` family cuts the vector into `m` equal
+    * coordinate slices and trains one codebook of up to `k` centroids per
+    * slice: IVF is `(1, nClusters)`, PQ is `(m, ksub)`, and
+    * [[ivfPqBuild]] passes both, so its two models train in the same
+    * jobs. Returns, per family, the per-slice codebooks.
+    *
+    *  - Sample: at 100 TB, training reads a bounded ~100 000-vector
+    *    id-hash sample (one count job); centroid quality converges long
+    *    before the corpus is exhausted, and a codebook is k×dim.
+    *  - Init: the lowest-id sample rows (one collect), the first `k` of
+    *    them per family, so a sample smaller than `k` trains a shorter
+    *    valid codebook. The dimension is read off these rows.
+    *  - Iteration: ONE narrow job of per-partition partial sums, per slice
+    *    [k][dsub+1] doubles (the count rides the last slot) — the
+    *    sufficient statistics, whatever the sample size — merged
+    *    driver-side. A cluster that captured nothing keeps its centroid.
+    *
+    * Every accumulator slot sums the same values in the same order
+    * whatever else trains beside it, so a joint run is bit-equal to
+    * separate ones (PropertySpec pins each slice against a sequential
+    * Lloyd model).
+    */
+  private[graft] def lloyd(vecs: Dataset[(Long, Array[Float])], iters: Int, context: String,
+                           families: (Int, Int)*): Seq[Array[Array[Array[Double]]]] = {
     val spark = vecs.sparkSession
     import spark.implicits._
-    val train = trainingSample(vecs, trainSample)
-    var cents: Array[Array[Double]] = train.orderBy(col("id")).limit(nClusters)
-      .collect().map(_._2.map(_.toDouble))
-    // loud, named failure instead of the bare cents(0) AIOOBE two lines
-    // down — an all-zero-norm (or simply empty) corpus reaches here with
-    // nothing to train on and the caller should hear WHY
-    require(cents.nonEmpty,
-      "trainCodebook requires a non-empty training set (is the corpus empty, " +
+    val cap = 100000L
+    val n = vecs.count()
+    val train =
+      if (n <= cap) vecs
+      else vecs.filter(r => (r._1 * 0x9E3779B97F4A7C15L >>> 40) % math.max(1L, n / cap) == 0)
+    val initRows = train.orderBy(col("id")).limit(families.map(_._2).max).collect()
+    // loud, named failure instead of a bare index crash: an all-zero-norm
+    // (or simply empty) corpus reaches here with nothing to train on
+    require(families.forall(f => math.min(f._2, initRows.length) > 0),
+      s"$context requires a non-empty training set (is the corpus empty, " +
         "or were all vectors zero-norm?)")
+    val dim = initRows(0)._2.length
+    // the strides below are fixed by this dimension: a longer vector would
+    // silently train on its prefix, a shorter one add into the wrong slots
+    def checkRow(id: Long, v: Array[Float]): Unit =
+      if (v.length != dim) throw new IllegalArgumentException(
+        s"$context: vector id=$id has dimension ${v.length}, expected $dim")
+    initRows.foreach { case (id, v) => checkRow(id, v) }
+    val init = initRows.map(_._2)
+    families.foreach { case (m, _) =>
+      require(dim % m == 0, s"$context: dim $dim must be divisible by m $m")
+    }
+    // one entry per slice, families in order: offset, width, accumulator base
+    val offs = families.flatMap { case (m, _) => (0 until m).map(_ * (dim / m)) }.toArray
+    val widths = families.flatMap { case (m, _) => Seq.fill(m)(dim / m) }.toArray
+    var books: Array[Array[Array[Double]]] =
+      families.flatMap { case (m, k) => Seq.fill(m)(math.min(k, init.length)) }.toArray
+        .zipWithIndex.map { case (k, s) =>
+          init.take(k).map(v => Array.tabulate(widths(s))(j => v(offs(s) + j).toDouble))
+        }
+    val bases = books.indices.scanLeft(0)((b, s) => b + books(s).length * (widths(s) + 1)).toArray
     for (_ <- 1 to iters) {
-      val bc = spark.sparkContext.broadcast(cents)
-      // ONE narrow job per iteration: per-partition [cluster][dim+1]
-      // partial sums (count rides the last slot) merged driver-side — the
-      // previous groupByKey shuffled the WHOLE training sample every
-      // iteration, where the sufficient statistics are nClusters×(dim+1)
-      // doubles regardless of sample size
-      val k = cents.length
-      // stride fixed by the INIT centroids' dimension, not each row's own
-      // length: a mixed-dimension corpus would otherwise add into the
-      // wrong [cluster][dim] slots — silent centroid corruption, where
-      // every other trainer raises naming the row
-      val dim0 = cents(0).length
+      val bc = spark.sparkContext.broadcast(books)
       val partials = train.mapPartitions { it =>
-        val c = bc.value
+        val b = bc.value
         var acc: Array[Double] = null
-        val w = dim0 + 1
         it.foreach { case (id, v) =>
-          if (v.length != dim0) throw new IllegalArgumentException(
-            s"trainCodebook: vector id=$id has dimension ${v.length}, " +
-              s"expected $dim0")
-          if (acc == null) acc = new Array[Double](k * w)
-          val base = nearest(c, v) * w
-          var j = 0
-          while (j < dim0) { acc(base + j) += v(j); j += 1 }
-          acc(base + dim0) += 1
+          checkRow(id, v)
+          if (acc == null) acc = new Array[Double](bases(b.length))
+          var s = 0
+          while (s < b.length) {
+            val w = widths(s)
+            val base = bases(s) + nearest(b(s), v, offs(s)) * (w + 1)
+            var j = 0
+            while (j < w) { acc(base + j) += v(offs(s) + j); j += 1 }
+            acc(base + w) += 1
+            s += 1
+          }
         }
         if (acc == null) Iterator.empty else Iterator.single(acc)
       }.collect()
-      val next = cents.map(_.clone())
       if (partials.nonEmpty) {
-        val w = partials.head.length / k
-        val dim = w - 1
-        val tot = new Array[Double](k * w)
+        val tot = new Array[Double](bases(books.length))
         partials.foreach { p =>
           var i = 0; while (i < p.length) { tot(i) += p(i); i += 1 }
         }
-        var ci = 0
-        while (ci < k) {
-          val n = tot(ci * w + dim)
-          // a cluster that captured nothing keeps its centroid (the
-          // previous per-group formulation's behavior)
-          if (n > 0) next(ci) = Array.tabulate(dim)(j => tot(ci * w + j) / n)
-          ci += 1
+        books = books.zipWithIndex.map { case (book, s) =>
+          val w = widths(s)
+          Array.tabulate(book.length) { ci =>
+            val base = bases(s) + ci * (w + 1)
+            val cnt = tot(base + w)
+            if (cnt > 0) Array.tabulate(w)(j => tot(base + j) / cnt) else book(ci)
+          }
         }
       }
-      cents = next
     }
-    cents
+    val ends = families.scanLeft(0)(_ + _._1)
+    families.indices.map(f => books.slice(ends(f), ends(f + 1)))
   }
+
+  /** [[lloyd]]'s full-width form: one IVF codebook of up to `nClusters`
+    * centroids. Shared by the one-shot [[ivfTopK]], the persisted
+    * [[ivfBuild]] and the offline [[graft.tools.IvfCentroidsTrain]], so
+    * all three train bit-identical codebooks.
+    */
+  private[graft] def ivfCentroids(vecs: Dataset[(Long, Array[Float])], nClusters: Int,
+                                  iters: Int, context: String): Array[Array[Double]] =
+    lloyd(vecs, iters, context, 1 -> nClusters).head.head
 
   /** [[nearest]] with the loud per-row dimension gate every ASSIGNMENT
     * path needs: a shorter vector would silently compute prefix distances
     * (wrong cluster, recall hole), a longer one would AIOOBE bare-named.
-    * pqTrain's sample-side raise cannot cover rows outside the sample.
+    * The trainer's raise covers only its sample.
     */
   private def nearestChecked(c: Array[Array[Double]], id: Long, v: Array[Float],
                              context: String): Int = {
@@ -245,6 +273,29 @@ object Similarity {
                             nProbe: Int, context: String): Seq[Int] = {
     checkDim(c, id, v, context)
     c.indices.map(ci => (sqDist(c(ci), v, 0), ci)).sorted.take(nProbe).map(_._2)
+  }
+
+  /** Each vector routed to its nearest centroid, as (id, v, cluster) rows:
+    * the one assignment map of [[ivfTopK]], [[ivfBuild]] and [[ivfAppend]].
+    */
+  private def assigned(vecs: Dataset[(Long, Array[Float])],
+                       cents: Broadcast[Array[Array[Double]]], context: String): DataFrame = {
+    import vecs.sparkSession.implicits._
+    vecs.map { case (id, v) => (id, v, nearestChecked(cents.value, id, v, context)) }
+      .toDF("id", "v", "cluster")
+  }
+
+  /** [[assigned]] plus each vector's PQ codes and exact norm, as
+    * (id, v, cluster, codes, nrm) rows: the one assignment map of
+    * [[ivfPqBuild]] and [[ivfPqAppend]].
+    */
+  private def assignedPq(vecs: Dataset[(Long, Array[Float])],
+                         cents: Broadcast[Array[Array[Double]]], pq: Broadcast[PqModel],
+                         context: String): DataFrame = {
+    import vecs.sparkSession.implicits._
+    vecs.map { case (id, v) =>
+      (id, v, nearestChecked(cents.value, id, v, context), encodeOne(pq.value, id, v), normOf(v))
+    }.toDF("id", "v", "cluster", "codes", "nrm")
   }
 
   /** Widen a narrow query side before the cluster fan-out flatMap (the
@@ -289,48 +340,52 @@ object Similarity {
     }
   }
 
-  def ivfTopK(df: DataFrame, idCol: String, vecCol: String, k: Int,
-              nClusters: Int = 16, nProbe: Int = 6, iters: Int = 5): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
-    requireIntegralId(df, idCol, "ivfTopK")
-    // zero/Inf/NaN-norm and null vectors out up front ([[definedCosine]] —
-    // the bruteForceTopK stance), so the exact re-rank's top-k
-    // aggregate never sees a NaN or null score
-    val base = df.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-      .filter(definedCosine(norm(col("v"))))
-    // The training loop and the assignment/probe stages each rescan the
-    // vectors; cache once instead of re-reading the source per Lloyd
-    // iteration.
-    // Scoped: callers release via graft.Caching.release after materializing.
-    val vecs = graft.Caching.scoped(base.as[(Long, Array[Float])])
-    val cents = trainCodebook(vecs, nClusters, iters)
-
-    val bc = spark.sparkContext.broadcast(cents)
-    val assigned = vecs
-      .map { case (id, v) => (id, v, nearestChecked(bc.value, id, v, "ivfTopK")) }
-      .toDF("id", "v", "cluster")
-      // norm once per corpus row, BELOW the probe join — not per candidate
-      .withColumn("vn", norm(col("v")))
-    // widen before fan-out if narrow ([[widenIfNarrow]]): the cached
-    // source often spans one small file ⇒ one partition, and the scoring
-    // stage downstream of this flatMap inherits it when the assignments
-    // side broadcasts
-    val probes = widenIfNarrow(vecs)
+  /** The exact-cosine candidates of an IVF probe: each query fans out to
+    * its `nProbe` nearest clusters, joins the (id, v, cluster) assignments
+    * on cluster, and scores every candidate but itself. Shared by
+    * [[ivfTopK]] (in-memory assignments) and [[ivfProbeScores]] (the
+    * cluster-bucketed table, which the join then reads with no exchange
+    * on the corpus side). Norms are computed once per row BELOW the join,
+    * not per candidate, and a narrow query side widens before the fan-out
+    * ([[widenIfNarrow]]): a cached or one-file source would otherwise
+    * hand the scoring stage a single task whenever the assignments side
+    * broadcasts, while x38's declared shape probes with the WHOLE corpus
+    * and must not pay a corpus-wide round-robin exchange.
+    */
+  private def probeScores(queries: Dataset[(Long, Array[Float])], assignments: DataFrame,
+                          cents: Broadcast[Array[Array[Double]]], nProbe: Int,
+                          context: String): DataFrame = {
+    import queries.sparkSession.implicits._
+    val probes = widenIfNarrow(queries)
       .flatMap { case (id, v) =>
-        nearestProbes(bc.value, id, v, nProbe, "ivfTopK").map(ci => (id, v, ci))
+        nearestProbes(cents.value, id, v, nProbe, context).map(ci => (id, v, ci))
       }.toDF("query_id", "qv", "cluster")
       .withColumn("qn", norm(col("qv")))
-
-    val scored = probes.join(assigned, "cluster")
+    probes.join(assignments.withColumn("vn", norm(col("v"))), "cluster")
       .filter(col("query_id") =!= col("id"))
       .select(col("query_id"), col("id").as("nbr_id"),
         (dot(col("qv"), col("v")) / (col("qn") * col("vn"))).as("cos"))
-    // vecs stays cached for the returned (lazy) plan, which scans it twice
-    // more (assignment + probes); release via graft.Caching.release once the
-    // caller has materialized the result.
-    topKRank(scored, k)
+  }
+
+  /** IVF-flat approximate top-k — the 100 TB ANN path. A small k-means
+    * codebook is trained ([[ivfCentroids]]), every vector is assigned to
+    * its nearest centroid, and each query probes only the `nProbe`
+    * nearest clusters — candidate count scales with `nProbe / nClusters`,
+    * not with corpus size. Exact cosine re-ranks the candidates, so
+    * precision is 1; recall depends on nProbe. Every vector is both a
+    * query and a corpus row (self-pairs excluded).
+    *
+    * The vectors stay cached for the returned (lazy) plan, which scans
+    * them twice more (assignment + probes); release via
+    * graft.Caching.release once the caller has materialized the result.
+    */
+  def ivfTopK(df: DataFrame, idCol: String, vecCol: String, k: Int,
+              nClusters: Int = 16, nProbe: Int = 6, iters: Int = 5): DataFrame = {
+    // training rescans the vectors per Lloyd iteration: cache once
+    val vecs = graft.Caching.scoped(vectors(df, idCol, vecCol, "ivfTopK"))
+    val bc = df.sparkSession.sparkContext.broadcast(
+      ivfCentroids(vecs, nClusters, iters, "ivfTopK"))
+    topKRank(probeScores(vecs, assigned(vecs, bc, "ivfTopK"), bc, nProbe, "ivfTopK"), k)
   }
 
   /** The persisted IVF index: a 100 TB corpus trains its codebook ONCE and
@@ -426,12 +481,8 @@ object Similarity {
     // would unpersist caches the CALLER still has in flight
     val spark = df.sparkSession
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
-    requireIntegralId(df, idCol, "ivfBuild")
-    val base = df.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-      .filter(definedCosine(norm(col("v"))))
-    val vecs = graft.Caching.scoped(base.as[(Long, Array[Float])])
-    val cents = frozen.getOrElse(trainCodebook(vecs, nClusters, iters))
+    val vecs = graft.Caching.scoped(vectors(df, idCol, vecCol, "ivfBuild"))
+    val cents = frozen.getOrElse(ivfCentroids(vecs, nClusters, iters, "ivfBuild"))
     val bc = spark.sparkContext.broadcast(cents)
     // the two index tables are independent consumers of driver-resident
     // `cents` + the cached vectors, writing to DISTINCT table paths — one
@@ -443,48 +494,26 @@ object Similarity {
       () => cents.zipWithIndex.map { case (c, i) => (i, c) }.toSeq
         .toDF("cluster", "centroid")
         .write.mode("overwrite").format("parquet").saveAsTable(index.codebookTable),
-      () => vecs.map { case (id, v) => (id, v, nearestChecked(bc.value, id, v, "ivfBuild")) }
-        .toDF("id", "v", "cluster")
+      () => assigned(vecs, bc, "ivfBuild")
         .write.mode("overwrite").format("parquet")
         .bucketBy(index.numBuckets, "cluster")
         .saveAsTable(index.assignmentsTable)))
   }
 
-  /** The probe join against the persisted index: each query fans out to its
-    * `nProbe` nearest clusters (the codebook's frozen broadcast, loaded once
-    * per table version — [[FrozenModels]]), joins the cluster-bucketed
-    * assignments (no exchange on the corpus side), and scores candidates
-    * with exact cosine.
+  /** The probe join against the persisted index ([[probeScores]] over the
+    * cluster-bucketed assignments table, so the corpus side needs no
+    * exchange), routed by the codebook's frozen broadcast, loaded once
+    * per table version ([[FrozenModels]]).
     */
   private[graft] def ivfProbeScores(queries: DataFrame, idCol: String, vecCol: String,
                                     index: IvfIndex, nProbe: Int): DataFrame = {
     val spark = queries.sparkSession
-    import spark.implicits._
     // an ivfCompact swap that crashed between DROP and RENAME leaves the
     // corpus only under __compact — finish it rather than failing the read
     Dedup.finishCrashedSwap(spark, index.assignmentsTable)
-    graft.functions.GraftFunctions.register(spark)
     val bc = codebookModel(spark, index.codebookTable, ivfMissing("ivfQuery", index))
-    requireIntegralId(queries, idCol, "ivfProbeScores")
-    // WIDEN the query side before fan-out when it arrives narrow
-    // ([[widenIfNarrow]] — conditional since r17: x38's declared shape
-    // probes with the WHOLE corpus, which must not pay a corpus-wide
-    // round-robin exchange; a bounded batch in one small file must).
-    val probes = widenIfNarrow(queries
-      .select(col(idCol).cast("long").as("id"), col(vecCol).as("qv"))
-      .filter(definedCosine(norm(col("qv"))))
-      .as[(Long, Array[Float])])
-      .flatMap { case (id, v) =>
-        nearestProbes(bc.value, id, v, nProbe, "ivfProbeScores").map(ci => (id, v, ci))
-      }.toDF("query_id", "qv", "cluster")
-      .withColumn("qn", norm(col("qv")))
-    // norm once per assignment row, BELOW the probe join — not per candidate
-    val assigned = spark.table(index.assignmentsTable)
-      .withColumn("vn", norm(col("v")))
-    probes.join(assigned, "cluster")
-      .filter(col("query_id") =!= col("id"))
-      .select(col("query_id"), col("id").as("nbr_id"),
-        (dot(col("qv"), col("v")) / (col("qn") * col("vn"))).as("cos"))
+    probeScores(vectors(queries, idCol, vecCol, "ivfProbeScores"),
+      spark.table(index.assignmentsTable), bc, nProbe, "ivfProbeScores")
   }
 
   /** Approximate top-k against a built [[IvfIndex]] — precision 1 (exact
@@ -569,9 +598,7 @@ object Similarity {
   def ivfAppend(batch: DataFrame, idCol: String, vecCol: String, index: IvfIndex,
                 checks: TableChecks = new TableChecks): Unit = {
     val spark = batch.sparkSession
-    import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
-    requireIntegralId(batch, idCol, "ivfAppend")
+    val vecs = vectors(batch, idCol, vecCol, "ivfAppend")
     // single-writer contract: no append while ivfCompact rewrites the
     // assignments ([[StateLease]]; memoized per stream via [[TableChecks]],
     // which also finishes a swap that crashed before this stream started)
@@ -579,12 +606,7 @@ object Similarity {
     val missing = ivfMissing("ivfAppend", index)
     require(checks.exists(spark, index.codebookTable) &&
       checks.exists(spark, index.assignmentsTable), missing)
-    val bc = codebookModel(spark, index.codebookTable, missing)
-    batch.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-      .filter(definedCosine(norm(col("v"))))
-      .as[(Long, Array[Float])]
-      .map { case (id, v) => (id, v, nearestChecked(bc.value, id, v, "ivfAppend")) }
-      .toDF("id", "v", "cluster")
+    assigned(vecs, codebookModel(spark, index.codebookTable, missing), "ivfAppend")
       .write.mode("append").format("parquet")
       .bucketBy(index.numBuckets, "cluster")
       .saveAsTable(index.assignmentsTable)
@@ -636,102 +658,29 @@ object Similarity {
     def dsub: Int = dim / m
   }
 
-  /** Trains one deterministic k-means codebook per subspace on an id-hash
-    * sample — the shared [[trainCodebook]] trainer, so PQ and IVF
-    * codebooks come from the same bit-identical kernel. `ksub` ≤ 256 so a
-    * code is one byte.
+  /** Trains one deterministic k-means codebook per subspace: the shared
+    * [[lloyd]] trainer over `m` equal slices, so PQ and IVF codebooks come
+    * from the same bit-identical kernel. `ksub` ≤ 256 so a code is one
+    * byte.
     */
   def pqTrain(df: DataFrame, idCol: String, vecCol: String,
               m: Int = 8, ksub: Int = 16, iters: Int = 5): PqModel = graft.Caching.scope {
-    requireIntegralId(df, idCol, "pqTrain")
-    val spark = df.sparkSession
-    import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
-    val base = df.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-      .filter(definedCosine(norm(col("v"))))
-    // training rescans the sample m × iters times: cache once (scope-local —
+    // training rescans the sample per Lloyd iteration: cache once (scope-local —
     // fully consumed before return)
-    pqTrainVecs(graft.Caching.scoped(base.as[(Long, Array[Float])]), m, ksub, iters)
+    val vecs = graft.Caching.scoped(vectors(df, idCol, vecCol, "pqTrain"))
+    pqModelOf(lloyd(vecs, iters, "pqTrain", pqSlices(m, ksub, "pqTrain")).head)
   }
 
-  /** [[pqTrain]] over an ALREADY-CACHED, norm-filtered vector set — lets
-    * [[ivfPqBuild]] share one cache between both trainers instead of the
-    * sample being re-derived, re-counted, and re-persisted a second time.
+  /** The PQ family of a [[lloyd]] run, `m` slices of `ksub` centroids,
+    * with the one-byte code bound checked up front.
     */
-  private[graft] def pqTrainVecs(vecs: org.apache.spark.sql.Dataset[(Long, Array[Float])],
-                                 m: Int, ksub: Int, iters: Int): PqModel = {
-    require(ksub >= 1 && ksub <= 256, s"pqTrain: ksub must be in [1, 256], got $ksub")
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    // named failure instead of head()'s bare NoSuchElementException — the
-    // trainCodebook empty-corpus stance
-    val headRow = vecs.limit(1).collect()
-    require(headRow.nonEmpty,
-      "pqTrain requires a non-empty training set (is the corpus empty, " +
-        "or were all vectors zero-norm?)")
-    val dim = headRow.head._2.length
-    require(dim % m == 0, s"pqTrain: dim $dim must be divisible by m $m")
-    val dsub = dim / m
-    // all m subspace codebooks train JOINTLY — one narrow job per Lloyd
-    // iteration carrying every subspace's [ksub][dsub+1] partial sums
-    // (m·ksub·(dsub+1) doubles regardless of sample size), instead of m
-    // independent trainCodebook loops (m×iters shuffle jobs + collects of
-    // fixed latency each — the dominant cost of x47/x49/x50 at small SF).
-    // Sampling and lowest-id initialization follow the shared trainer's
-    // rules exactly, so each subspace evolves the same Lloyd trajectory
-    // the per-subspace loop produced.
-    val train = trainingSample(vecs, 100000L) // trainCodebook's trainSample default
-    val init = train.orderBy(col("id")).limit(ksub).collect().map(_._2)
-    // a sample smaller than ksub trains a shorter-but-valid codebook —
-    // the per-subspace trainCodebook loop's behavior (bounded by
-    // cents.length), which this joint loop must preserve: sizing by the
-    // requested ksub would index books(sub)(ci) past init.length on the
-    // empty-cluster branch below
-    val kEff = init.length
-    var books: Array[Array[Array[Double]]] = Array.tabulate(m) { sub =>
-      init.map(v => Array.tabulate(dsub)(j => v(sub * dsub + j).toDouble))
-    }
-    val w = dsub + 1
-    for (_ <- 1 to iters) {
-      val bc = spark.sparkContext.broadcast(books)
-      val partials = train.mapPartitions { it =>
-        val b = bc.value
-        var acc: Array[Double] = null
-        it.foreach { case (id, v) =>
-          // loud on mixed dims: a LONGER vector would silently train on
-          // its prefix (a shorter one crashes opaquely in nearest)
-          if (v.length != dim) throw new IllegalArgumentException(
-            s"pqTrain: vector id=$id has dimension ${v.length}, expected $dim")
-          if (acc == null) acc = new Array[Double](m * kEff * w)
-          var sub = 0
-          while (sub < m) {
-            val ci = nearest(b(sub), v, sub * dsub)
-            val base = (sub * kEff + ci) * w
-            var j = 0
-            while (j < dsub) { acc(base + j) += v(sub * dsub + j); j += 1 }
-            acc(base + dsub) += 1
-            sub += 1
-          }
-        }
-        if (acc == null) Iterator.empty else Iterator.single(acc)
-      }.collect()
-      if (partials.nonEmpty) {
-        val tot = new Array[Double](m * kEff * w)
-        partials.foreach { p =>
-          var i = 0; while (i < p.length) { tot(i) += p(i); i += 1 }
-        }
-        books = Array.tabulate(m) { sub =>
-          Array.tabulate(kEff) { ci =>
-            val base = (sub * kEff + ci) * w
-            val n = tot(base + dsub)
-            if (n > 0) Array.tabulate(dsub)(j => tot(base + j) / n)
-            else books(sub)(ci) // empty cluster keeps its centroid
-          }
-        }
-      }
-    }
-    PqModel(dim, m, kEff, books)
+  private def pqSlices(m: Int, ksub: Int, context: String): (Int, Int) = {
+    require(ksub >= 1 && ksub <= 256, s"$context: ksub must be in [1, 256], got $ksub")
+    m -> ksub
   }
+
+  private def pqModelOf(books: Array[Array[Array[Double]]]): PqModel =
+    PqModel(books.length * books(0)(0).length, books.length, books(0).length, books)
 
   /** One vector's m nearest-subspace-centroid codes. Loud per-row
     * dimension gate (the pqLuts query-side rule, applied to the CORPUS
@@ -753,9 +702,7 @@ object Similarity {
   }
 
   /** One query's flattened m×ksub inner-product ADC lookup table — ONE
-    * definition shared by [[pqLuts]] and [[ivfPqQuery]] (the two inline
-    * copies had already started to drift only in variable names; the
-    * pqTrainVecs comment names this divergence class). Loud per-row raise
+    * definition shared by [[pqLuts]] and [[ivfPqQuery]]. Loud per-row raise
     * on a wrong-dimension query: a longer one would build the LUT from
     * its PREFIX (plausible wrong ADC shortlist), a shorter one crashes
     * opaquely mid-loop.
@@ -798,13 +745,9 @@ object Similarity {
   def pqEncode(df: DataFrame, idCol: String, vecCol: String, model: PqModel): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
-    requireIntegralId(df, idCol, "pqEncode")
+    val vecs = vectors(df, idCol, vecCol, "pqEncode")
     val bc = spark.sparkContext.broadcast(model)
-    df.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-      .filter(definedCosine(norm(col("v"))))
-      .as[(Long, Array[Float])]
-      .map { case (id, v) => (id, v, encodeOne(bc.value, id, v), normOf(v)) }
+    vecs.map { case (id, v) => (id, v, encodeOne(bc.value, id, v), normOf(v)) }
       .toDF("id", "v", "codes", "nrm")
   }
 
@@ -819,9 +762,7 @@ object Similarity {
     val spark = queries.sparkSession
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(model)
-    queries.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-      .filter(definedCosine(norm(col("v"))))
-      .as[(Long, Array[Float])]
+    vectors(queries, idCol, vecCol, "pqTopK")
       .map { case (id, v) => (id, buildLut(bc.value, id, v), normOf(v), v) }
       .toDF("query_id", "lut", "qnrm", "qv")
   }
@@ -852,10 +793,8 @@ object Similarity {
              k: Int, m: Int = 8, ksub: Int = 16, overfetch: Int = 100,
              iters: Int = 5): DataFrame = {
     require(overfetch >= k, s"pqTopK: overfetch $overfetch must be >= k $k")
-    val spark = corpus.sparkSession
-    graft.functions.GraftFunctions.register(spark)
-    requireIntegralId(corpus, idCol, "pqTopK")
-    requireIntegralId(queries, idCol, "pqTopK")
+    Guards.requireIntegralId(corpus, idCol, "pqTopK")
+    Guards.requireIntegralId(queries, idCol, "pqTopK")
     val model = pqTrain(corpus, idCol, vecCol, m, ksub, iters)
     val codes = pqEncode(corpus, idCol, vecCol, model)
     val luts = pqLuts(queries, idCol, vecCol, model)
@@ -879,41 +818,25 @@ object Similarity {
   final case class IvfPqIndex(assignmentsTable: String, codebookTable: String,
                               pqTable: String, numBuckets: Int = 16)
 
-  /** Trains the IVF codebook AND the per-subspace PQ codebooks on the same
-    * corpus (shared deterministic trainer), then writes the three index
-    * tables in one encoding pass.
+  /** Trains the IVF codebook AND the per-subspace PQ codebooks in one
+    * [[lloyd]] run (the same sample, the same jobs), then writes the
+    * three index tables in one encoding pass.
     */
   def ivfPqBuild(df: DataFrame, idCol: String, vecCol: String, index: IvfPqIndex,
                  nClusters: Int = 16, m: Int = 8, ksub: Int = 16,
                  iters: Int = 5): Unit = graft.Caching.scope {
     val spark = df.sparkSession
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
-    requireIntegralId(df, idCol, "ivfPqBuild")
-    val base = df.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-      .filter(definedCosine(norm(col("v"))))
-    val vecs = graft.Caching.scoped(base.as[(Long, Array[Float])])
-    // the IVF and PQ trainers are independent consumers of the same cached
-    // base: run them from concurrent driver threads so their fixed per-job
-    // latencies overlap (join() publishes the results). BOTH consume the
-    // ONE cached vector set — pqTrainVecs, not pqTrain, which would
-    // re-derive, re-count, and re-persist its own copy of the same
-    // filtered corpus concurrently. Same for the two independent
-    // codebook-table writes below.
-    var centsV: Array[Array[Double]] = null
-    var pqV: PqModel = null
-    ConcurrentActions.run(Seq(
-      () => { centsV = trainCodebook(vecs, nClusters, iters); () },
-      () => { pqV = pqTrainVecs(vecs, m, ksub, iters); () }))
-    val cents = centsV
-    val pq = pqV
+    val vecs = graft.Caching.scoped(vectors(df, idCol, vecCol, "ivfPqBuild"))
+    val Seq(Array(cents), books) =
+      lloyd(vecs, iters, "ivfPqBuild", 1 -> nClusters, pqSlices(m, ksub, "ivfPqBuild"))
+    val pq = pqModelOf(books)
     val bcC = spark.sparkContext.broadcast(cents)
     val bcP = spark.sparkContext.broadcast(pq)
     // all THREE index tables are independent consumers of the trained
     // driver-resident models + the one cached vector set, each writing to
     // its own table path — one concurrent action set folds the two tiny
     // codebook commits' fixed job latencies inside the encoding pass
-    // (round 15; previously the assignments write ran sequentially after)
     ConcurrentActions.run(Seq(
       () => cents.zipWithIndex.map { case (c, i) => (i, c) }.toSeq
         .toDF("cluster", "centroid")
@@ -922,10 +845,7 @@ object Similarity {
           book.zipWithIndex.map { case (cent, code) => (sub, code, cent) }
         }.toSeq.toDF("sub", "code", "centroid")
         .write.mode("overwrite").format("parquet").saveAsTable(index.pqTable),
-      () => vecs.map { case (id, v) =>
-          (id, v, nearestChecked(bcC.value, id, v, "ivfPqBuild"),
-            encodeOne(bcP.value, id, v), normOf(v))
-        }.toDF("id", "v", "cluster", "codes", "nrm")
+      () => assignedPq(vecs, bcC, bcP, "ivfPqBuild")
         .write.mode("overwrite").format("parquet")
         .bucketBy(index.numBuckets, "cluster")
         .saveAsTable(index.assignmentsTable)))
@@ -980,21 +900,15 @@ object Similarity {
                                      index: IvfPqIndex, nProbe: Int): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     Dedup.finishCrashedSwap(spark, index.assignmentsTable)
     val missing = ivfPqMissing("ivfPqQuery", index)
     val bcC = codebookModel(spark, index.codebookTable, missing)
     val bcP = pqModel(spark, index.pqTable, missing)
     // one pass per query: nProbe (query, cluster) rows each carrying the
-    // query's ADC lookup table, norm and vector
-    requireIntegralId(queries, idCol, "ivfPqQuery")
-    // widen before fan-out if narrow ([[widenIfNarrow]]): a one-file
-    // query batch would otherwise hand the ADC scan a single task
-    // whenever the corpus side broadcasts
-    val probes = widenIfNarrow(queries
-      .select(col(idCol).cast("long").as("qid"), col(vecCol).as("qv"))
-      .filter(definedCosine(norm(col("qv"))))
-      .as[(Long, Array[Float])])
+    // query's ADC lookup table, norm and vector; widened before fan-out if
+    // narrow ([[widenIfNarrow]]): a one-file query batch would otherwise
+    // hand the ADC scan a single task whenever the corpus side broadcasts
+    val probes = widenIfNarrow(vectors(queries, idCol, vecCol, "ivfPqQuery"))
       .flatMap { case (id, v) =>
         // LUT, probe rule, and norm each built ONCE per query (the norm
         // was previously recomputed per probe row), through the shared
@@ -1022,24 +936,15 @@ object Similarity {
   def ivfPqAppend(batch: DataFrame, idCol: String, vecCol: String,
                   index: IvfPqIndex, checks: TableChecks = new TableChecks): Unit = {
     val spark = batch.sparkSession
-    import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
-    requireIntegralId(batch, idCol, "ivfPqAppend")
+    val vecs = vectors(batch, idCol, vecCol, "ivfPqAppend")
     // memoized per stream ([[TableChecks]] — the ivfAppend rationale)
     checks.ensureWritable(spark, index.assignmentsTable)
     val missing = ivfPqMissing("ivfPqAppend", index)
     require(checks.exists(spark, index.codebookTable) &&
       checks.exists(spark, index.pqTable) &&
       checks.exists(spark, index.assignmentsTable), missing)
-    val bcC = codebookModel(spark, index.codebookTable, missing)
-    val bcP = pqModel(spark, index.pqTable, missing)
-    batch.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-      .filter(definedCosine(norm(col("v"))))
-      .as[(Long, Array[Float])]
-      .map { case (id, v) =>
-        (id, v, nearestChecked(bcC.value, id, v, "ivfPqAppend"),
-          encodeOne(bcP.value, id, v), normOf(v))
-      }.toDF("id", "v", "cluster", "codes", "nrm")
+    assignedPq(vecs, codebookModel(spark, index.codebookTable, missing),
+      pqModel(spark, index.pqTable, missing), "ivfPqAppend")
       .write.mode("append").format("parquet")
       .bucketBy(index.numBuckets, "cluster")
       .saveAsTable(index.assignmentsTable)

@@ -29,7 +29,7 @@ import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType, IntegerTyp
 object Bloom {
 
   /** Golden-ratio odd multiplier (Knuth); same constant the id-hash
-    * sampler in Similarity.trainCodebook uses.
+    * sampler in Similarity.lloyd uses.
     */
   private val Phi64 = 0x9E3779B97F4A7C15L
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.model.KRecord
@@ -35,28 +35,29 @@ import graft.model.KRecord
   * the same way there. The contract is ENFORCEABLE (round 15): arm the
   * opt-in session conf `spark.graft.streaming.maxSliceRows` and a key
   * whose single-trigger slice exceeds it raises a named error instead of
-  * driving the executor into an opaque OOM — see [[sliceCapOf]].
+  * driving the executor into an opaque OOM — see [[maxSliceRows]].
   */
 object StatefulOps {
 
   /** Session conf arming the per-(key, trigger) buffered-row guard. */
   val MaxSliceRowsConf = "spark.graft.streaming.maxSliceRows"
 
-  /** OPT-IN guard on the per-(key, trigger) buffer the header's memory
-    * contract describes. Read once at operator CONSTRUCTION (driver side —
-    * executors cannot consult the session) and captured in the state
-    * function's closure; absent conf = unarmed (Int.MaxValue). A
-    * malformed or non-positive value raises at construction — a guard
+  /** The ONE reader of the OPT-IN [[MaxSliceRowsConf]] guard: the
+    * per-(key, trigger) buffer the header's memory contract describes,
+    * and the same bound on the per-id set merge of the streaming MinHash
+    * verify ([[graft.ext.Dedup]]) and the exact-dedup group of
+    * [[graft.ext.CurationPipeline.streamIncrement]]. Read once at operator
+    * CONSTRUCTION (driver side — executors cannot consult the session) and
+    * captured in the closure or plan; absent conf = unarmed (None). A
+    * malformed or non-positive value raises naming the conf — a guard
     * that silently disarmed is worse than none.
     */
-  private def sliceCapOf(ds: Dataset[_]): Int =
-    ds.sparkSession.conf.getOption(MaxSliceRowsConf) match {
-      case None => Int.MaxValue
-      case Some(v) =>
-        val n = v.trim.toIntOption.getOrElse(throw new IllegalArgumentException(
-          s"$MaxSliceRowsConf must be a positive int, got '$v'"))
-        require(n > 0, s"$MaxSliceRowsConf must be positive, got $n")
-        n
+  private[graft] def maxSliceRows(spark: SparkSession): Option[Int] =
+    spark.conf.getOption(MaxSliceRowsConf).map { v =>
+      val n = v.trim.toIntOption.getOrElse(throw new IllegalArgumentException(
+        s"$MaxSliceRowsConf must be a positive int, got '$v'"))
+      require(n > 0, s"$MaxSliceRowsConf must be positive, got $n")
+      n
     }
 
   /** Buffer one key's trigger slice under the opt-in cap: the 100x-keys
@@ -64,9 +65,8 @@ object StatefulOps {
     * remediations, at the moment the cap is crossed (nothing larger is
     * ever materialized).
     */
-  private def bufferSlice[T](key: Any, it: Iterator[T], cap: Int): Seq[T] =
-    if (cap == Int.MaxValue) it.toSeq
-    else {
+  private def bufferSlice[T](key: Any, it: Iterator[T], capOpt: Option[Int]): Seq[T] =
+    capOpt.fold(it.toSeq) { cap =>
       val buf = new scala.collection.mutable.ArrayBuffer[T]()
       while (it.hasNext) {
         buf += it.next()
@@ -122,7 +122,7 @@ object StatefulOps {
     */
   def latestByKey[K, V](ds: Dataset[KRecord[K, V]])(
       implicit ek: Encoder[K], ec: Encoder[Cell[V]], er: Encoder[KRecord[K, V]]): Dataset[KRecord[K, V]] = {
-    val cap = sliceCapOf(ds)
+    val cap = maxSliceRows(ds.sparkSession)
     ds.groupByKey(_.key)
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
         (key: K, it: Iterator[KRecord[K, V]], state: GroupState[Cell[V]]) =>
@@ -175,7 +175,7 @@ object StatefulOps {
       er: Encoder[KRecord[K, V]]): Dataset[KRecord[K, V]] = {
     require(retentionMs > 0,
       s"windowedLatestByKey: retentionMs must be positive, got $retentionMs")
-    val cap = sliceCapOf(ds)
+    val cap = maxSliceRows(ds.sparkSession)
     watermarked(ds, watermarkDelay).groupByKey(_.key)
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
         (key: K, it: Iterator[WRec[K, V]], state: GroupState[Cell[V]]) =>
@@ -229,7 +229,7 @@ object StatefulOps {
   def counterByKey[K](ds: Dataset[KRecord[K, Long]])(
       implicit ek: Encoder[K], ec: Encoder[CounterCell],
       er: Encoder[KRecord[K, Long]]): Dataset[KRecord[K, Long]] = {
-    val cap = sliceCapOf(ds)
+    val cap = maxSliceRows(ds.sparkSession)
     ds.groupByKey(_.key)
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
         (key: K, it: Iterator[KRecord[K, Long]], state: GroupState[CounterCell]) =>
@@ -293,7 +293,7 @@ object StatefulOps {
     // StatefulOps$ into the task; the lambda's static call on the
     // serializing-by-MODULE$ RateLimit object captures nothing.)
     val render: Option[V] => String = v => graft.ops.RateLimit.deepRender(v)
-    val cap = sliceCapOf(ds)
+    val cap = maxSliceRows(ds.sparkSession)
     val admit: (K, Iterator[KRecord[K, V]], GroupState[Bucket]) => Iterator[KRecord[K, V]] = (key, it, state) => {
       var b = state.getOption.getOrElse(Bucket(capacity, 0L))
       val out = Vector.newBuilder[KRecord[K, V]]
@@ -352,7 +352,7 @@ object StatefulOps {
     // a negative delay silently releases records BEFORE their event time —
     // the fail-loud stance every sibling op applies to its knobs
     require(delayMs >= 0, s"delay: delayMs must be non-negative, got $delayMs")
-    val cap = sliceCapOf(ds)
+    val cap = maxSliceRows(ds.sparkSession)
     watermarked(ds, watermarkDelay).groupByKey(_.key)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (key: K, it: Iterator[WRec[K, V]], state: GroupState[Held[K, V]]) =>
@@ -425,7 +425,7 @@ object StatefulOps {
       .map(r => SideRec[K, L, R](r.key, r.value, None, isLeft = true, r.eventTime))
       .union(rightLog
         .map(r => SideRec[K, L, R](r.key, None, r.value, isLeft = false, r.eventTime)))
-    val cap = sliceCapOf(tagged)
+    val cap = maxSliceRows(tagged.sparkSession)
     tagged.groupByKey(_.key)
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
         (key: K, it: Iterator[SideRec[K, L, R]], state: GroupState[JoinState[L, R]]) =>
@@ -477,7 +477,7 @@ object StatefulOps {
       .map(r => SideRec[K, L, R](r.key, r.value, None, isLeft = true, r.eventTime))
       .union(rightLog
         .map(r => SideRec[K, L, R](r.key, None, r.value, isLeft = false, r.eventTime)))
-    val cap = sliceCapOf(tagged)
+    val cap = maxSliceRows(tagged.sparkSession)
     tagged.groupByKey(_.key)
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
         (key: K, it: Iterator[SideRec[K, L, R]], state: GroupState[JoinState[L, R]]) =>
@@ -528,7 +528,7 @@ object StatefulOps {
       er: Encoder[KRecord[K, Long]]): Dataset[KRecord[K, Long]] = {
     require(punctuateIntervalMs > 0,
       s"punctuatedCount: punctuateIntervalMs must be positive, got $punctuateIntervalMs")
-    val cap = sliceCapOf(ds)
+    val cap = maxSliceRows(ds.sparkSession)
     watermarked(ds, watermarkDelay).groupByKey(_.key)
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
         (key: K, it: Iterator[WRec[K, Long]], state: GroupState[Counter]) =>

@@ -1,14 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.functions._
-
 import graft.ext.Similarity
 
 /** Offline IVF codebook trainer — emits the frozen-centroid fixture
   * [[graft.ext.Similarity.frozenCentroids]] loads (TSV: `cluster <TAB>
   * space-separated Double.toString components`, ids 0..k-1 in order).
   *
-  * Training is [[Similarity.trainCodebook]] verbatim (deterministic
+  * Training is [[Similarity.ivfCentroids]] verbatim (deterministic
   * lowest-id init + fixed Lloyd iterations over the id-hash-bounded
   * sample), run once here and committed, never at query time — the
   * production IVF deployment shape (codebooks are trained offline and
@@ -30,14 +28,10 @@ object IvfCentroidsTrain {
     val Array(sfDir, outFile, kS, itersS) = args
     val (k, iters) = (kS.toInt, itersS.toInt)
     val spark = graft.GraftSession.local("graft-ivf-train")
-    import spark.implicits._
     // the ivfBuild input contract: integral id, defined-cosine vectors only
-    val vecs = graft.sources.Tables.load(spark, sfDir, "embeddings")
-      .select(col("vec_id").cast("long").as("id"), col("embedding").as("v"))
-      .filter(Similarity.norm(col("v")) > 0 &&
-        Similarity.norm(col("v")) < lit(Double.PositiveInfinity))
-      .as[(Long, Array[Float])]
-    val cents = Similarity.trainCodebook(vecs, k, iters)
+    val vecs = Similarity.vectors(graft.sources.Tables.load(spark, sfDir, "embeddings"),
+      "vec_id", "embedding", "IvfCentroidsTrain")
+    val cents = Similarity.ivfCentroids(vecs, k, iters, "IvfCentroidsTrain")
     val out = new java.io.PrintWriter(outFile, "UTF-8")
     try cents.zipWithIndex.foreach { case (c, i) =>
       out.println(s"$i\t${c.map(_.toString).mkString(" ")}")

@@ -179,6 +179,43 @@ class ExtensionsSpec extends SparkSpec {
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
+  test("a malformed maxSliceRows raises the same named error from every consumer") {
+    import spark.implicits._
+    import graft.ext.CurationPipeline
+    import graft.model.KRecord
+    import graft.streaming.StatefulOps
+    val suffix = java.lang.Long.toHexString(System.nanoTime())
+    val idx = Dedup.LshIndex(s"bad_bands_$suffix", s"bad_shingles_$suffix", numBuckets = 2)
+    val conf = StatefulOps.MaxSliceRowsConf
+    val text = "alpha beta gamma delta epsilon"
+    val cfg = CurationPipeline.Config(minTokens = 1L, langs = Set("en"),
+      nearDupThreshold = 0.5, maxGramDf = None,
+      splits = Seq("train" -> 1.0), tokensPerShard = 25L, shardBuckets = 2)
+    val state = CurationPipeline.StreamState("bad_cap_" + suffix,
+      java.nio.file.Files.createTempDirectory("graft_bad_cap").toString, numBuckets = 2)
+    try {
+      Dedup.buildLshIndex(Seq(1L -> text).toDF("doc_id", "text"), "doc_id", "text", idx)
+      // a long-sized value the Int reader rejects, like any other junk
+      spark.conf.set(conf, "3000000000")
+      val consumers: Seq[(String, () => Any)] = Seq(
+        "StatefulOps" -> (() => StatefulOps.latestByKey(Seq(KRecord.of(7, "v", 1L)).toDS())),
+        "Dedup" -> (() => Dedup.minHashLshCrossIndex(
+          Seq(7L -> text).toDF("doc_id", "text"), "doc_id", "text", idx, 0.5)),
+        "CurationPipeline" -> (() => CurationPipeline.streamIncrement(
+          Seq(7L -> text).toDF("doc_id", "text"), "doc_id", "text", None, cfg,
+          state, batchId = 0L)))
+      consumers.foreach { case (name, run) =>
+        val e = intercept[IllegalArgumentException](run())
+        assert(e.getMessage === s"$conf must be a positive int, got '3000000000'", name)
+      }
+    } finally {
+      spark.conf.unset(conf)
+      graft.Caching.release(spark)
+      state.dropTables(spark)
+      Seq(idx.bandsTable, idx.shinglesTable).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    }
+  }
+
   test("connectedComponents collapses chains to min-id clusters; keepListCollapsed keeps one per chain") {
     import spark.implicits._
     // two components: the chain 1-2-3-4 (transitive only — (1,4) is not a

@@ -747,7 +747,7 @@ class PropertySpec extends SparkSpec {
   // non-integer rationals, but both sides hold the same bit patterns.
 
   /** Sequential Lloyd on one coordinate slice [off, off+dsub): the model for
-    * both trainers (trainCodebook is the off=0, dsub=dim case).
+    * every slice of the one trainer (IVF is the off=0, dsub=dim case).
     */
   private def lloydModel(rows: Seq[(Long, Array[Float])], k: Int, iters: Int,
                          off: Int, dsub: Int): Array[Array[Double]] = {
@@ -777,7 +777,7 @@ class PropertySpec extends SparkSpec {
     cents
   }
 
-  test("trainCodebook equals the sequential Lloyd model on integer-valued vectors") {
+  test("ivfCentroids equals the sequential Lloyd model on integer-valued vectors") {
     import spark.implicits._
     for (seed <- Seq(7L, 8L, 9L)) {
       val dim = 6
@@ -789,7 +789,7 @@ class PropertySpec extends SparkSpec {
         .zipWithIndex.map { case ((_, v), i) => ((i * 37L) % 1000L, v) }
         .groupBy(_._1).map(_._2.head).toSeq // unique ids
       val ds = shuffled.toDF("id", "v").as[(Long, Array[Float])].repartition(7)
-      val got = graft.ext.Similarity.trainCodebook(ds, nClusters = 5, iters = 4)
+      val got = graft.ext.Similarity.ivfCentroids(ds, nClusters = 5, iters = 4, "PropertySpec")
       val want = lloydModel(shuffled, k = 5, iters = 4, off = 0, dsub = dim)
       assert(got.length == want.length)
       got.zip(want).zipWithIndex.foreach { case ((g, w), ci) =>
@@ -802,8 +802,8 @@ class PropertySpec extends SparkSpec {
   test("pqTrain with a training sample smaller than ksub trains the shorter valid codebook") {
     import spark.implicits._
     // 5 vectors, ksub=16: init collects only 5 centroids, so the joint
-    // Lloyd loop must size by the ACTUAL codebook (trainCodebook's
-    // cents.length-bounded behavior) — sizing by the requested ksub
+    // Lloyd loop must size by the ACTUAL codebook (the IVF codebook's
+    // init-length-bounded behavior) — sizing by the requested ksub
     // indexed past the init array on the empty-cluster branch
     val dim = 4; val m = 2; val iters = 3
     val rows = (1L to 5L).map(i =>
@@ -845,5 +845,40 @@ class PropertySpec extends SparkSpec {
         }
       }
     }
+  }
+
+  test("ivfPqBuild trains its IVF and PQ codebooks jointly, each equal to the sequential Lloyd model") {
+    import spark.implicits._
+    val dim = 8; val m = 2; val nClusters = 5; val ksub = 4; val iters = 3
+    val rows = sample(Gen.listOfN(70,
+      Gen.listOfN(dim, Gen.choose(0, 3)).map(_.map(_.toFloat).toArray)), 21L)
+      .zipWithIndex.map { case (v, i) => (i.toLong * 17L % 991L, v) }
+      .groupBy(_._1).map(_._2.head).toSeq // unique ids
+      .filter(_._2.exists(_ != 0f)) // the build drops zero-norm vectors
+    val suffix = java.lang.Long.toHexString(System.nanoTime())
+    val index = graft.ext.Similarity.IvfPqIndex(s"joint_assign_$suffix",
+      s"joint_codebook_$suffix", s"joint_pq_$suffix", numBuckets = 2)
+    try {
+      // nClusters != ksub: the two families size their codebooks apart
+      val (_, jobs) = jobsRunBy(graft.ext.Similarity.ivfPqBuild(
+        rows.toDF("vec_id", "embedding").repartition(4), "vec_id", "embedding", index,
+        nClusters = nClusters, m = m, ksub = ksub, iters = iters))
+      info(s"ivfPqBuild ran $jobs Spark jobs")
+      def same(got: Seq[Array[Double]], want: Seq[Array[Double]], what: String): Unit = {
+        assert(got.length == want.length, what)
+        got.zip(want).zipWithIndex.foreach { case ((g, w), ci) =>
+          assert(java.util.Arrays.equals(g, w), s"$what centroid $ci: ${g.toSeq} != ${w.toSeq}")
+        }
+      }
+      same(spark.table(index.codebookTable).as[(Int, Array[Double])].collect()
+        .sortBy(_._1).map(_._2).toSeq,
+        lloydModel(rows, nClusters, iters, off = 0, dsub = dim).toSeq, "ivf")
+      val pq = spark.table(index.pqTable).as[(Int, Int, Array[Double])].collect()
+      val dsub = dim / m
+      for (sub <- 0 until m)
+        same(pq.filter(_._1 == sub).sortBy(_._2).map(_._3).toSeq,
+          lloydModel(rows, ksub, iters, off = sub * dsub, dsub = dsub).toSeq, s"pq sub=$sub")
+    } finally Seq(index.assignmentsTable, index.codebookTable, index.pqTable)
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 }
