@@ -17,7 +17,12 @@ object GraftSession {
   def defaultCpus: String =
     sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
 
-  /** The one session builder of every main and spec. Logs at WARN. */
+  /** The one session builder of every main and spec. Logs at WARN.
+    *
+    * `file:` paths go through [[graft.streaming.NioLocalFileSystem]], which
+    * sets file modes without forking `chmod` (see its caveat on Hadoop's
+    * `FileSystem` cache).
+    */
   def local(appName: String = "graft", cpus: String = defaultCpus): SparkSession = {
     val spark = SparkSession.builder()
       .appName(appName)
@@ -29,6 +34,7 @@ object GraftSession {
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[graft.streaming.NioLocalFileSystem].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     tune(spark)
@@ -60,8 +66,11 @@ object GraftSession {
     * [[graft.streaming.LocalCheckpointFileManager]]: Spark's default
     * `FileContext` manager forks a `readlink` process on every rename
     * (26-28 ms each from a 3 GB heap, against 0.2 ms), which made up most
-    * of a small micro-batch's commit time. Every other scheme keeps Spark's
-    * default manager. Both write a Hadoop `.crc` beside each file.
+    * of a small micro-batch's commit time. The `chmod` fork of each created
+    * file is gone too, at the filesystem [[local]] registers for `file:`;
+    * a session built elsewhere keeps its own `file:` filesystem and those
+    * forks. Every other scheme keeps Spark's default manager.
+    * Both write a Hadoop `.crc` beside each file.
     */
   def tune(spark: SparkSession): SparkSession = {
     // The driver's `events` table carries parquet TIMESTAMP(NANOS), which

@@ -236,8 +236,8 @@ object CurationPipeline {
     // 4: near-dup dedup — LSH pairs, then either the per-pair drop or the
     // full cluster collapse (one survivor per connected component).
     // [[Dedup.minHashLshDocs]] builds shingle sets + bands in one narrow
-    // pass; it needs unique ids, which exactKept has by construction
-    // (stage 3 keeps one doc per text hash)
+    // pass; exactKept has unique ids by construction (stage 3 keeps one
+    // doc per text hash), so its verify keeps the in-row set sizes
     val pairs = graft.ProbeTiming("build_pairs")(Dedup.minHashLshDocs(exactKept, idCol, textCol,
       cfg.nearDupThreshold, cfg.shingleN))
     val lexKept = graft.ProbeTiming("build_keep")(

@@ -145,7 +145,7 @@ object Dedup {
     * share any (band, band_key) (equi-join, no O(n²)); candidates are then
     * verified with exact Jaccard, so output has no false positives and
     * matches [[jaccardPairs]] whenever LSH recall is 1. Set sizes are
-    * in-row (`size(ss)`), not an aggregate exchange.
+    * in-row (`size(ss)`) when ids are unique, not an aggregate exchange.
     *
     * P(miss) for a pair at similarity s = (1 - s^bandSize)^numBands;
     * defaults (64 hashes, bands of 2) give P(miss at 0.5) ≈ 7e-5.
@@ -157,7 +157,9 @@ object Dedup {
     * micro-batch-bounded candidates; a batch corpus' candidate set is
     * corpus-scale). Output: (d1, d2, inter_cnt, union_cnt, jaccard) with
     * d1 < d2 (spec-pinned against exact [[jaccardPairs]] + the DuckDB
-    * oracle); ids must be unique per row — the corpus-table contract.
+    * oracle). Same-id rows score as ONE set union per id, as
+    * [[minHashLshIncrement]] does: each row's bands probe, and the verify
+    * counts distinct shingles per id.
     */
   def minHashLshDocs(docs: DataFrame, idCol: String, textCol: String,
                      threshold: Double, shingleN: Int = 3,
@@ -176,9 +178,8 @@ object Dedup {
       .filter(col("d1") < col("d2"))
       .select("d1", "d2").distinct()
     // exploded verify off the cached set rows: ss is already distinct, so
-    // no distinct exchange re-appears here
-    val sh = sets.select(col("id"), explode(col("ss")).as("s"))
-    val sizes = sets.select(col("id"), size(col("ss")).cast("long").as("n"))
+    // no distinct exchange re-appears here unless an id repeats
+    val (sh, sizes) = verifyRows(sets, repeatedIds(sets).head)
     emitVerifiedPairs(
       cand
         .join(sh.toDF("d1", "s"), "d1")
@@ -188,6 +189,38 @@ object Dedup {
         .join(sizes.toDF("d1", "n1"), "d1")
         .join(sizes.toDF("d2", "n2"), "d2"),
       threshold)
+  }
+
+  /** The batch entries' exploded verify rows (id, s) and set sizes (id, n)
+    * over the scoped-persisted [[shingleSetsWithBands]] rows `sets`.
+    * Same-id rows (a duplicate id is legal on these public entries) fold
+    * into one set union per id, as in [[minHashLshIncrement]], through a
+    * `distinct` over the id-partitioned exploded rows. That fold shuffles
+    * every shingle (x03 at sf0.1 took 1.8× as long with it, on a 4-vCPU
+    * VM), so it runs only where [[repeatedIds]] found a repeat. Unique ids
+    * keep the in-row sizes.
+    */
+  private def verifyRows(sets: DataFrame, repeats: Boolean): (DataFrame, DataFrame) = {
+    val sh = sets.select(col("id"), explode(col("ss")).as("s"))
+    if (!repeats)
+      (sh, sets.select(col("id"), size(col("ss")).cast("long").as("n")))
+    else {
+      val merged = sh.repartition(col("id")).distinct()
+      (merged, merged.groupBy("id").agg(count(lit(1)).as("n")))
+    }
+  }
+
+  /** Whether each of `sides` (scoped-persisted [[shingleSetsWithBands]]
+    * rows) repeats an id, from one job that counts every side's ids and
+    * fills the persists the pair plan reads anyway. Rows without shingles,
+    * which are not in the set rows, cannot change a score.
+    */
+  private def repeatedIds(sides: DataFrame*): Seq[Boolean] = {
+    val hit = sides.zipWithIndex
+      .map { case (sets, i) =>
+        sets.groupBy("id").count().filter(col("count") > 1).select(lit(i).as("side")) }
+      .reduce(_ union _).distinct().collect().map(_.getInt(0)).toSet
+    sides.indices.map(hit)
   }
 
   /** Cross-corpus near-dup pairs — "dedup this dump against the previous
@@ -206,14 +239,16 @@ object Dedup {
     *
     * Scale: each side builds its distinct shingle set + band keys in ONE
     * narrow in-row pass ([[shingleSetsWithBands]], so the two corpora band
-    * identically) and set sizes come in-row; candidates are ONE equi-join
-    * between the two band sets, so n_corpus × n_ref never materializes —
+    * identically) and set sizes come in-row for unique ids; candidates
+    * are ONE equi-join between the two band sets, so n_corpus × n_ref
+    * never materializes —
     * and vs running [[minHashLshDocs]] over a tagged union and filtering,
     * neither side pays its own within-side candidate half (for a dump
     * re-crawled at 90% overlap that half is most of the join). Verify is
     * the exploded between-side equi-join ([[minHashLshDocs]]' corpus-scale
-    * verify shape). Ids must be unique per row within each side; callers
-    * release the scoped persists via [[graft.Caching.release]].
+    * verify shape). Same-id rows within a side score as one set union per
+    * id, as in [[minHashLshDocs]]; callers release the scoped persists via
+    * [[graft.Caching.release]].
     */
   def minHashLshCrossDocs(corpus: DataFrame, reference: DataFrame,
                           idCol: String, textCol: String, threshold: Double,
@@ -232,18 +267,17 @@ object Dedup {
         posexplode(col("bk")).as(Seq("band", "band_key"))),
         Seq("band", "band_key"))
       .select("corpus_id", "ref_id").distinct()
+    val Seq(cRepeats, rRepeats) = repeatedIds(c, r)
+    val (cSh, cSizes) = verifyRows(c, cRepeats)
+    val (rSh, rSizes) = verifyRows(r, rRepeats)
     emitVerifiedPairs(
       cand
-        .join(c.select(col("id").as("corpus_id"), explode(col("ss")).as("s")),
-          "corpus_id")
-        .join(r.select(col("id").as("ref_id"), explode(col("ss")).as("s2")),
-          "ref_id")
+        .join(cSh.toDF("corpus_id", "s"), "corpus_id")
+        .join(rSh.toDF("ref_id", "s2"), "ref_id")
         .filter(col("s") === col("s2"))
         .groupBy("corpus_id", "ref_id").agg(count(lit(1)).as("inter_cnt"))
-        .join(c.select(col("id").as("corpus_id"),
-          size(col("ss")).cast("long").as("n1")), "corpus_id")
-        .join(r.select(col("id").as("ref_id"),
-          size(col("ss")).cast("long").as("n2")), "ref_id")
+        .join(cSizes.toDF("corpus_id", "n1"), "corpus_id")
+        .join(rSizes.toDF("ref_id", "n2"), "ref_id")
         .select(col("corpus_id").as("d1"), col("ref_id").as("d2"),
           col("inter_cnt"), col("n1"), col("n2")),
       threshold)

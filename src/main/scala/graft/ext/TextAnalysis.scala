@@ -497,22 +497,15 @@ object TextAnalysis {
     *
     * Output: k rows — (rank INT best-first, idCol) — ids only, the
     * similarity-output convention. Docs matching no term never reach the
-    * aggregate.
+    * aggregate. Ids ride `graft_topk`'s LONG slot, so a non-integral id
+    * column is rejected up front with remediation (the cosineLshIncrement
+    * rule) and integral ids narrower than long come back WIDENED to long.
     */
-  /** The BM25 rankers carry doc ids through `graft_topk`'s LONG slot: a
-    * non-integral id column would fail at analysis with the kernel's
-    * opaque type error, so reject it here with remediation (the
-    * cosineLshIncrement rule). Integral ids narrower than long come back
-    * WIDENED to long in the output.
-    */
-  private def requireIntegralId(df: DataFrame, idCol: String, context: String): Unit =
-    Guards.requireIntegralId(df, idCol, context)
-
   def bm25TopK(df: DataFrame, idCol: String, textCol: String,
                terms: Seq[String], k: Int): DataFrame = {
     require(terms.nonEmpty, "bm25TopK requires at least one query term")
     require(k > 0, s"k must be positive: $k")
-    requireIntegralId(df, idCol, "bm25TopK")
+    Guards.requireIntegralId(df, idCol, "bm25TopK")
     // defensive, like every other graft_* consumer: a fresh session that
     // never passed through Tables.load would otherwise throw
     // UNRESOLVED_ROUTINE on graft_topk
@@ -604,7 +597,7 @@ object TextAnalysis {
     // "no matches", with no error
     maxTermDf.foreach(cap => require(cap >= 1,
       s"bm25Join: maxTermDf must be >= 1, got $cap"))
-    requireIntegralId(corpus, idCol, "bm25Join")
+    Guards.requireIntegralId(corpus, idCol, "bm25Join")
     graft.functions.GraftFunctions.register(corpus.sparkSession)
     val toked = corpus.select(col(idCol).as("__doc"),
         tokens(lower(col(textCol))).as("__t"))

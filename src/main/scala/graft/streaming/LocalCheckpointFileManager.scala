@@ -14,7 +14,9 @@ import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileMan
   * status call, and that forks a `readlink` process (Hadoop 3.4). From a
   * JDK 17 JVM with a 3 GB heap on a 4-vCPU VM one rename costs 26-28 ms
   * that way and 0.2 ms through `FileSystem`. A micro-batch renames one
-  * offset file, one commit file and one delta per state partition.
+  * offset file, one commit file and one delta per state partition. (The
+  * `chmod` fork that each created file also paid is gone at the
+  * filesystem: [[NioLocalFileSystem]] sets modes without a process.)
   *
   * Semantics on `file:` are unchanged: with `overwriteIfPossible = false`
   * both managers check that the target is absent before `rename(2)` and
@@ -60,6 +62,9 @@ object LocalCheckpointFileManager {
     * refuses to rename onto an existing file; Spark's manager would then
     * keep the old file and leave the temp file behind. State-store deltas
     * and snapshots are written with `overwriteIfPossible = true`.
+    * [[NioLocalFileSystem]] replaces the target on its own, but a session
+    * not built by [[graft.GraftSession.local]] (one [[graft.GraftSession.tune]]
+    * was handed) keeps Hive's class for `file:`.
     */
   private final class Overwriting(path: Path, conf: Configuration)
       extends FileSystemBasedCheckpointFileManager(path, conf) {

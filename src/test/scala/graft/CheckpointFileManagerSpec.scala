@@ -81,15 +81,36 @@ class CheckpointFileManagerSpec extends SparkSpec {
         assert(!m.exists(q) && qLeft.isEmpty, qLeft)
         Seq(kept, replaced, qLeft, listed)
       }
-    assert(scenario(new LocalCheckpointFileManager(_, _)) ==
-      scenario(new FileContextBasedCheckpointFileManager(_, _)))
+    val expected = scenario(new FileContextBasedCheckpointFileManager(_, _))
+    assert(scenario(new LocalCheckpointFileManager(_, _)) == expected)
+    // Hive's file: filesystem refuses to rename onto a file; the manager's
+    // overwriting rename still replaces it
+    assert(scenario { (p, conf) =>
+      onProxy.foreach { case (k, v) => conf.set(k, v) }
+      val m = new LocalCheckpointFileManager(p, conf)
+      assert(m.delegate.isInstanceOf[FileSystemBasedCheckpointFileManager])
+      m
+    } == expected)
   }
 
-  test("a changelog join restarts on a checkpoint Spark's default manager wrote") {
+  /** Hadoop confs that put Hive's `ProxyLocalFileSystem` on `file:`; the
+    * cache would hand back the session's instance, so it is bypassed.
+    */
+  private val onProxy = Map(
+    "fs.file.impl" -> "org.apache.hadoop.hive.ql.io.ProxyLocalFileSystem",
+    "fs.file.impl.disable.cache" -> "true")
+
+  /** Runs a changelog join for two AvailableNow batches with `old` set on
+    * the session (`None` unsets a key), then restarts it on the same
+    * checkpoint with the tuned session's confs and returns every emitted
+    * (batch, left, right). `writtenBy` checks the checkpoint's writer while
+    * `old` holds.
+    */
+  private def restartRows(old: Map[String, Option[String]])(writtenBy: java.io.File => Unit)
+      : Seq[(Long, Option[String], Option[String])] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val key = LocalCheckpointFileManager.ConfKey
-    val tuned = spark.conf.get(key)
+    val tuned = old.keys.map(k => k -> spark.conf.getOption(k)).toMap
     val probes = MemoryStream[KRecord[Int, String]]
     val table = MemoryStream[KRecord[Int, String]]
     val emitted = new java.util.concurrent.ConcurrentLinkedQueue[(Long, StatefulOps.JoinEmit[Int, String, String])]()
@@ -104,29 +125,57 @@ class CheckpointFileManagerSpec extends SparkSpec {
           .trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
       }
-      def manager(): CheckpointFileManager =
-        CheckpointFileManager.create(new Path(dir.toURI), spark.sessionState.newHadoopConf())
       try {
-        spark.conf.unset(key)
+        old.foreach {
+          case (k, Some(v)) => spark.conf.set(k, v)
+          case (k, None) => spark.conf.unset(k)
+        }
         table.addData(KRecord.of(1, "t1", 1L), KRecord.of(2, "t2", 2L))
         probes.addData(KRecord.of(1, "p1", 3L))
         run()
         table.addData(KRecord.of(2, "t2b", 4L))
         probes.addData(KRecord.of(2, "p2", 5L))
         run()
-        assert(manager().isInstanceOf[FileContextBasedCheckpointFileManager])
-      } finally spark.conf.set(key, tuned)
+        writtenBy(dir)
+      } finally tuned.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
       probes.addData(KRecord.of(1, "p3", 6L), KRecord.of(2, "p4", 7L))
-      assert(manager().isInstanceOf[LocalCheckpointFileManager])
+      assert(manager(dir).isInstanceOf[LocalCheckpointFileManager])
       run()
     }
-    val out = emitted.asScala.toSeq
-    // resumed at batch 2, not replayed from batch 0: each probe once, and
-    // the post-restart probes join table values written before the restart
-    assert(out.map { case (id, e) => (id, e.left, e.right) }.sortBy(t => (t._1, t._2)) == Seq(
-      (0L, Some("p1"), Some("t1")),
-      (1L, Some("p2"), Some("t2b")),
-      (2L, Some("p3"), Some("t1")),
-      (2L, Some("p4"), Some("t2b"))))
+    emitted.asScala.toSeq.map { case (id, e) => (id, e.left, e.right) }.sortBy(t => (t._1, t._2))
+  }
+
+  private def manager(dir: java.io.File): CheckpointFileManager =
+    CheckpointFileManager.create(new Path(dir.toURI), spark.sessionState.newHadoopConf())
+
+  // resumed at batch 2, not replayed from batch 0: each probe once, and the
+  // post-restart probes join table values written before the restart
+  private val resumed = Seq(
+    (0L, Some("p1"), Some("t1")),
+    (1L, Some("p2"), Some("t2b")),
+    (2L, Some("p3"), Some("t1")),
+    (2L, Some("p4"), Some("t2b")))
+
+  test("a changelog join restarts on a checkpoint Spark's default manager wrote") {
+    val rows = restartRows(Map(LocalCheckpointFileManager.ConfKey -> None)) { dir =>
+      assert(manager(dir).isInstanceOf[FileContextBasedCheckpointFileManager])
+    }
+    assert(rows == resumed)
+  }
+
+  test("a changelog join restarts on a checkpoint Hive's ProxyLocalFileSystem wrote") {
+    // the file: filesystem of a session before NioLocalFileSystem, and of one
+    // not built by GraftSession.local; the tuned manager keeps the FileSystem
+    // path on it
+    val rows = restartRows(onProxy.map { case (k, v) => k -> Some(v) }) { dir =>
+      val conf = spark.sessionState.newHadoopConf()
+      assert(new Path(dir.toURI).getFileSystem(conf).getClass.getName == onProxy("fs.file.impl"))
+      assert(manager(dir).asInstanceOf[LocalCheckpointFileManager].delegate
+        .isInstanceOf[FileSystemBasedCheckpointFileManager])
+    }
+    assert(rows == resumed)
   }
 }

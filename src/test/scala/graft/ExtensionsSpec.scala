@@ -50,6 +50,22 @@ class ExtensionsSpec extends SparkSpec {
       s"set-based cross path diverged: docs=${viaDocs.size} model=${model.size}")
   }
 
+  test("batch near-dup entries score a duplicate id as one set union, as the increment does") {
+    import spark.implicits._
+    def words(p: String) = (1 to 31).map(i => s"$p$i").mkString(" ")
+    val twins = Seq(7L -> words("a"), 7L -> words("b")).toDF("doc_id", "text")
+    val other = Seq(8L -> words("a")).toDF("doc_id", "text")
+    // id 7's union holds 58 3-grams, 29 of them shared with id 8
+    val expected = Seq((7L, 8L, 29L, 58L, 0.5))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))
+    val docsPairs = rows(Dedup.minHashLshDocs(twins.union(other), "doc_id", "text", 0.5))
+    val crossPairs = rows(Dedup.minHashLshCrossDocs(twins, other, "doc_id", "text", 0.5))
+    graft.Caching.release(spark)
+    assert(docsPairs == expected)
+    assert(crossPairs == expected)
+  }
+
   test("cross-corpus LSH pairs equal the exact cross-Jaccard; only between-side pairs emit") {
     val corpus = docs.filter(col("doc_id") % 2 === 0)
     val ref = docs.filter(col("doc_id") % 2 =!= 0)
@@ -2949,7 +2965,7 @@ class ExtensionsSpec extends SparkSpec {
     assert(e5.getMessage.contains("NULL label labels"), e5.getMessage)
   }
 
-  test("trainCodebook raises a named error on an empty training set, not an index crash") {
+  test("lloyd raises a named error on an empty training set through ivfTopK") {
     import spark.implicits._
     // an empty corpus (or one the zero-norm filter empties) used to reach
     // the stride computation and die with a bare ArrayIndexOutOfBounds

@@ -38,9 +38,15 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  /** Specs run with codegen fallback off: a generated class that fails to
+    * compile fails the spec instead of running the plan interpreted with
+    * green results. Production sessions keep Spark's default fallback.
+    */
   lazy val session: SparkSession = {
     val s = GraftSession.local("graft-test", "4")
     s.sparkContext.setLogLevel("ERROR")
+    s.conf.set("spark.sql.codegen.fallback", "false")
+    s.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
     s
   }
 }
