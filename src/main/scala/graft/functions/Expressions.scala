@@ -2,8 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, KnownNullable, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, FloatType, IntegerType}
 
@@ -449,7 +450,12 @@ object GraftFunctions {
     ("graft_pq_adc", classOf[PqAdcScore], es => PqAdcScore(es(0), es(1))),
     ("graft_ncm_argmax", classOf[NcmArgmax], es => NcmArgmax(es(0), es(1), es(2))),
     ("graft_bpe_count", classOf[BpeTokenCount], es => BpeTokenCount(es(0), es(1))),
-    ("graft_bpe_ids", classOf[BpeTokenIds], es => BpeTokenIds(es(0), es(1))))
+    ("graft_bpe_ids", classOf[BpeTokenIds], es => BpeTokenIds(es(0), es(1))),
+    // a column's nullability set either way: the keyed operators' grouping
+    // columns keep the nullability the typed `groupByKey` wrote into
+    // existing state key schemas (StatefulOps.byKey)
+    ("graft_assert_not_null", classOf[AssertNotNull], es => AssertNotNull(es.head)),
+    ("graft_known_nullable", classOf[KnownNullable], es => KnownNullable(es.head)))
 
   /** Sessions already registered — weak keys so a dropped session can GC.
     * Operator entry points call [[register]] defensively on every
@@ -462,7 +468,7 @@ object GraftFunctions {
     * arguments were SILENTLY DROPPED (graft_dot(a, b, c) computed
     * dot(a, b) — a well-formed wrong answer) and missing ones died with a
     * bare IndexOutOfBoundsException inside the analyzer. One wrapper over
-    * the shared list covers all sixteen functions.
+    * the shared list covers every function.
     */
   private def checkedArity(name: String,
                            b: Seq[Expression] => Expression): Seq[Expression] => Expression = {
@@ -476,6 +482,13 @@ object GraftFunctions {
         wrongArity(built.children.length.toString)
       built
   }
+
+  /** `name`'s builder as both registration paths install it: behind the
+    * arity gate.
+    */
+  private[graft] def checkedBuilder(name: String): Seq[Expression] => Expression =
+    builders.collectFirst { case (`name`, _, b) => checkedArity(name, b) }
+      .getOrElse(throw new NoSuchElementException(s"no graft function $name"))
 
   def register(spark: SparkSession): Unit = registered.synchronized {
     if (!registered.containsKey(spark)) {

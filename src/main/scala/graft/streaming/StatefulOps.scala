@@ -1,8 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, KeyValueGroupedDataset, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.encoderFor
+import org.apache.spark.sql.functions.{call_function, col, lit}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
+import graft.functions.GraftFunctions
 import graft.model.KRecord
 
 /** The reference's stateful operators with kspp-exact semantics, built on
@@ -21,6 +25,15 @@ import graft.model.KRecord
   * `spark.sql.streaming.stateStore.providerClass`), partitioned by key —
   * the direct analog of the reference's per-partition state stores, but
   * rescalable and checkpointed.
+  *
+  * Every operator groups by the record's `key` column through one helper,
+  * [[byKey]], not by a typed `groupByKey(_.key)`: no row is deserialized
+  * to read its key and no key is copied into each shuffled row, and the
+  * two changelog joins build their [[SideRec]] union from column
+  * expressions ([[sides]]). The state key schema is the one `groupByKey`
+  * wrote, in type and nullability (only a flat key's column name changed,
+  * `value` → `key`), so checkpoints written before this grouping restart
+  * on it with the same hash partitioning.
   *
   * All of these also run on a *batch* Dataset (Spark executes
   * flatMapGroupsWithState in batch mode with per-group iterators), which is
@@ -80,6 +93,46 @@ object StatefulOps {
       buf.toSeq
     }
 
+  /** The ONE grouping of every operator below: `ds` grouped by its `key`
+    * column, the column form of `groupByKey(_.key)`, whose `AppendColumns`
+    * deserializes every row to call `_.key` and copies the key into each
+    * shuffled row.
+    *
+    * State key schema contract: the grouping columns are the columns that
+    * `AppendColumns` wrote, in type and nullability, so a checkpoint
+    * written by the typed form restarts here with the same hash
+    * partitioning (Spark's state schema check ignores column names, not
+    * nullability). A flat key groups by `key` itself (the typed form named
+    * it `value`); a case-class key by its top-level fields, named as the
+    * encoder names them. A field the encoder declares non-nullable but the
+    * input carries nullable (every file source's `key`, and the fields of
+    * a struct column) is wrapped in `AssertNotNull`, the encoder's own
+    * check; a non-nullable input for a nullable field (a `String` key
+    * computed by `concat`) in `KnownNullable`.
+    */
+  private def byKey[K, T](ds: Dataset[T])(
+      implicit ek: Encoder[K], et: Encoder[T]): KeyValueGroupedDataset[K, T] = {
+    GraftFunctions.register(ds.sparkSession)
+    val enc = encoderFor(ek)
+    val in = ds.schema("key")
+    // the encoder's nullability, whichever way the input's differs from it
+    def fit(c: Column, nullable: Boolean, target: Boolean): Column =
+      if (nullable == target) c
+      else call_function(if (target) "graft_known_nullable" else "graft_assert_not_null", c)
+    val cols =
+      if (enc.isSerializedAsStructForTopLevel) {
+        val fields = in.dataType.asInstanceOf[StructType]
+        enc.schema.fields.toSeq.map { f =>
+          fit(col("key").getField(f.name), in.nullable || fields(f.name).nullable, f.nullable).as(f.name)
+        }
+      } else if (in.nullable == enc.schema.head.nullable) {
+        // a bare `key` stays unaliased: the analyzer's redundant-alias rule
+        // rejects a no-op `key AS key` under a union of two sources
+        Seq(col("key"))
+      } else Seq(fit(col("key"), in.nullable, enc.schema.head.nullable).as("key"))
+    ds.groupBy(cols: _*).as[K, T]
+  }
+
   /** Stored cell of the LWW table. */
   final case class Cell[V](value: Option[V], eventTime: Long)
 
@@ -89,7 +142,7 @@ object StatefulOps {
     * and getCurrentWatermarkMs throws — which would break the file
     * header's "all of these also run on a batch Dataset" contract.
     */
-  private def watermarkOpt(state: GroupState[_]): Option[Long] =
+  private[graft] def watermarkOpt(state: GroupState[_]): Option[Long] =
     try Some(state.getCurrentWatermarkMs())
     catch { case _: UnsupportedOperationException => None }
 
@@ -100,7 +153,7 @@ object StatefulOps {
     * join stores) applies THIS rule, so the semantics cannot drift between
     * copies.
     */
-  private def lwwInsert[V](cell: Option[Cell[V]], value: Option[V],
+  private[graft] def lwwInsert[V](cell: Option[Cell[V]], value: Option[V],
                            eventTime: Long): (Option[Cell[V]], Boolean) =
     cell match {
       case Some(c) if c.eventTime > eventTime => (cell, false)
@@ -123,7 +176,7 @@ object StatefulOps {
   def latestByKey[K, V](ds: Dataset[KRecord[K, V]])(
       implicit ek: Encoder[K], ec: Encoder[Cell[V]], er: Encoder[KRecord[K, V]]): Dataset[KRecord[K, V]] = {
     val cap = maxSliceRows(ds.sparkSession)
-    ds.groupByKey(_.key)
+    byKey[K, KRecord[K, V]](ds)
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
         (key: K, it: Iterator[KRecord[K, V]], state: GroupState[Cell[V]]) =>
           var cell = state.getOption
@@ -176,7 +229,7 @@ object StatefulOps {
     require(retentionMs > 0,
       s"windowedLatestByKey: retentionMs must be positive, got $retentionMs")
     val cap = maxSliceRows(ds.sparkSession)
-    watermarked(ds, watermarkDelay).groupByKey(_.key)
+    byKey[K, WRec[K, V]](watermarked(ds, watermarkDelay))
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
         (key: K, it: Iterator[WRec[K, V]], state: GroupState[Cell[V]]) =>
           if (state.hasTimedOut) {
@@ -230,7 +283,7 @@ object StatefulOps {
       implicit ek: Encoder[K], ec: Encoder[CounterCell],
       er: Encoder[KRecord[K, Long]]): Dataset[KRecord[K, Long]] = {
     val cap = maxSliceRows(ds.sparkSession)
-    ds.groupByKey(_.key)
+    byKey[K, KRecord[K, Long]](ds)
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
         (key: K, it: Iterator[KRecord[K, Long]], state: GroupState[CounterCell]) =>
           var cur = state.getOption
@@ -321,7 +374,7 @@ object StatefulOps {
       // (bounded key spaces only; per-session/request keys need the GC
       // variant)
       case None =>
-        ds.groupByKey(_.key)
+        byKey[K, KRecord[K, V]](ds)
           .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
             (key: K, it: Iterator[KRecord[K, V]], state: GroupState[Bucket]) =>
               admit(key, it, state)
@@ -329,7 +382,7 @@ object StatefulOps {
       // GC variant: a watermark (dropping events later than the delay)
       // buys exact idle-state expiry — churning key spaces stay bounded
       case Some(d) =>
-        watermarked(ds, d).groupByKey(_.key)
+        byKey[K, WRec[K, V]](watermarked(ds, d))
           .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
             (key: K, it: Iterator[WRec[K, V]], state: GroupState[Bucket]) =>
               if (state.hasTimedOut) { state.remove(); Iterator.empty }
@@ -353,7 +406,7 @@ object StatefulOps {
     // the fail-loud stance every sibling op applies to its knobs
     require(delayMs >= 0, s"delay: delayMs must be non-negative, got $delayMs")
     val cap = maxSliceRows(ds.sparkSession)
-    watermarked(ds, watermarkDelay).groupByKey(_.key)
+    byKey[K, WRec[K, V]](watermarked(ds, watermarkDelay))
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (key: K, it: Iterator[WRec[K, V]], state: GroupState[Held[K, V]]) =>
           // batch = the stream has ended: every delay has elapsed, so the
@@ -387,6 +440,30 @@ object StatefulOps {
   final case class SideRec[K, L, R](key: K, leftValue: Option[L], rightValue: Option[R],
                                     isLeft: Boolean, eventTime: Long)
 
+  /** The [[SideRec]] union of two changelogs, built from column
+    * expressions. Both sides are fitted to the SideRec schema by name
+    * (`Dataset.to`, which also matches nested struct fields by name), with
+    * every field relaxed to nullable: `to` refuses a nullable input for a
+    * non-nullable target, and [[byKey]] restores the key's nullability.
+    */
+  private def sides[K, L, R](left: Dataset[KRecord[K, L]], right: Dataset[KRecord[K, R]])(
+      implicit es: Encoder[SideRec[K, L, R]]): Dataset[SideRec[K, L, R]] = {
+    def relaxed(dt: DataType): DataType = dt match {
+      case s: StructType => StructType(s.fields.map(f =>
+        f.copy(dataType = relaxed(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(relaxed(a.elementType), containsNull = true)
+      case m: MapType => MapType(relaxed(m.keyType), relaxed(m.valueType), valueContainsNull = true)
+      case other => other
+    }
+    val schema = relaxed(es.schema).asInstanceOf[StructType]
+    def side(log: Dataset[_], isLeft: Boolean): DataFrame = {
+      val (l, r) = if (isLeft) (col("value"), lit(null)) else (lit(null), col("value"))
+      log.select(col("key"), l.as("leftValue"), r.as("rightValue"), lit(isLeft).as("isLeft"),
+        col("eventTime")).to(schema)
+    }
+    side(left, isLeft = true).union(side(right, isLeft = false)).as[SideRec[K, L, R]]
+  }
+
   /** One join emission: `tombstone = true` means the reference emitted a
     * null-valued record (retraction); otherwise `left`/`right` carry the
     * joined sides per the join type's contract.
@@ -416,17 +493,14 @@ object StatefulOps {
     * Golden sequences: tests/test8_join.cpp:193-360. Within a micro-batch
     * events apply in event-time order across both sides (the reference's
     * shared event clock); cross-batch order is arrival order, as in Kafka.
+    * Both changelogs meet in one [[sides]] union grouped by [[byKey]].
     */
   def tableTableJoinChangelog[K, L, R](
       leftLog: Dataset[KRecord[K, L]], rightLog: Dataset[KRecord[K, R]], joinType: JoinType)(
       implicit ek: Encoder[K], es: Encoder[SideRec[K, L, R]], ej: Encoder[JoinState[L, R]],
       eo: Encoder[JoinEmit[K, L, R]]): Dataset[JoinEmit[K, L, R]] = {
-    val tagged = leftLog
-      .map(r => SideRec[K, L, R](r.key, r.value, None, isLeft = true, r.eventTime))
-      .union(rightLog
-        .map(r => SideRec[K, L, R](r.key, None, r.value, isLeft = false, r.eventTime)))
-    val cap = maxSliceRows(tagged.sparkSession)
-    tagged.groupByKey(_.key)
+    val cap = maxSliceRows(leftLog.sparkSession)
+    byKey[K, SideRec[K, L, R]](sides(leftLog, rightLog))
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
         (key: K, it: Iterator[SideRec[K, L, R]], state: GroupState[JoinState[L, R]]) =>
           var s = state.getOption.getOrElse(JoinState[L, R](None, None))
@@ -467,18 +541,16 @@ object StatefulOps {
     * (left, right?) always; [[InnerJoin]] emits only on a non-null probe hit
     * (misses are dropped silently, join.h:177-186 — no tombstone). Golden:
     * tests/test8_join.cpp:120-190.
+    * The stream and the table changelog meet in one [[sides]] union grouped
+    * by [[byKey]], as kspp probes a per-partition store by the record's key.
     */
   def streamTableJoinChangelog[K, L, R](
       stream: Dataset[KRecord[K, L]], rightLog: Dataset[KRecord[K, R]], joinType: JoinType)(
       implicit ek: Encoder[K], es: Encoder[SideRec[K, L, R]], ej: Encoder[JoinState[L, R]],
       eo: Encoder[JoinEmit[K, L, R]]): Dataset[JoinEmit[K, L, R]] = {
     require(joinType != OuterJoin, "kstream joins are left or inner (join.h:28-209)")
-    val tagged = stream
-      .map(r => SideRec[K, L, R](r.key, r.value, None, isLeft = true, r.eventTime))
-      .union(rightLog
-        .map(r => SideRec[K, L, R](r.key, None, r.value, isLeft = false, r.eventTime)))
-    val cap = maxSliceRows(tagged.sparkSession)
-    tagged.groupByKey(_.key)
+    val cap = maxSliceRows(stream.sparkSession)
+    byKey[K, SideRec[K, L, R]](sides(stream, rightLog))
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
         (key: K, it: Iterator[SideRec[K, L, R]], state: GroupState[JoinState[L, R]]) =>
           var s = state.getOption.getOrElse(JoinState[L, R](None, None))
@@ -529,7 +601,7 @@ object StatefulOps {
     require(punctuateIntervalMs > 0,
       s"punctuatedCount: punctuateIntervalMs must be positive, got $punctuateIntervalMs")
     val cap = maxSliceRows(ds.sparkSession)
-    watermarked(ds, watermarkDelay).groupByKey(_.key)
+    byKey[K, WRec[K, Long]](watermarked(ds, watermarkDelay))
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
         (key: K, it: Iterator[WRec[K, Long]], state: GroupState[Counter]) =>
           // batch runs have no watermark and no timeouts: wm only feeds the

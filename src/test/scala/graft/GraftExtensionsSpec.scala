@@ -68,11 +68,11 @@ class GraftExtensionsSpec extends SparkSpec {
         .head.getDouble(0)
       assert(d == 42.0, s"repeat register() replaced the marker: got $d")
     } finally {
-      // restore the real builder for every spec that runs after this one
+      // restore the real builder, arity gate included, for every spec that
+      // runs after this one
       reg.dropFunction(FunctionIdentifier("graft_dot"))
-      graft.functions.GraftFunctions.builders
-        .collectFirst { case ("graft_dot", _, b) =>
-          reg.createOrReplaceTempFunction("graft_dot", b, "built-in") }
+      reg.createOrReplaceTempFunction("graft_dot",
+        graft.functions.GraftFunctions.checkedBuilder("graft_dot"), "built-in")
     }
   }
 }

@@ -123,6 +123,43 @@ class StatefulOpsSpec extends SparkSpec {
       5L -> Some((Some("B"), Some("a"))), 15L -> Some((Some("D"), Some("d")))))
   }
 
+  test("keyed operators group by the key column: no per-row object round trip before the shuffle") {
+    import spark.implicits._
+    import org.apache.spark.sql.Dataset
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.functions.col
+    object Plans extends AdaptiveSparkPlanHelper
+    // column-built inputs: the source itself holds no typed operator
+    def log(valueCol: org.apache.spark.sql.Column) = spark.range(0, 40)
+      .select((col("id") % 5).as("key"), valueCol.as("value"), col("id").as("eventTime"))
+    val strs = log(col("id").cast("string")).as[KRecord[Long, String]]
+    val longs = log(col("id")).as[KRecord[Long, Long]]
+    val ops: Seq[(String, Dataset[_])] = Seq(
+      "latestByKey" -> StatefulOps.latestByKey(strs),
+      "windowedLatestByKey" -> StatefulOps.windowedLatestByKey(strs, 1000L),
+      "counterByKey" -> StatefulOps.counterByKey(longs),
+      "rateLimiter" -> StatefulOps.rateLimiter(strs, 2L, 10L),
+      "rateLimiter (GC)" -> StatefulOps.rateLimiter(strs, 2L, 10L, Some("1 second")),
+      "delay" -> StatefulOps.delay(strs, 10L),
+      "punctuatedCount" -> StatefulOps.punctuatedCount(longs, 10L),
+      "tableTableJoinChangelog" -> StatefulOps.tableTableJoinChangelog(strs, longs, StatefulOps.OuterJoin),
+      "streamTableJoinChangelog" -> StatefulOps.streamTableJoinChangelog(strs, longs, StatefulOps.LeftJoin))
+    def names(p: SparkPlan): Seq[String] = Plans.collect(p) { case n => n.nodeName }
+    ops.foreach { case (name, ds) =>
+      ds.collect() // AQE's final plan
+      val plan = ds.queryExecution.executedPlan
+      val typed = names(plan).filter(n => n.startsWith("AppendColumns") || n == "MapElements")
+      assert(typed.isEmpty, s"$name runs $typed:\n$plan")
+      val exchanges = Plans.collect(plan) { case e: ShuffleExchangeExec => e }
+      assert(exchanges.nonEmpty, s"$name has no shuffle:\n$plan")
+      if (name.endsWith("JoinChangelog"))
+        exchanges.foreach(e => assert(!names(e).contains("DeserializeToObject"),
+          s"$name deserializes below its exchange:\n$plan"))
+    }
+  }
+
   test("the opt-in maxSliceRows guard turns a hot-key trigger surge into a named error, not an OOM") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

@@ -11,6 +11,8 @@ Each directory holds `<query>_<suffix>.txt` files written by
 Before comparing, the text of each plan is normalised:
 
 - expression ids (`#123`) and `plan_id=`;
+- lambda variable numbers (`lambda x_4`), which come from a JVM-wide
+  counter and so depend on how many plans the JVM built before;
 - lambda class names and object hashes (`$$Lambda$45/0x...@1a2b3c`);
 - RDD ids (`MapPartitionsRDD[17]`);
 - scratch directories under `/tmp/graft_*`;
@@ -28,6 +30,7 @@ import sys
 NOISE = [
     (re.compile(r"#\d+"), "#N"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"\b(lambda [A-Za-z_]\w*?)_\d+\b"), r"\1_N"),
     (re.compile(r"\$+Lambda\$?[\w$]*(/0x[0-9a-f]+)?"), "$Lambda"),
     (re.compile(r"@[0-9a-f]{4,}\b"), "@H"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
