@@ -664,6 +664,16 @@ object Bench {
     val convergedFloor: Seq[String] = runTimes.collect {
       case (name, ts) if ts.nonEmpty && officialStat(ts)._2 == "floor_cluster" => name
     }
+    // Each attribution block below is an EXTRA single run, behind the full
+    // isolation barrier, not just a cache release: the blocks run right
+    // after the streaming-protocol queries, whose provider/GC debt inflated
+    // the r7 stage sum 9.1 → 24.6 s on unchanged code. The release after it
+    // is unconditional: a failed block must not leave persisted outputs
+    // polluting the streaming section's storage pool.
+    def extraRun(name: String)(body: => Seq[(String, Double)]): Seq[(String, Double)] =
+      try { Caching.release(spark); spark.catalog.clearCache(); isolate(); body }
+      catch { case e: Throwable => errors += name; failed(name, e); Seq.empty }
+      finally { Caching.release(spark); spark.catalog.clearCache() }
     // x18 per-stage attribution: the pipeline is the bench's most expensive
     // query, so its time is broken down by stage (a regression then names a
     // stage, not "the pipeline"). Stages materialize IN ORDER with each
@@ -676,88 +686,42 @@ object Bench {
     // the trailing "run_total" key stamps the block with ITS OWN run's
     // wall-clock so it reads as the extra run it is, never as a breakdown
     // of the official number.
-    val x18Stages: Seq[(String, Double)] =
-      try {
-        Caching.release(spark)
-        spark.catalog.clearCache()
-        // full isolation barrier, not just cache release: this block runs
-        // right after the five streaming-protocol queries, whose provider/
-        // GC debt inflated the r7 stage sum 9.1 → 24.6 s on unchanged code
-        isolate()
-        val docs = graft.sources.Tables.load(spark, sfDir, "documents")
-        val tBlock = System.nanoTime()
-        // the block is FULLY self-attributing: "build" is stageOutputs'
-        // eager plan construction, each stage's window includes its
-        // cacheQuery planning (Caching.scoped — ~0.5-1.3 s on the deep
-        // late-stage trees, which previously leaked into run_total but no
-        // stage), so build + Σ stages ≈ run_total up to noise
-        val stages = graft.ext.CurationPipeline.stageOutputs(
-          docs.filter(col("doc_id") % 10 =!= 7), "doc_id", "text",
-          Some(docs.filter(col("doc_id") % 10 === 7)), Queries.X18Config)
-        val built = ("build" -> (System.nanoTime() - tBlock) / 1e9)
-        val timed = stages.map { case (stage, df) =>
-          val t0 = System.nanoTime()
-          val cached = Caching.scoped(df)
-          cached.write.format("noop").mode("overwrite").save()
-          stage -> (System.nanoTime() - t0) / 1e9
-        }
-        (built +: timed) :+ ("run_total" -> (System.nanoTime() - tBlock) / 1e9)
-      } catch { case e: Throwable => errors += "x18_stages"; failed("x18_stages", e); Seq.empty }
-      finally {
-        // unconditionally: a failed stage must not leave its persisted
-        // outputs polluting the streaming section's storage pool
-        Caching.release(spark)
-        spark.catalog.clearCache()
+    val x18Stages = extraRun("x18_stages") {
+      val docs = graft.sources.Tables.load(spark, sfDir, "documents")
+      val tBlock = System.nanoTime()
+      // the block is FULLY self-attributing: "build" is stageOutputs'
+      // eager plan construction, each stage's window includes its
+      // cacheQuery planning (Caching.scoped — ~0.5-1.3 s on the deep
+      // late-stage trees, which previously leaked into run_total but no
+      // stage), so build + Σ stages ≈ run_total up to noise
+      val stages = graft.ext.CurationPipeline.stageOutputs(
+        docs.filter(col("doc_id") % 10 =!= 7), "doc_id", "text",
+        Some(docs.filter(col("doc_id") % 10 === 7)), Queries.X18Config)
+      val built = ("build" -> (System.nanoTime() - tBlock) / 1e9)
+      val timed = stages.map { case (stage, df) =>
+        val t0 = System.nanoTime()
+        val cached = Caching.scoped(df)
+        cached.write.format("noop").mode("overwrite").save()
+        stage -> (System.nanoTime() - t0) / 1e9
       }
+      (built +: timed) :+ ("run_total" -> (System.nanoTime() - tBlock) / 1e9)
+    }
     // x33 per-batch attribution: continuous curation is the bench's most
     // expensive line and is ~all fixed per-micro-batch overhead — split it
     // so a regression names a batch: batch 0 creates every state table
     // cold, batch 1 exercises the cross-batch probe paths (hash anti-join,
-    // LSH index probe, offsets carry). Timed once, attribution only — an
-    // EXTRA run like x18_stages, stamped with its own "run_total" (see
-    // that block's comment).
-    val x33Batches: Seq[(String, Double)] =
-      try {
-        Caching.release(spark)
-        spark.catalog.clearCache()
-        isolate() // same barrier as x18Stages — see comment there
-        val docs = graft.sources.Tables.load(spark, sfDir, "documents")
-        val train = docs.filter(col("doc_id") % 10 =!= 7)
-        val cfg = Queries.X18Config.copy(maxGramDf = None)
-        val state = graft.ext.CurationPipeline.StreamState(
-          s"bench_x33_${java.lang.Long.toHexString(System.nanoTime())}",
-          Queries.scratchDir("graft_bench_x33").toString, // registered for
-          // shutdown deletion — a raw temp dir leaked one checkpoint tree
-          // per bench invocation
-          numBuckets = 8)
-        val hg = graft.ext.CurationPipeline.holdoutGramSet(
-          docs.filter(col("doc_id") % 10 === 7), "doc_id", "text", cfg)
-        val mx = train.agg(org.apache.spark.sql.functions.max("doc_id")).head().getLong(0)
-        val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try {
-          val checks = new graft.ext.TableChecks
-          val tBlock = System.nanoTime()
-          val timed = Seq(0L, 1L).map { i =>
-            val lo = mx * i / 2
-            val hi = if (i == 1) mx + 1 else mx / 2
-            val t0 = System.nanoTime()
-            graft.ext.CurationPipeline.streamIncrement(
-              train.filter(col("doc_id") >= lo && col("doc_id") < hi),
-              "doc_id", "text", Some(hg), cfg, state, batchId = i,
-              checks = checks)
-            s"batch$i" -> (System.nanoTime() - t0) / 1e9
-          }
-          timed :+ ("run_total" -> (System.nanoTime() - tBlock) / 1e9)
-        } finally {
-          spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-          state.dropTables(spark)
-        }
-      } catch { case e: Throwable => errors += "x33_batches"; failed("x33_batches", e); Seq.empty }
-      finally {
-        Caching.release(spark)
-        spark.catalog.clearCache()
+    // LSH index probe, offsets carry). One run of the x33 entry, read from
+    // its `x33_batch<i>` ProbeTiming tags; "run_total" is the batches' sum.
+    val x33Batches = extraRun("x33_batches") {
+      val before = ProbeTiming.costs(spark)
+      SparkEntry.queries("x33_curation_stream")(spark, sfDir)
+      val after = ProbeTiming.costs(spark)
+      val batches = Seq(0, 1).map { i =>
+        val tag = s"x33_batch$i"
+        s"batch$i" -> (after(tag)("wall_ns") - before.get(tag).fold(0L)(_("wall_ns"))) / 1e9
       }
+      batches :+ ("run_total" -> batches.map(_._2).sum)
+    }
     val streaming =
       try streamingBench(spark)
       catch { case e: Throwable =>
@@ -780,10 +744,8 @@ object Bench {
     val stShort = streaming.toSeq.sortBy(_._1)
       .map { case (k, v) => "\"" + k.stripSuffix("_rows_per_sec") + "\":" + math.round(v) }
       .mkString("{", ",", "}")
-    val stJ = x18Stages.map { case (k, v) => "\"" + k + "\":" + f3(v) }
-      .mkString("{", ",", "}")
-    val x33J = x33Batches.map { case (k, v) => "\"" + k + "\":" + f3(v) }
-      .mkString("{", ",", "}")
+    def secsJ(kv: Seq[(String, Double)]): String =
+      kv.map { case (k, v) => "\"" + k + "\":" + f3(v) }.mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     // DETAIL line first (large, safe to truncate): per-run times arrays so a
     // systematic all-runs-slow query is distinguishable from one-run jitter,
@@ -802,7 +764,7 @@ object Bench {
     }.mkString("{", ",", "}")
     val heapMb = Runtime.getRuntime.maxMemory / (1024 * 1024)
     println(s"""{"detail":true,"runs":$runsJ,"sys":$sysJ,"max_heap_mb":$heapMb,""" +
-      s""""x18_stages":$stJ,"x33_batches":$x33J,"streaming":$st,""" +
+      s""""x18_stages":${secsJ(x18Stages)},"x33_batches":${secsJ(x33Batches)},"streaming":$st,""" +
       s""""errors":${fullArr(errors)},"flaky":${fullArr(flaky)},"leaks":${fullArr(leaks)},""" +
       s""""causes":${new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(causes.asJava)},""" +
       s""""storage_peak_bytes":$storagePeak,"runs_per_query":$RunsPerQuery,""" +

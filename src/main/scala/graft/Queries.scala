@@ -249,7 +249,7 @@ object Queries {
     * index on a 60% prefix, append + compact + append + at-least-once
     * replayed append (one maintenance-check memo across the appends — the
     * ivfStream wiring), then probe. `tag` prefixes the index tables and the
-    * GRAFT_PROBE_TIMING stage labels; `queries` slices the probe batch
+    * [[graft.ProbeTiming]] stage tags; `queries` slices the probe batch
     * (identity = the declared whole-corpus oracle shape, a bounded filter =
     * the production shape).
     */
@@ -1041,10 +1041,10 @@ object Queries {
           Seq(0L, 1L).foreach { i =>
             val lo = mx * i / 2
             val hi = if (i == 1) mx + 1 else mx / 2
-            CurationPipeline.streamIncrement(
+            graft.ProbeTiming(s"x33_batch$i")(CurationPipeline.streamIncrement(
               train.filter(col("doc_id") >= lo && col("doc_id") < hi),
               "doc_id", "text", Some(hg), cfg, state, batchId = i,
-              checks = checks)
+              checks = checks))
           }
         } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
       }

@@ -22,6 +22,17 @@ object Verify {
         .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
     } catch { case _: Throwable => () }
 
+  /** Writes `<outDir>/oracle_sql.json`: the DuckDB oracle SQL of each
+    * named query that has one, for `tools/check_oracle.py` and the driver's
+    * compare. Jackson escapes every control character in the SQL.
+    */
+  private[graft] def writeOracleSql(outDir: String, names: Iterable[String]): Unit = {
+    val node = new com.fasterxml.jackson.databind.ObjectMapper().createObjectNode()
+    names.foreach(n => SparkEntry.oracleSql.get(n).foreach(node.put(n, _)))
+    Files.createDirectories(Paths.get(outDir))
+    Files.writeString(Paths.get(outDir, "oracle_sql.json"), node.toString)
+  }
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val spark = Bench.session()
@@ -36,21 +47,7 @@ object Verify {
       // operator-internal persists are scoped to one query run
       finally Caching.release(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    writeOracleSql(outDir, SparkEntry.oracleSql.keys)
     spark.stop()
   }
 }

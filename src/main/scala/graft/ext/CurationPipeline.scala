@@ -109,6 +109,13 @@ object CurationPipeline {
 
   /** Runs the full pipeline over `docs`; `holdout` is the eval corpus to
     * decontaminate against (None skips stage 5).
+    *
+    * Ids are not deduplicated. Exact dedup keeps the smallest id of each
+    * text and then every input row carrying a kept id, so two rows that
+    * share an id both survive it, identical texts included. Later stages
+    * decide per id (near-dup sets fold by id, a drop removes every row of
+    * the id) and pass each kept row through. Callers that need one row per
+    * id key their input uniquely first.
     */
   def run(docs: DataFrame, idCol: String, textCol: String,
           holdout: Option[DataFrame], cfg: Config = Config()): DataFrame =
@@ -176,7 +183,9 @@ object CurationPipeline {
     * attribution: the bench (and any operator of a 100 TB run) times each
     * stage's materialization so a regression names a stage, not "the
     * pipeline". Building the Seq registers the same scoped persists as
-    * [[run]]; callers release via [[graft.Caching.release]].
+    * [[run]]; callers release via [[graft.Caching.release]]. The duplicate-id
+    * contract is [[run]]'s: every stage from `exact_dedup` on keeps all rows
+    * of a kept id.
     */
   def stageOutputs(docs: DataFrame, idCol: String, textCol: String,
                    holdout: Option[DataFrame], cfg: Config = Config()): Seq[(String, DataFrame)] = {
@@ -236,8 +245,9 @@ object CurationPipeline {
     // 4: near-dup dedup — LSH pairs, then either the per-pair drop or the
     // full cluster collapse (one survivor per connected component).
     // [[Dedup.minHashLshDocs]] builds shingle sets + bands in one narrow
-    // pass; exactKept has unique ids by construction (stage 3 keeps one
-    // doc per text hash), so its verify keeps the in-row set sizes
+    // pass. exactKept can repeat an id: stage 3's semi join on the id keeps
+    // every input row of a kept id, so the entry's repeated-id check (and,
+    // on a repeat, its per-id set fold) is needed here
     val pairs = graft.ProbeTiming("build_pairs")(Dedup.minHashLshDocs(exactKept, idCol, textCol,
       cfg.nearDupThreshold, cfg.shingleN))
     val lexKept = graft.ProbeTiming("build_keep")(
@@ -907,22 +917,18 @@ object CurationPipeline {
     // one maintenance-check memo per stream ([[TableChecks]]); sequential
     // batch ids on one instance make the registry mapping cache valid
     val checks = new TableChecks(cacheRegistryMapping = maintainClusters)
-    docs.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        streamIncrement(batch.toDF(), idCol, textCol, hg, cfg, state, id,
-          maintainClusters, checks)
-        if (compactEvery > 0 && id > 0 && id % compactEvery == 0) {
-          compactState(batch.sparkSession, state)
-          // id - 1: a replay of the in-flight batch id reads batch_id < id
-          // and must still see every folded row (the clusterCompact rule)
-          compactOffsets(batch.sparkSession, state, uptoBatch = id - 1)
-          if (maintainClusters) {
-            Dedup.clusterCompact(batch.sparkSession, state.clusterState,
-              uptoBatch = id - 1)
-            // cached-mapping lineage read the pre-compaction files
-            checks.invalidateRegistryMapping()
-          }
-        }
+    TableChecks.foreachBatch(docs, compactEvery, checks)((batch, id, _) =>
+      streamIncrement(batch, idCol, textCol, hg, cfg, state, id,
+        maintainClusters, checks)) { (spark, id) =>
+      compactState(spark, state)
+      // id - 1: a replay of the in-flight batch id reads batch_id < id
+      // and must still see every folded row (the clusterCompact rule)
+      compactOffsets(spark, state, uptoBatch = id - 1)
+      if (maintainClusters) {
+        Dedup.clusterCompact(spark, state.clusterState, uptoBatch = id - 1)
+        // cached-mapping lineage read the pre-compaction files
+        checks.invalidateRegistryMapping()
+      }
     }
   }
 }

@@ -768,13 +768,10 @@ object Dedup {
     // one maintenance-check memo per STREAM: crashed-swap/existence run on
     // the first batch, not every batch; the lease re-validates on every
     // batch ([[TableChecks]])
-    val checks = new TableChecks
-    docs.writeStream.foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      minHashLshIncrement(batch.toDF(), idCol, textCol, threshold, index,
-        pairsDir, batchId, shingleN, numHashes, bandSize, checks)
-      if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-        compactIndex(batch.sparkSession, index)
-    }
+    TableChecks.foreachBatch(docs, compactEvery)((batch, batchId, checks) =>
+      minHashLshIncrement(batch, idCol, textCol, threshold, index,
+        pairsDir, batchId, shingleN, numHashes, bandSize, checks))(
+      (spark, _) => compactIndex(spark, index))
   }
 
   /** Finishes a [[compactBucketedTable]] swap that crashed between its
@@ -1374,15 +1371,14 @@ object Dedup {
     // one instance per stream = sequential batch ids, so the registry
     // mapping cache is maintainable (see TableChecks)
     val checks = new TableChecks(cacheRegistryMapping = true)
-    pairs.writeStream.foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-      clusterIncrement(batch.toDF(), state, id, maxIters, checks)
-      if (compactEvery > 0 && id > 0 && id % compactEvery == 0) {
-        clusterCompact(batch.sparkSession, state, uptoBatch = id - 1)
+    TableChecks.foreachBatch(pairs, compactEvery, checks)(
+      (batch, id, _) => clusterIncrement(batch, state, id, maxIters, checks)) {
+      (spark, id) =>
+        clusterCompact(spark, state, uptoBatch = id - 1)
         // the cached mapping's content survives a fold, but its blocks are
         // eviction-rebuilt from a lineage that read the PRE-compaction
         // files — rebuild from the rewritten table next batch instead
         checks.invalidateRegistryMapping()
-      }
     }
   }
 

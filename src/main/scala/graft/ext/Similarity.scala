@@ -635,12 +635,9 @@ object Similarity {
     // asserted every batch — these appends ARE the data, so an
     // out-of-process compaction grabbing the lease mid-stream must never
     // find even one unleased append to drop in its swap)
-    val checks = new TableChecks
-    vecs.writeStream.foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-      ivfAppend(batch.toDF(), idCol, vecCol, index, checks)
-      if (compactEvery > 0 && id > 0 && id % compactEvery == 0)
-        ivfCompact(batch.sparkSession, index)
-    }
+    TableChecks.foreachBatch(vecs, compactEvery)(
+      (batch, _, checks) => ivfAppend(batch, idCol, vecCol, index, checks))(
+      (spark, _) => ivfCompact(spark, index))
   }
 
   // ------------------------------------------------------------------
@@ -966,12 +963,9 @@ object Similarity {
   def ivfPqStream(vecs: DataFrame, idCol: String, vecCol: String, index: IvfPqIndex,
                   compactEvery: Int = 0): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     // one maintenance-check memo per stream: the ivfStream rationale
-    val checks = new TableChecks
-    vecs.writeStream.foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-      ivfPqAppend(batch.toDF(), idCol, vecCol, index, checks)
-      if (compactEvery > 0 && id > 0 && id % compactEvery == 0)
-        ivfPqCompact(batch.sparkSession, index)
-    }
+    TableChecks.foreachBatch(vecs, compactEvery)(
+      (batch, _, checks) => ivfPqAppend(batch, idCol, vecCol, index, checks))(
+      (spark, _) => ivfPqCompact(spark, index))
   }
 
   /** Signed-random-projection LSH candidate pairs, verified with exact
@@ -1212,13 +1206,10 @@ object Similarity {
                       numBits: Int = 48, bandSize: Int = 2,
                       compactEvery: Int = 0): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     // one maintenance-check memo per stream (the ivfStream rationale)
-    val checks = new graft.ext.TableChecks
-    vecs.writeStream.foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-      cosineLshIncrement(batch.toDF(), idCol, vecCol, threshold, index,
-        pairsDir, id, numBits, bandSize, checks)
-      if (compactEvery > 0 && id > 0 && id % compactEvery == 0)
-        cosineLshCompact(batch.sparkSession, index)
-    }
+    TableChecks.foreachBatch(vecs, compactEvery)((batch, id, checks) =>
+      cosineLshIncrement(batch, idCol, vecCol, threshold, index,
+        pairsDir, id, numBits, bandSize, checks))(
+      (spark, _) => cosineLshCompact(spark, index))
   }
 
   /** Folds both index tables back to ≤ numBuckets files and sheds

@@ -115,6 +115,26 @@ final class TableChecks(val cacheRegistryMapping: Boolean = false) {
   def markExists(table: String): Unit = { known.add(table); () }
 }
 
+object TableChecks {
+
+  /** The `foreachBatch` wiring of every streaming increment entry point:
+    * `increment(batch, id, checks)` on each micro-batch with one `checks`
+    * memo for the whole stream, then `compact(spark, id)` after every
+    * `compactEvery`-th batch (never after batch 0; 0 = the caller manages
+    * compaction).
+    */
+  private[graft] def foreachBatch(input: org.apache.spark.sql.DataFrame, compactEvery: Int,
+                                  checks: TableChecks = new TableChecks)(
+      increment: (org.apache.spark.sql.DataFrame, Long, TableChecks) => Unit)(
+      compact: (SparkSession, Long) => Unit)
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    input.writeStream.foreachBatch {
+      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+        increment(batch.toDF(), id, checks)
+        if (compactEvery > 0 && id > 0 && id % compactEvery == 0) compact(batch.sparkSession, id)
+    }
+}
+
 /** Shared input guards for the operator layer — ONE copy of each check so
   * the allowlists and remediation wording cannot drift between operators.
   */

@@ -12,8 +12,15 @@ package graft.tools
   * Queries whose declared body runs a stateful protocol and returns a
   * scratch-parquet read-back (x30/x31/x33/x39/x49/x50/x72…) would dump a
   * bare scan here; their internal plan shapes are pinned by PlanSpec and
-  * attributed by the SUBPROBE hooks instead, so this tool is most useful
-  * for the pure batch queries.
+  * their cost is split per stage by the [[graft.ProbeTiming]] collector
+  * (`ProbeQueries` prints it), so this tool is most useful for the pure
+  * batch queries.
+  *
+  * A cached relation prints as its initial plan while the cache is empty
+  * and as its finished adaptive plan (query-stage nodes, AQE-reoptimised
+  * joins) once a job has filled it. A change that runs a job ahead of the
+  * final plan therefore reads as a plan change in `tools/plan_diff.py`
+  * even where the query's own operators are unchanged.
   */
 object DumpPlans {
   def main(args: Array[String]): Unit = {

@@ -4,10 +4,10 @@ package graft.tools
   * throwaway ProbeQ): times named [[graft.SparkEntry.queries]] entries in a
   * fresh JVM, isolated from the bench harness's ordering and cache effects.
   * Each query runs `runs` times (default 3), with the bench's per-run
-  * isolation (scoped-cache release + SQL cache clear) between runs;
-  * `GRAFT_PROBE_TIMING=1` additionally prints the SUBPROBE stage lines
-  * from [[graft.ProbeTiming]] hooks, fed with a per-JVM Spark job counter
-  * registered here.
+  * isolation (scoped-cache release + SQL cache clear) between runs.
+  * After each run it waits for the listener bus to go quiet and prints one
+  * `STAGE` line per [[graft.ProbeTiming]] tag the run touched, with the
+  * run's share of each [[graft.ProbeTiming.Fields]] counter.
   *
   * The session is [[graft.Bench.session]], so probe floors are admissible
   * §8.4 evidence against bench medians. One difference remains, and it
@@ -34,36 +34,10 @@ object ProbeQueries {
         s"are in SparkEntry.queries (e.g. ${graft.SparkEntry.queries.keys.take(3).mkString(", ")})")
     val runs = sys.env.getOrElse("GRAFT_PROBE_RUNS", "3").toInt
     val spark = graft.Bench.session()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        graft.ProbeTiming.jobs.incrementAndGet(); ()
-      }
-    })
-    // exact job attribution: flush the async listener bus before each
-    // SUBPROBE counter read (see ProbeTiming.drain). listenerBus is
-    // private[spark]; resolved reflectively, degrading to no-drain
-    // (approximate counts) if a Spark upgrade moves it.
-    graft.ProbeTiming.drain =
-      try {
-        val sc = spark.sparkContext
-        val busM = sc.getClass.getMethod("listenerBus")
-        val bus = busM.invoke(sc)
-        val wait = bus.getClass.getMethods
-          .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-        wait match {
-          case Some(m) => () => { try m.invoke(bus) catch { case _: Exception => () }; () }
-          case None => () => ()
-        }
-      } catch { case _: Throwable => () => () }
     try {
       // the filtered oracle dump makes the output directory directly
       // verifiable: python3 tools/check_oracle.py <sfDir> <outDir>
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      val node = mapper.createObjectNode()
-      names.foreach(n => graft.SparkEntry.oracleSql.get(n).foreach(node.put(n, _)))
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(outDir, "oracle_sql.json"), node.toString)
+      graft.Verify.writeOracleSql(outDir, names)
       names.foreach { n =>
         (1 to runs).foreach { run =>
           // the bench's per-run isolation: no run inherits another's
@@ -71,10 +45,17 @@ object ProbeQueries {
           // probe relative to the bench's fully isolated runs)
           graft.Caching.release(spark)
           spark.catalog.clearCache()
+          val before = graft.ProbeTiming.costs(spark)
           val t0 = System.nanoTime()
           graft.SparkEntry.queries(n)(spark, sfDir)
             .write.mode("overwrite").parquet(s"$outDir/$n")
           println(f"PROBE $n run$run ${(System.nanoTime() - t0) / 1e9}%.2f s")
+          graft.ProbeTiming.awaitQuiet(spark)
+          graft.ProbeTiming.costs(spark).toSeq.sortBy(_._1).foreach { case (tag, c) =>
+            val d = c.map { case (k, v) => k -> (v - before.get(tag).fold(0L)(_(k))) }
+            if (d.values.exists(_ != 0))
+              println(f"STAGE $n run$run $tag%-22s " + d.map { case (k, v) => s"$k=$v" }.mkString(" "))
+          }
         }
         graft.Caching.release(spark)
       }

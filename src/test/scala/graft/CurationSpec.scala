@@ -364,6 +364,23 @@ class CurationSpec extends SparkSpec {
     out.unpersist()
   }
 
+  test("exact dedup keeps every row of a kept id: a shared id survives stage 3 twice") {
+    val a = "that was the day we all went to the market for apples"
+    val b = "but nobody could have known the storm was coming that night"
+    // id 1 carries text a twice; id 2's copy of a loses to id 1; id 3
+    // carries two different texts
+    val d = df(1L -> a, 1L -> a, 2L -> a, 3L -> b, 3L -> s"$b so we stayed home")
+    val cfg = CurationPipeline.Config(minTokens = 3L, maxTokens = 1000L,
+      langs = Set("en"), tokensPerShard = 100L, shardBuckets = 2)
+    val stages = CurationPipeline.stageOutputs(d, "doc_id", "text", None, cfg).toMap
+    def ids(stage: String) =
+      stages(stage).select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+    val (exactIds, outIds) = (ids("exact_dedup"), ids("shards"))
+    graft.Caching.release(spark)
+    assert(exactIds == Seq(1L, 1L, 3L, 3L))
+    assert(outIds == Seq(1L, 1L, 3L, 3L))
+  }
+
   test("pipeline with decontamBloomBits keeps exactly the same survivors") {
     val holdout = docs.filter(col("doc_id") % 10 === 7)
     val train = docs.filter(col("doc_id") % 10 =!= 7)
