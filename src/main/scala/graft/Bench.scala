@@ -682,29 +682,28 @@ object Bench {
     // headline statistic; the headline x18 number above stays cold-medians).
     // The block is an EXTRA single instrumented run, so its stage times can
     // legitimately disagree with the official median (BENCH_r13's stages
-    // summed 15.4 s against a 9.39 s median — environment on that one run);
-    // the trailing "run_total" key stamps the block with ITS OWN run's
-    // wall-clock so it reads as the extra run it is, never as a breakdown
+    // summed 15.4 s against a 9.39 s median — environment on that one run).
+    // Each key is the wall time of one ProbeTiming tag: "build" is
+    // stageOutputs' eager plan construction (`x18_build`), each stage
+    // (`x18_<stage>`) includes its cacheQuery planning, and "run_total" is
+    // their sum, so it reads as the extra run it is, never as a breakdown
     // of the official number.
+    def wallSecs(moved: Map[String, Map[String, Long]], keys: Seq[String], prefix: String) = {
+      val secs = keys.map(k => k -> moved(prefix + k)("wall_ns") / 1e9)
+      secs :+ ("run_total" -> secs.map(_._2).sum)
+    }
     val x18Stages = extraRun("x18_stages") {
       val docs = graft.sources.Tables.load(spark, sfDir, "documents")
-      val tBlock = System.nanoTime()
-      // the block is FULLY self-attributing: "build" is stageOutputs'
-      // eager plan construction, each stage's window includes its
-      // cacheQuery planning (Caching.scoped — ~0.5-1.3 s on the deep
-      // late-stage trees, which previously leaked into run_total but no
-      // stage), so build + Σ stages ≈ run_total up to noise
-      val stages = graft.ext.CurationPipeline.stageOutputs(
-        docs.filter(col("doc_id") % 10 =!= 7), "doc_id", "text",
-        Some(docs.filter(col("doc_id") % 10 === 7)), Queries.X18Config)
-      val built = ("build" -> (System.nanoTime() - tBlock) / 1e9)
-      val timed = stages.map { case (stage, df) =>
-        val t0 = System.nanoTime()
-        val cached = Caching.scoped(df)
-        cached.write.format("noop").mode("overwrite").save()
-        stage -> (System.nanoTime() - t0) / 1e9
+      val (names, moved) = ProbeTiming.measure(spark) {
+        val stages = ProbeTiming("x18_build")(graft.ext.CurationPipeline.stageOutputs(
+          docs.filter(col("doc_id") % 10 =!= 7), "doc_id", "text",
+          Some(docs.filter(col("doc_id") % 10 === 7)), Queries.X18Config))
+        stages.map { case (stage, df) =>
+          ProbeTiming(s"x18_$stage")(Caching.scoped(df).write.format("noop").mode("overwrite").save())
+          stage
+        }
       }
-      (built +: timed) :+ ("run_total" -> (System.nanoTime() - tBlock) / 1e9)
+      wallSecs(moved, "build" +: names, "x18_")
     }
     // x33 per-batch attribution: continuous curation is the bench's most
     // expensive line and is ~all fixed per-micro-batch overhead — split it
@@ -713,14 +712,8 @@ object Bench {
     // LSH index probe, offsets carry). One run of the x33 entry, read from
     // its `x33_batch<i>` ProbeTiming tags; "run_total" is the batches' sum.
     val x33Batches = extraRun("x33_batches") {
-      val before = ProbeTiming.costs(spark)
-      SparkEntry.queries("x33_curation_stream")(spark, sfDir)
-      val after = ProbeTiming.costs(spark)
-      val batches = Seq(0, 1).map { i =>
-        val tag = s"x33_batch$i"
-        s"batch$i" -> (after(tag)("wall_ns") - before.get(tag).fold(0L)(_("wall_ns"))) / 1e9
-      }
-      batches :+ ("run_total" -> batches.map(_._2).sum)
+      val (_, moved) = ProbeTiming.measure(spark)(SparkEntry.queries("x33_curation_stream")(spark, sfDir))
+      wallSecs(moved, Seq("batch0", "batch1"), "x33_")
     }
     val streaming =
       try streamingBench(spark)

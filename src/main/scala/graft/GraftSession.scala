@@ -71,6 +71,9 @@ object GraftSession {
     * a session built elsewhere keeps its own `file:` filesystem and those
     * forks. Every other scheme keeps Spark's default manager.
     * Both write a Hadoop `.crc` beside each file.
+    *
+    * Registers the [[ProbeTiming]] collector, so stage costs and every
+    * streaming query's progress are counted from the session's first job.
     */
   def tune(spark: SparkSession): SparkSession = {
     // The driver's `events` table carries parquet TIMESTAMP(NANOS), which
@@ -81,6 +84,7 @@ object GraftSession {
     spark.conf.set(graft.streaming.LocalCheckpointFileManager.ConfKey,
       classOf[graft.streaming.LocalCheckpointFileManager].getName)
     graft.functions.GraftFunctions.register(spark)
+    ProbeTiming.collector(spark.sparkContext)
     spark
   }
 }

@@ -108,11 +108,12 @@ object Queries {
 
   /** Run `body` with the named catalog tables' lifetime bound to it: the
     * drops run in a `finally`, so a mid-run failure (a crashed stream, a
-    * lost executor) cannot strand state tables in the shared warehouse and
-    * tax every later query's metastore. `DROP TABLE IF EXISTS` is
-    * idempotent — dropping tables the body never got around to creating is
-    * a no-op, and a failed drop of one table must not mask the body's own
-    * exception (or skip the remaining drops).
+    * lost executor, a compaction swap cut short) cannot strand state tables
+    * or their compaction siblings in the shared warehouse and tax every
+    * later query's metastore. [[Dedup.dropStateTables]] is idempotent —
+    * dropping tables the body never got around to creating is a no-op, and
+    * a failed drop of one table must not mask the body's own exception (or
+    * skip the remaining drops).
     */
   private[graft] def withStateCleanup[A](cleanup: => Unit)(body: => A): A =
     try body
@@ -122,10 +123,7 @@ object Queries {
     }
 
   private[graft] def withStateTables[A](s: SparkSession, tables: String*)(body: => A): A =
-    withStateCleanup(tables.foreach { tbl =>
-      try s.sql(s"DROP TABLE IF EXISTS $tbl")
-      catch { case _: Exception => () }
-    })(body)
+    withStateCleanup(tables.foreach(tbl => scala.util.Try(Dedup.dropStateTables(s, tbl))))(body)
 
   /** Per-run scratch directory, registered for recursive deletion at JVM
     * exit — the result DataFrames of the stateful queries lazily read from
@@ -244,59 +242,64 @@ object Queries {
       |FROM (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
       |      FROM events) WHERE rn = 1""".stripMargin
 
-  /** The x38/x67 streaming-ingest protocol, shared so the declared oracle
-    * shape and its production-shape bench rider cannot drift: build the IVF
-    * index on a 60% prefix, append + compact + append + at-least-once
-    * replayed append (one maintenance-check memo across the appends — the
-    * ivfStream wiring), then probe. `tag` prefixes the index tables and the
-    * [[graft.ProbeTiming]] stage tags; `queries` slices the probe batch
-    * (identity = the declared whole-corpus oracle shape, a bounded filter =
-    * the production shape).
+  /** One IVF-family index under [[ivfAppendProtocol]]: its catalog tables
+    * and the build, append, compaction and probe calls on them.
     */
-  private def ivfAppendProtocol(s: SparkSession, dir: String, tag: String,
-                                nProbe: Int,
-                                queries: DataFrame => DataFrame,
-                                frozenCents: Option[Array[Array[Double]]] = None)
-      : DataFrame = {
+  private final case class ProtocolIndex(tables: Seq[String], build: DataFrame => Unit,
+                                         append: (DataFrame, graft.ext.TableChecks) => Unit,
+                                         compact: () => Unit, probe: DataFrame => DataFrame)
+
+  /** The x38/x50/x67 streaming-ingest protocol, shared so the declared
+    * oracle shapes and the production-shape bench rider cannot drift: build
+    * the index on a 60% prefix, append + compact + append + at-least-once
+    * replayed append (one maintenance-check memo across the appends — the
+    * ivfStream wiring), then probe. `tag` prefixes the index tables (named
+    * by the function `index` gets) and the [[graft.ProbeTiming]] stage tags.
+    */
+  private def ivfAppendProtocol(s: SparkSession, dir: String, tag: String)(
+      index: (String => String) => ProtocolIndex): DataFrame = {
     val emb = t(s, dir, "embeddings")
     val suffix = java.lang.Long.toHexString(System.nanoTime())
-    // bucket count probed in r16: 32 buckets measured IDENTICAL to 8 on
-    // the full-probe query (3.19 vs 3.21 s warm) — the scoring stage is
-    // not bucket-parallelism-bound at this scale, so the smaller file
-    // count stays
-    val idx = Similarity.IvfIndex(s"${tag}_assign_$suffix", s"${tag}_codebook_$suffix", numBuckets = 8)
+    val idx = index(part => s"${tag}_${part}_$suffix")
     val tmp = scratchDir(s"graft_$tag")
     val mx = emb.agg(max("vec_id")).head().getLong(0)
     // index tables dropped in a finally — a compaction or append crash
-    // must not strand them (incl. a mid-swap __compact sibling)
-    withStateTables(s, idx.assignmentsTable, idx.codebookTable,
-        idx.assignmentsTable + "__compact") {
-      graft.ProbeTiming(s"${tag}_build")(frozenCents match {
-        case Some(cents) =>
-          Similarity.ivfBuildFrozen(emb.filter(col("vec_id") <= mx * 3 / 5),
-            "vec_id", "embedding", idx, cents)
-        case None =>
-          Similarity.ivfBuild(emb.filter(col("vec_id") <= mx * 3 / 5),
-            "vec_id", "embedding", idx, nClusters = 16, iters = 5)
-      })
+    // must not strand them (or a mid-swap compaction sibling)
+    withStateTables(s, idx.tables: _*) {
+      graft.ProbeTiming(s"${tag}_build")(idx.build(emb.filter(col("vec_id") <= mx * 3 / 5)))
       val b1 = emb.filter(col("vec_id") > mx * 3 / 5 && col("vec_id") <= mx * 4 / 5)
       val b2 = emb.filter(col("vec_id") > mx * 4 / 5)
-      // one maintenance-check memo across the appends, as the ivfStream
-      // wiring would hold (the x33 convention)
       val checks = new graft.ext.TableChecks
-      graft.ProbeTiming(s"${tag}_append_b1")(
-        Similarity.ivfAppend(b1, "vec_id", "embedding", idx, checks))
-      graft.ProbeTiming(s"${tag}_compact")(Similarity.ivfCompact(s, idx))
-      graft.ProbeTiming(s"${tag}_append_b2")(
-        Similarity.ivfAppend(b2, "vec_id", "embedding", idx, checks))
-      graft.ProbeTiming(s"${tag}_append_replay")(
-        Similarity.ivfAppend(b2, "vec_id", "embedding", idx, checks)) // at-least-once replay
-      graft.ProbeTiming(s"${tag}_query")(
-        Similarity.ivfQuery(queries(emb), "vec_id", "embedding", idx, k = 10, nProbe = nProbe)
-          .select("query_id", "rank", "nbr_id")
-          .write.parquet(tmp.resolve("out").toString))
+      graft.ProbeTiming(s"${tag}_append_b1")(idx.append(b1, checks))
+      graft.ProbeTiming(s"${tag}_compact")(idx.compact())
+      graft.ProbeTiming(s"${tag}_append_b2")(idx.append(b2, checks))
+      graft.ProbeTiming(s"${tag}_append_replay")(idx.append(b2, checks)) // at-least-once replay
+      graft.ProbeTiming(s"${tag}_query")(idx.probe(emb).select("query_id", "rank", "nbr_id")
+        .write.parquet(tmp.resolve("out").toString))
     }
     s.read.parquet(tmp.resolve("out").toString)
+  }
+
+  /** An IVF index for [[ivfAppendProtocol]]: trained by k-means, or routed
+    * by `frozenCents`; the probe batch is `queries(corpus)` (identity = the
+    * declared whole-corpus oracle shape, a bounded filter = the production
+    * shape). Bucket count probed in r16: 32 buckets measured IDENTICAL to 8
+    * on the full-probe query (3.19 vs 3.21 s warm) — the scoring stage is
+    * not bucket-parallelism-bound at this scale, so the smaller file count
+    * stays.
+    */
+  private def ivfProtocolIndex(s: SparkSession, nProbe: Int, queries: DataFrame => DataFrame,
+                               frozenCents: Option[Array[Array[Double]]] = None)(
+      name: String => String): ProtocolIndex = {
+    val idx = Similarity.IvfIndex(name("assign"), name("codebook"), numBuckets = 8)
+    ProtocolIndex(Seq(idx.assignmentsTable, idx.codebookTable),
+      prefix => frozenCents match {
+        case Some(cents) => Similarity.ivfBuildFrozen(prefix, "vec_id", "embedding", idx, cents)
+        case None => Similarity.ivfBuild(prefix, "vec_id", "embedding", idx, nClusters = 16, iters = 5)
+      },
+      Similarity.ivfAppend(_, "vec_id", "embedding", idx, _),
+      () => Similarity.ivfCompact(s, idx),
+      emb => Similarity.ivfQuery(queries(emb), "vec_id", "embedding", idx, k = 10, nProbe = nProbe))
   }
 
   /** The BPE pre-tokenizer's regex ([[graft.functions.Bpe]]), spelled once
@@ -760,7 +763,7 @@ object Queries {
     // result must equal brute force over the WHOLE corpus — one oracle
     // proves append routing, the compaction rewrite, and replay absorption
     "x38_ann_ivf_append" -> ((s, dir) =>
-      ivfAppendProtocol(s, dir, tag = "x38", nProbe = 16, identity)),
+      ivfAppendProtocol(s, dir, "x38")(ivfProtocolIndex(s, nProbe = 16, identity))),
 
     // PRODUCTION-SHAPE rider for x38 (round 15; oracle round 16): the
     // declared x38 keeps nProbe = nClusters AND queries with the whole
@@ -779,9 +782,9 @@ object Queries {
     // approximate path's probe routing is hash-matched, not just
     // recall-spec-covered.
     "x67_ann_ivf_probe" -> ((s, dir) =>
-      ivfAppendProtocol(s, dir, tag = "x67", nProbe = 2,
+      ivfAppendProtocol(s, dir, "x67")(ivfProtocolIndex(s, nProbe = 2,
         queries = _.filter(col("vec_id") < 200),
-        frozenCents = Some(Similarity.frozenCentroids(IvfCentroidsResource)))),
+        frozenCents = Some(Similarity.frozenCentroids(IvfCentroidsResource))))),
 
     // corpus-trained bigram conditional quality: mean -log2 p(w2|w1) per
     // doc, integer-quantized like x43 so the score hash-matches — ranks
@@ -1233,36 +1236,14 @@ object Queries {
     // encode the new vectors), then full probe + overfetch must STILL
     // equal brute force over the whole corpus — the x38 protocol on the
     // IVFADC tables
-    "x50_ivfpq_append" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val suffix = java.lang.Long.toHexString(System.nanoTime())
-      val idx = Similarity.IvfPqIndex(s"x50_assign_$suffix", s"x50_codebook_$suffix",
-        s"x50_pq_$suffix", numBuckets = 8)
-      val tmp = scratchDir("graft_x50")
-      val mx = emb.agg(max("vec_id")).head().getLong(0)
-      withStateTables(s, idx.assignmentsTable, idx.codebookTable, idx.pqTable,
-          idx.assignmentsTable + "__compact") {
-        graft.ProbeTiming("x50_build")(
-          Similarity.ivfPqBuild(emb.filter(col("vec_id") <= mx * 3 / 5),
-            "vec_id", "embedding", idx, nClusters = 16, m = 8, ksub = 16, iters = 5))
-        val b1 = emb.filter(col("vec_id") > mx * 3 / 5 && col("vec_id") <= mx * 4 / 5)
-        val b2 = emb.filter(col("vec_id") > mx * 4 / 5)
-        // one maintenance-check memo across the appends (the x38 stance)
-        val checks = new graft.ext.TableChecks
-        graft.ProbeTiming("x50_append_b1")(
-          Similarity.ivfPqAppend(b1, "vec_id", "embedding", idx, checks))
-        graft.ProbeTiming("x50_compact")(Similarity.ivfPqCompact(s, idx))
-        graft.ProbeTiming("x50_append_b2")(
-          Similarity.ivfPqAppend(b2, "vec_id", "embedding", idx, checks))
-        graft.ProbeTiming("x50_append_replay")(
-          Similarity.ivfPqAppend(b2, "vec_id", "embedding", idx, checks)) // at-least-once replay
-        graft.ProbeTiming("x50_query")(
-          Similarity.ivfPqQuery(emb.filter(col("vec_id") >= 40 && col("vec_id") < 60),
-              "vec_id", "embedding", idx, k = 10, nProbe = 16, overfetch = 4096)
-            .select("query_id", "rank", "nbr_id")
-            .write.parquet(tmp.resolve("out").toString))
-      }
-      s.read.parquet(tmp.resolve("out").toString)
+    "x50_ivfpq_append" -> ((s, dir) => ivfAppendProtocol(s, dir, "x50") { name =>
+      val idx = Similarity.IvfPqIndex(name("assign"), name("codebook"), name("pq"), numBuckets = 8)
+      ProtocolIndex(Seq(idx.assignmentsTable, idx.codebookTable, idx.pqTable),
+        Similarity.ivfPqBuild(_, "vec_id", "embedding", idx, nClusters = 16, m = 8, ksub = 16, iters = 5),
+        Similarity.ivfPqAppend(_, "vec_id", "embedding", idx, _),
+        () => Similarity.ivfPqCompact(s, idx),
+        emb => Similarity.ivfPqQuery(emb.filter(col("vec_id") >= 40 && col("vec_id") < 60),
+          "vec_id", "embedding", idx, k = 10, nProbe = 16, overfetch = 4096))
     }),
 
     // product-quantization ANN: corpus compressed to 8 one-byte codes +

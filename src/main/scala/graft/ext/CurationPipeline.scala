@@ -334,15 +334,12 @@ object CurationPipeline {
     def pairsDir: String = s"$stateDir/pairs"
     def offsetsDir: String = s"$stateDir/offsets"
     def outDir: String = s"$stateDir/curated"
-    /** Drops the catalog tables AND their warehouse locations (including
-      * `__compact` siblings a crashed compaction may have left) via
-      * [[graft.sinks.Sinks.dropTableAndLocation]].
+    /** Drops the catalog tables AND their warehouse locations, compaction
+      * siblings included ([[Dedup.dropStateTables]]).
       */
     def dropTables(spark: org.apache.spark.sql.SparkSession): Unit = {
-      Seq(hashTable, lshIndex.bandsTable, lshIndex.shinglesTable,
-          embedIndex.bandsTable, embedIndex.vecsTable)
-        .flatMap(t => Seq(t, t + "__compact"))
-        .foreach(graft.sinks.Sinks.dropTableAndLocation(spark, _))
+      Dedup.dropStateTables(spark, hashTable, lshIndex.bandsTable, lshIndex.shinglesTable,
+        embedIndex.bandsTable, embedIndex.vecsTable)
       clusterState.dropTables(spark)
     }
   }
@@ -367,7 +364,7 @@ object CurationPipeline {
     // present only when the pipeline runs with an embedding column — its
     // absence is a no-semantic-stage run, not a misconfiguration
     if (spark.catalog.tableExists(state.embedIndex.bandsTable) ||
-        spark.catalog.tableExists(state.embedIndex.bandsTable + "__compact"))
+        spark.catalog.tableExists(Dedup.compactSibling(state.embedIndex.bandsTable)))
       Similarity.cosineLshCompact(spark, state.embedIndex)
   }
 

@@ -786,8 +786,18 @@ object Dedup {
     */
   private[graft] def finishCrashedSwap(spark: org.apache.spark.sql.SparkSession,
                                        table: String): Unit =
-    if (!spark.catalog.tableExists(table) && spark.catalog.tableExists(table + "__compact"))
-      spark.sql(s"ALTER TABLE ${table}__compact RENAME TO $table")
+    if (!spark.catalog.tableExists(table) && spark.catalog.tableExists(compactSibling(table)))
+      spark.sql(s"ALTER TABLE ${compactSibling(table)} RENAME TO $table")
+
+  /** The sibling a [[compactBucketedTable]] rewrite of `table` writes to. */
+  private[graft] def compactSibling(table: String): String = table + "__compact"
+
+  /** Drops each state table and its [[compactSibling]], data directories
+    * included ([[graft.sinks.Sinks.dropTableAndLocation]]): a crashed
+    * compaction may have left the sibling, or only the sibling.
+    */
+  private[graft] def dropStateTables(spark: org.apache.spark.sql.SparkSession, tables: String*): Unit =
+    tables.flatMap(t => Seq(t, compactSibling(t))).foreach(graft.sinks.Sinks.dropTableAndLocation(spark, _))
 
   /** Compacts one bucketed index table back to `numBuckets` files: the
     * append-per-micro-batch growth pattern ([[minHashLshIncrement]] adds
@@ -819,7 +829,7 @@ object Dedup {
     // point asserts it free ([[StateLease]]) — a racing writer fails
     // loudly instead of appending to a table the swap is about to drop
     StateLease.withLease(spark, table, s"compact $table") {
-      val tmp = table + "__compact"
+      val tmp = compactSibling(table)
       finishCrashedSwap(spark, table)
       require(spark.catalog.tableExists(table), s"compact: no such table $table")
       // a crash mid-write can leave tmp's DATA DIR with no catalog entry
@@ -1194,8 +1204,7 @@ object Dedup {
     def byDocTable: String = s"${tablePrefix}_by_doc"
     def byClusterTable: String = s"${tablePrefix}_by_cluster"
     def dropTables(spark: org.apache.spark.sql.SparkSession): Unit =
-      Seq(byDocTable, byClusterTable).flatMap(t => Seq(t, t + "__compact"))
-        .foreach(graft.sinks.Sinks.dropTableAndLocation(spark, _))
+      dropStateTables(spark, byDocTable, byClusterTable)
   }
 
   /** The latest mapping: (doc_id, cluster_id), one row per doc that has

@@ -509,7 +509,8 @@ object Similarity {
                                     index: IvfIndex, nProbe: Int): DataFrame = {
     val spark = queries.sparkSession
     // an ivfCompact swap that crashed between DROP and RENAME leaves the
-    // corpus only under __compact — finish it rather than failing the read
+    // corpus only under its compaction sibling — finish it rather than
+    // failing the read
     Dedup.finishCrashedSwap(spark, index.assignmentsTable)
     val bc = codebookModel(spark, index.codebookTable, ivfMissing("ivfQuery", index))
     probeScores(vectors(queries, idCol, vecCol, "ivfProbeScores"),

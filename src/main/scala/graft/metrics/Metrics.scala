@@ -1,10 +1,7 @@
 package graft.metrics
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Runtime observability, parity-in-kind with the reference's per-processor
   * Prometheus metrics (reference: include/kspp/metrics/metrics.h:71-147,
@@ -12,14 +9,15 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *
   *  - [[observe]] attaches a named `processed_count` / event-time lag
   *    observation to any DataFrame stage (batch or streaming);
-  *  - [[GraftQueryListener]] collects those observations plus the engine's
-  *    own progress (rows/sec, batch duration, state rows) per query.
+  *  - the [[graft.ProbeTiming]] collector folds those observations, each
+  *    streaming query's rows and batches, and the per-stage job costs;
+  *  - [[Pushgateway.push]] exports all of them.
   */
 object Metrics {
 
-  /** Tag a stage with processed-count and lag observations. Read them from
-    * `QueryProgressEvent.progress.observedMetrics(name)` in streaming, or
-    * `df.collectResult` observed metrics in batch.
+  /** Tag a stage with processed-count and lag observations. In streaming
+    * [[graft.ProbeTiming.observations]] folds them across batches; in
+    * batch, read `df.collectResult` observed metrics.
     */
   def observe(df: DataFrame, name: String, eventTimeCol: Option[String] = None): DataFrame =
     eventTimeCol match {
@@ -50,26 +48,6 @@ object Metrics {
       case None =>
         df.observe(name, count(lit(1)).as("processed_count"))
     }
-
-  final case class QueryStats(rows: Long, batches: Long)
-
-  /** Collects per-query totals; register once per session. */
-  final class GraftQueryListener extends StreamingQueryListener {
-    val stats = new ConcurrentHashMap[String, QueryStats]()
-    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-    override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
-      val name = Option(e.progress.name).getOrElse(e.progress.id.toString)
-      stats.merge(name, QueryStats(e.progress.numInputRows, 1L),
-        (a, b) => QueryStats(a.rows + b.rows, a.batches + b.batches))
-    }
-    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-  }
-
-  def install(spark: SparkSession): GraftQueryListener = {
-    val l = new GraftQueryListener
-    spark.streams.addListener(l)
-    l
-  }
 
   /** Prometheus pushgateway reporter (reference:
     * metrics/prometheus_pushgateway_reporter.h:11-30 + metrics.h:20-52
@@ -152,16 +130,30 @@ object Metrics {
       }
     }
 
-    /** Push a listener's per-query totals as the reference's `processed`
-      * counters (kspp.h:32-38) tagged by query name.
+    /** Push everything the [[graft.ProbeTiming]] collector holds for
+      * `spark`'s context: per streaming query the reference's `processed`
+      * counter (kspp.h:32-38) and `batches`, labelled `query`; per
+      * [[observe]] name `processed` and `lag`, labelled `observation`; and
+      * per stage tag one `stage_<field>` counter per
+      * [[graft.ProbeTiming.Fields]] name, labelled `stage`. Returns the
+      * transport's status.
       */
-    def push(listener: GraftQueryListener, transport: String => Int): Int = {
-      import scala.jdk.CollectionConverters._
-      val metrics = listener.stats.asScala.toSeq.sortBy(_._1).flatMap { case (q, s) =>
-        Seq(Metric("processed", "counter", "msg", Map("query" -> q), s.rows.toDouble),
-          Metric("batches", "counter", "msg", Map("query" -> q), s.batches.toDouble))
+    def push(spark: SparkSession, transport: String => Int): Int = {
+      import graft.ProbeTiming
+      val queries = ProbeTiming.queries(spark).toSeq.sortBy(_._1).flatMap { case (q, s) =>
+        Seq(Metric("processed", "counter", "msg", Map("query" -> q), s("rows").toDouble),
+          Metric("batches", "counter", "msg", Map("query" -> q), s("batches").toDouble))
       }
-      transport(render(metrics))
+      val observed = ProbeTiming.observations(spark).toSeq.sortBy(_._1).flatMap { case (o, s) =>
+        Metric("processed", "counter", "msg", Map("observation" -> o), s("processed_count").toDouble) +:
+          s.get("max_lag_ms").toSeq.map(l => Metric("lag", "gauge", "ms", Map("observation" -> o), l.toDouble))
+      }
+      val stages = ProbeTiming.costs(spark).toSeq.sortBy(_._1).flatMap { case (tag, c) =>
+        c.map { case (f, v) =>
+          Metric(s"stage_$f", "counter", ProbeTiming.Fields(f), Map("stage" -> tag), v.toDouble)
+        }
+      }
+      transport(render(queries ++ observed ++ stages))
     }
   }
 }

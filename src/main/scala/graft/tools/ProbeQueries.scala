@@ -5,9 +5,9 @@ package graft.tools
   * fresh JVM, isolated from the bench harness's ordering and cache effects.
   * Each query runs `runs` times (default 3), with the bench's per-run
   * isolation (scoped-cache release + SQL cache clear) between runs.
-  * After each run it waits for the listener bus to go quiet and prints one
-  * `STAGE` line per [[graft.ProbeTiming]] tag the run touched, with the
-  * run's share of each [[graft.ProbeTiming.Fields]] counter.
+  * Each run is wrapped in [[graft.ProbeTiming.measure]], and one `STAGE`
+  * line is printed per tag the run touched, with the run's share of each
+  * [[graft.ProbeTiming.Fields]] counter.
   *
   * The session is [[graft.Bench.session]], so probe floors are admissible
   * §8.4 evidence against bench medians. One difference remains, and it
@@ -45,16 +45,14 @@ object ProbeQueries {
           // probe relative to the bench's fully isolated runs)
           graft.Caching.release(spark)
           spark.catalog.clearCache()
-          val before = graft.ProbeTiming.costs(spark)
-          val t0 = System.nanoTime()
-          graft.SparkEntry.queries(n)(spark, sfDir)
-            .write.mode("overwrite").parquet(s"$outDir/$n")
-          println(f"PROBE $n run$run ${(System.nanoTime() - t0) / 1e9}%.2f s")
-          graft.ProbeTiming.awaitQuiet(spark)
-          graft.ProbeTiming.costs(spark).toSeq.sortBy(_._1).foreach { case (tag, c) =>
-            val d = c.map { case (k, v) => k -> (v - before.get(tag).fold(0L)(_(k))) }
-            if (d.values.exists(_ != 0))
-              println(f"STAGE $n run$run $tag%-22s " + d.map { case (k, v) => s"$k=$v" }.mkString(" "))
+          val (_, moved) = graft.ProbeTiming.measure(spark) {
+            val t0 = System.nanoTime()
+            graft.SparkEntry.queries(n)(spark, sfDir)
+              .write.mode("overwrite").parquet(s"$outDir/$n")
+            println(f"PROBE $n run$run ${(System.nanoTime() - t0) / 1e9}%.2f s")
+          }
+          moved.toSeq.sortBy(_._1).foreach { case (tag, d) =>
+            println(f"STAGE $n run$run $tag%-22s " + d.map { case (k, v) => s"$k=$v" }.mkString(" "))
           }
         }
         graft.Caching.release(spark)

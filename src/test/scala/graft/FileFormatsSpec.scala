@@ -258,32 +258,30 @@ class FileFormatsSpec extends SparkSpec {
 
   test("observe metrics report processed counts (metrics.h:71-147 parity)") {
     import graft.metrics.Metrics
-    val listener = Metrics.install(spark)
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Int]
+    val q = Metrics.observe(input.toDS().toDF("n"), "stage1")
+      .writeStream.format("memory").queryName("obs_out").outputMode("append").start()
     try {
-      import spark.implicits._
-      implicit val sqlCtx = spark.sqlContext
-      val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Int]
-      val q = Metrics.observe(input.toDS().toDF("n"), "stage1")
-        .writeStream.format("memory").queryName("obs_out").outputMode("append").start()
-      try {
-        input.addData(1, 2, 3)
-        q.processAllAvailable()
-        input.addData(4, 5)
-        q.processAllAvailable()
-        val progress = q.recentProgress
-        val observed = progress.flatMap(p => Option(p.observedMetrics.get("stage1")))
-          .map(_.getLong(0)).sum
-        assert(observed == 5, s"observed=$observed")
-        // the listener bus delivers progress events asynchronously, after
-        // processAllAvailable returns: wait for the second batch's event
-        import org.scalatest.concurrent.Eventually._
-        import org.scalatest.time.{Seconds, Span}
-        eventually(timeout(Span(10, Seconds))) {
-          assert(listener.stats.containsKey("obs_out"))
-          assert(listener.stats.get("obs_out").rows == 5)
-        }
-      } finally q.stop()
-    } finally spark.streams.removeListener(listener)
+      input.addData(1, 2, 3)
+      q.processAllAvailable()
+      input.addData(4, 5)
+      q.processAllAvailable()
+      val progress = q.recentProgress
+      val observed = progress.flatMap(p => Option(p.observedMetrics.get("stage1")))
+        .map(_.getLong(0)).sum
+      assert(observed == 5, s"observed=$observed")
+      // the session's collector folds progress events, which the listener
+      // bus delivers asynchronously after processAllAvailable returns:
+      // wait for the second batch's event
+      import org.scalatest.concurrent.Eventually._
+      import org.scalatest.time.{Seconds, Span}
+      eventually(timeout(Span(10, Seconds))) {
+        assert(ProbeTiming.queries(spark).get("obs_out").map(_("rows")).contains(5L))
+        assert(ProbeTiming.observations(spark).get("stage1").map(_("processed_count")).contains(5L))
+      }
+    } finally q.stop()
   }
 
   test("observe lag accepts both event-time conventions; pushgateway encodes the job path") {
@@ -556,10 +554,40 @@ class PipelinesSpec extends SparkSpec {
 }
 
 /** Pushgateway reporter: reference metric naming in the text exposition
-  * format, POSTed to the job path — checked against a loopback gateway.
+  * format, POSTed to the job path — checked against a loopback gateway —
+  * and the push of everything the session's collector holds.
   */
-class PushgatewaySpec extends org.scalatest.funsuite.AnyFunSuite {
+class PushgatewaySpec extends SparkSpec {
   import graft.metrics.Metrics.Pushgateway
+
+  test("push renders query, observation and stage series from the collector") {
+    import spark.implicits._
+    val id = System.nanoTime()
+    val (tag, query, obs) = (s"push_stage_$id", s"push_query_$id", s"push_obs_$id")
+    spark // the session must be active before the tagged call
+    ProbeTiming(tag)(spark.range(0, 1000, 1, 4).groupBy(col("id") % 7).count().collect())
+    val dir = Queries.scratchDir("graft_push").toString
+    val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+    Seq((1L, ts), (2L, ts), (3L, ts)).toDF("n", "ts").write.parquet(s"$dir/in")
+    val stream = spark.readStream.schema("n LONG, ts TIMESTAMP").parquet(s"$dir/in")
+    val q = graft.metrics.Metrics.observe(stream, obs, Some("ts")).writeStream
+      .format("noop").queryName(query).trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .option("checkpointLocation", s"$dir/ckpt").start()
+    q.awaitTermination()
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.{Seconds, Span}
+    eventually(timeout(Span(10, Seconds)))(assert(ProbeTiming.queries(spark).contains(query)))
+    ProbeTiming.awaitQuiet(spark)
+    var payload = ""
+    assert(Pushgateway.push(spark, p => { payload = p; 202 }) == 202)
+    val lines = payload.linesIterator.toSeq
+    assert(lines.contains(s"""kspp_processed{mtype="counter",unit="msg",query="$query"} 3"""), payload)
+    assert(lines.contains(s"""kspp_processed{mtype="counter",unit="msg",observation="$obs"} 3"""), payload)
+    assert(lines.exists(_.startsWith(s"""kspp_lag{mtype="gauge",unit="ms",observation="$obs"} """)), payload)
+    val shuffle = lines.find(_.startsWith(
+      s"""kspp_stage_shuffle_write{mtype="counter",unit="bytes",stage="$tag"} """))
+    assert(shuffle.exists(_.split(' ').last.toLong > 0), payload)
+  }
 
   test("render uses the reference naming: kspp_ prefix, mtype/unit labels") {
     val text = Pushgateway.render(Seq(

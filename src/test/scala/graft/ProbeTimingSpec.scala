@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** The always-on [[ProbeTiming]] collector: jobs, tasks and shuffle bytes
-  * land on the tag that was set when the job was submitted.
+  * land on the tag that was set when the job was submitted, and every
+  * streaming query's progress lands on its name.
   */
 class ProbeTimingSpec extends SparkSpec {
 
@@ -63,5 +64,57 @@ class ProbeTimingSpec extends SparkSpec {
     val c = cost(tag)
     assert(c("jobs") >= 3 && c("tasks") >= 3, c)
     assert(ProbeTiming.openStages(spark) == 0)
+  }
+
+  test("a stream's rows and batches reach the collector with no install step") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val name = fresh("stream")
+    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Int]
+    val q = input.toDS().writeStream.format("noop").queryName(name).start()
+    try {
+      input.addData(1, 2, 3)
+      q.processAllAvailable()
+      input.addData(4, 5)
+      q.processAllAvailable()
+      import org.scalatest.concurrent.Eventually._
+      import org.scalatest.time.{Seconds, Span}
+      eventually(timeout(Span(10, Seconds))) {
+        assert(ProbeTiming.queries(spark).get(name).contains(Map("rows" -> 5L, "batches" -> 2L)))
+      }
+    } finally q.stop()
+  }
+
+  test("measure returns within 2 s while a running stream keeps posting events") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val posted = new java.util.concurrent.atomic.AtomicInteger()
+    val counter = new org.apache.spark.sql.streaming.StreamingQueryListener {
+      import org.apache.spark.sql.streaming.StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = { posted.incrementAndGet(); () }
+      override def onQueryIdle(e: QueryIdleEvent): Unit = { posted.incrementAndGet(); () }
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    // an idle stream reports every 50 ms instead of every 10 s
+    val intervalKey = "spark.sql.streaming.noDataProgressEventInterval"
+    spark.conf.set(intervalKey, "50ms")
+    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Int]
+    val q = try input.toDS().writeStream.format("noop").queryName(fresh("idle")).start()
+      finally spark.conf.unset(intervalKey)
+    spark.streams.addListener(counter)
+    try {
+      input.addData(1)
+      q.processAllAvailable()
+      val tag = fresh("measure")
+      val posted0 = posted.get
+      val t0 = System.nanoTime()
+      val (n, moved) = ProbeTiming.measure(spark)(
+        ProbeTiming(tag)(spark.sparkContext.parallelize(1 to 10, 2).count()))
+      val secs = (System.nanoTime() - t0) / 1e9
+      assert(q.isActive && posted.get > posted0, s"the stream posted ${posted.get - posted0} events")
+      assert(secs < 2.0, s"measure took $secs s")
+      assert(n == 10 && moved(tag)("jobs") == 1 && moved(tag)("tasks") == 2, moved)
+    } finally { spark.streams.removeListener(counter); q.stop() }
   }
 }
